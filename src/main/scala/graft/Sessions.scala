@@ -36,8 +36,8 @@ object Sessions {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     // Size post-shuffle partitions by DATA, not by core count: with the
-    // default parallelismFirst=true AQE refuses to coalesce below
-    // defaultParallelism, so every kilobyte-scale shuffle in an
+    // default parallelismFirst=true AQE refuses to coalesce below the
+    // default parallelism, so every kilobyte-scale shuffle in an
     // iterative loop still ran `cpus` tasks — per-task fixed cost
     // (scheduling, shuffle-file create+merge, block registration)
     // dominated the r18 driver bench's iterative/streaming rows and made
@@ -48,16 +48,14 @@ object Sessions {
     // 100 TB the same setting yields thousands of right-sized tasks.
     // Scale-adaptive by construction, not a local[32] constant.
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    // 8m, not the 64m cluster default: post-shuffle partitions here are
-    // in-memory loop/join state processed at ~1-2 µs/row (~25 B/row), so
-    // a 64 MB partition is ~3-4 s of SERIAL work — measured turning n6's
+    // 4m, not the 64m cluster default: post-shuffle partitions here are
+    // in-memory loop/join state processed at ~1-2 µs/row, so a 64 MB
+    // partition is ~3-4 s of SERIAL work — measured turning n6's
     // per-round vote count and n2's closure semi-join into single-task
-    // stages. 8 MB keeps kilobyte shuffles at 1 task while giving real
-    // stages data-proportional width. Env-overridable for cluster runs
-    // (SPARK_GRAFT_ADVISORY_PARTITION), where disk/network-bound stages
-    // want the larger default back.
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "4m"))
+    // stages. 4 MB keeps kilobyte shuffles at 1 task while giving real
+    // stages data-proportional width. A cluster with network shuffle and
+    // disk-bound stages wants a larger value (a session conf).
+    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
@@ -67,6 +65,32 @@ object Sessions {
     .config("spark.sql.parquet.compression.codec", "snappy")
     .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
   }
+
+  /** The one conf scope: set each `kv` on the session for the duration of
+    * `body`, then restore each key's previous value, or unset it if it had
+    * none. Session conf is global to every thread planning on the
+    * session, so the whole save/set/run/restore runs under one JVM-wide
+    * reentrant lock: two scopes never interleave (a second scope would
+    * otherwise save the first one's value and restore it after the first
+    * had exited), and nested scopes on one thread restore in order.
+    * Queries planned on other threads outside any scope still see the
+    * scoped values while it runs; every scope in this engine changes
+    * plan shape (AQE, widths, state provider), never results.
+    * Keep `body` short of anything that waits on another thread that may
+    * enter a scope — a streaming query's foreachBatch, for one.
+    */
+  def withConf[T](spark: SparkSession, kv: (String, String)*)(body: => T): T =
+    ConfLock.synchronized {
+      val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+
+  private object ConfLock
 
   def local(appName: String = "graft",
             cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {

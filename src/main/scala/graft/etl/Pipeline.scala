@@ -31,7 +31,17 @@ object Pipeline {
   /** Run with telemetry (counts). For fire-and-forget loads where the
     * counts don't matter, use [[runNoCount]] — single job, single pass. */
   def run(spark: SparkSession, config: PipelineConfig): PipelineResult = {
-    spark.sparkContext.setJobGroup("graft-pipeline", s"ingest ${config.csvPath}")
+    // the job group is a thread-local property: label this run's jobs,
+    // then hand the caller's thread back with its own group
+    val sc = spark.sparkContext
+    val groupProps = Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    val callerGroup = groupProps.map(k => k -> sc.getLocalProperty(k))
+    sc.setJobGroup("graft-pipeline", s"ingest ${config.csvPath}")
+    try runLabelled(spark, config)
+    finally callerGroup.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
+  private def runLabelled(spark: SparkSession, config: PipelineConfig): PipelineResult = {
     val raw = Ingest.ingest(spark, config.csvPath, config.strict)
     val cleaned = Clean.dropAnyNull(raw, config.dropNullSubset)
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -82,9 +82,8 @@ object Dedup {
     // passes' per-occurrence shingle hashing is the query's CPU (pass 2
     // measured as a single 5.9 s serial stage); widen the text stream to
     // the session's cores before the explode (guide: repartition after
-    // an unsplittable read). At scale the corpus scans wide already.
-    val wide = docs.select(col(textCol))
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    // an unsplittable read). A corpus that scans wider keeps its width.
+    val wide = graft.Sizing.widen(docs.select(col(textCol)), graft.Sizing.cores(docs.sparkSession))
     // pass 1: df per hashed shingle — 8-byte shuffle keys, map-side partials
     val dfs = wide.select(explode(shingleHashes(col(textCol), w)).as("h"))
       .groupBy("h").agg(count(lit(1)).as("df"))
@@ -891,9 +890,7 @@ object Dedup {
     // round (at fixture scale, 32-partition shuffles over a few hundred
     // edges made the loop ~5× slower than the data justifies). The
     // checkpoint above already ran, so the count is free metadata.
-    val parts = math.max(1, math.min(
-      edgesAll.sparkSession.sparkContext.defaultParallelism,
-      (edgeCountRow.getLong(0) / 100000L).toInt))
+    val parts = graft.Sizing.width(edgesAll.sparkSession, edgeCountRow.getLong(0), graft.Sizing.LoopEdges)
     // Tiny-graph fast path (Iterate.withTinyLoopConf): under AQE each
     // round's query became several stage-jobs — at fixture scale the
     // whole loop was driver job-submission latency (m7: 148 jobs of
@@ -1003,9 +1000,7 @@ object Dedup {
     // graph-sized shuffles, the connectedComponents discipline; the
     // count for sizing rides the entry checkpoint's own job
     val (canonCp, canonCount) = Iterate.materializeObserved(canon, count(lit(1)).as("n"))
-    val parts = math.max(1, math.min(
-      canonCp.sparkSession.sparkContext.defaultParallelism,
-      (canonCount.getLong(0) / 100000L).toInt))
+    val parts = graft.Sizing.width(canonCp.sparkSession, canonCount.getLong(0), graft.Sizing.LoopEdges)
     // the (count, hash-sum) fixpoint signature rides each round's own
     // checkpoint job (Iterate.materializeObserved); tiny graphs run the
     // whole loop single-job-per-round (Iterate.withTinyLoopConf)

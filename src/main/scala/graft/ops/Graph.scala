@@ -25,11 +25,8 @@ object Graph {
     * setup stage and per loop round at fixture scale. Clamps to full
     * parallelism as the data grows (sf1 already saturates it).
     */
-  private def graphWidth(spark: SparkSession, dir: String): Int = {
-    val rows = Tables.rowsOf(spark, dir, "lineitem")
-    math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, rows / 50000L)).toInt
-  }
+  private def graphWidth(spark: SparkSession, dir: String): Int =
+    graft.Sizing.width(spark, Tables.rowsOf(spark, dir, "lineitem"), graft.Sizing.GraphRows)
 
   /** Rank scale: ranks are integers in units of 10^-12 of one node's
     * initial mass. All arithmetic below is overflow-safe by
@@ -694,9 +691,7 @@ object Graph {
       und.select(col("a").as("v"), col("b").as("w"))
         .unionAll(und.select(col("b").as("v"), col("a").as("w"))),
       count(lit(1)).as("n"))
-    val parts = math.max(1, math.min(
-      edgesAll.sparkSession.sparkContext.defaultParallelism,
-      (edgeCountRow.getLong(0) / 100000L).toInt))
+    val parts = graft.Sizing.width(edgesAll.sparkSession, edgeCountRow.getLong(0), graft.Sizing.LoopEdges)
     // tiny graphs run the whole loop single-job-per-round
     // (Iterate.withTinyLoopConf); big graphs run unchanged under AQE
     val labels = Iterate.withTinyLoopConf(edgesAll.sparkSession, parts) {

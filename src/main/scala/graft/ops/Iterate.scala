@@ -67,28 +67,17 @@ object Iterate {
     * cost is pure driver job-submission latency — m7's resolve measured
     * 148 jobs of < 0.3 s stages. With AQE off and the width pinned to
     * the graph, each round is ONE job over `parts`-wide exchanges.
-    * GATED BY SCALE: when `parts` reaches defaultParallelism (graph ≥
+    * GATED BY SCALE: when `parts` reaches the session's cores (graph ≥
     * ~100k rows × cores), the body runs UNCHANGED under AQE — big-graph
     * loops keep coalescing and skew-join handling; this fast path exists
     * only where the data is too small for those to matter.
-    * Conf toggles are session-global for the duration (the documented
-    * single-threaded-driver assumption of materializePartitioned).
+    * The toggles are session-global, scoped by [[graft.Sessions.withConf]].
     */
   def withTinyLoopConf[T](spark: org.apache.spark.sql.SparkSession, parts: Int)
-                         (body: => T): T = {
-    if (parts >= spark.sparkContext.defaultParallelism) body
-    else {
-      val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-      val prev = keys.map(k => k -> spark.conf.getOption(k))
-      spark.conf.set(keys(0), "false")
-      spark.conf.set(keys(1), parts.toString)
-      try body
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-  }
+                         (body: => T): T =
+    if (parts >= graft.Sizing.cores(spark)) body
+    else graft.Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> parts.toString)(body)
 
   private def wrapCheckpoint(cp: DataFrame): DataFrame = {
     val spark = cp.sparkSession
@@ -102,9 +91,9 @@ object Iterate {
     // instead of inheriting the session's core-count width — the
     // iterative families' per-round stages stop paying 32-64 tiny-task
     // convoys at fixture scale (AQE's coalescing cannot fix these: a
-    // cached RDD scan or a union has no Exchange to coalesce), while a
-    // 100 TB loop table keeps (bytes / 8 MB) ≫ parallelism partitions.
-    // Never widens; clamped down only.
+    // cached RDD scan or a union has no Exchange to coalesce). Never
+    // widens, and a table that fills the cores keeps its own partitions,
+    // so a 100 TB loop table is never narrowed to the core count.
     // cp.rdd is a row-conversion WRAPPER over the cached internal RDD —
     // walk the (narrow) dependency chain to the ancestor that actually
     // holds the blocks, then read its exact byte size off the block
@@ -120,35 +109,12 @@ object Iterate {
     val bytes = cachedAncestor(rdd).flatMap(c =>
       spark.sparkContext.getRDDStorageInfo.find(_.id == c.id)
         .map(i => i.memSize + i.diskSize)).getOrElse(Long.MaxValue)
-    val target = math.max(1L, math.min(rdd.getNumPartitions.toLong,
-      bytes / (8L * 1024 * 1024) + 1L)).toInt
-    val narrowed = if (target < rdd.getNumPartitions) rdd.coalesce(target) else rdd
+    val target = graft.Sizing.width(spark, bytes, graft.Sizing.CheckpointBytes)
+    val narrowed =
+      if (target < rdd.getNumPartitions && target < graft.Sizing.cores(spark)) rdd.coalesce(target)
+      else rdd
     spark.createDataFrame(narrowed, cp.schema)
   }
-
-  /** Partition width for a checkpointed table of `bytes` estimated bytes:
-    * one partition per `targetBytes` (64 MB — the session's AQE advisory
-    * size), clamped to [1, defaultParallelism]. The iterative families
-    * pin their checkpoint partitioning explicitly (AQE is off around the
-    * checkpoint plan, see [[materializePartitioned]]), so without this
-    * the pinned width was ALWAYS spark.sql.shuffle.partitions — a
-    * core-count constant that forced every downstream loop stage to run
-    * that many tasks over kilobyte-scale data. Deriving the width from
-    * data size keeps fixture-scale loops at 1-2 tasks while a 100 TB
-    * edge table still fans out to the cluster (clamped at parallelism —
-    * at that scale AQE's own coalescing governs the non-pinned stages).
-    */
-  def widthForBytes(spark: org.apache.spark.sql.SparkSession, bytes: BigInt,
-                    targetBytes: Long = 64L * 1024 * 1024): Int = {
-    val cap = spark.sparkContext.defaultParallelism
-    val w = (bytes / targetBytes).min(BigInt(cap)).toInt
-    math.max(1, math.min(cap, math.max(w, 1)))
-  }
-
-  /** [[widthForBytes]] from a row count and estimated row width. */
-  def widthForRows(spark: org.apache.spark.sql.SparkSession, rows: Long,
-                   rowBytes: Int = 24): Int =
-    widthForBytes(spark, BigInt(rows) * rowBytes)
 
   /** [[materialize]] that PRESERVES the physical partitioning (and pays
     * the stats caveat above by NOT re-wrapping — use only OUTSIDE
@@ -160,16 +126,12 @@ object Iterate {
     * then only the O(nodes) rank side moves per round. The createDataFrame
     * re-wrap in [[materialize]] would erase exactly that property.
     *
-    * SINGLE-THREADED DRIVER ASSUMPTION: the AQE toggle below is a
-    * session-global conf flipped around the checkpoint plan — a query
-    * planned concurrently on the same session during that window would
-    * silently lose AQE, and two concurrent callers could race the
-    * restore. Every entry point in this engine (Bench, Verify, the
-    * HTTP runs registry) builds queries from one driver thread; a
-    * future concurrent planner must isolate the toggle (plan on
-    * spark.newSession() sharing state, or serialize callers).
-    * [[withTinyLoopConf]] and the streaming width scope share the same
-    * assumption.
+    * The AQE toggle below is session-global conf, scoped by
+    * [[graft.Sessions.withConf]]: its JVM-wide lock keeps a concurrent
+    * scope (another loop's [[withTinyLoopConf]], a stream's width) from
+    * racing the restore. A query planned concurrently on another thread
+    * may still plan without AQE during the checkpoint; that changes its
+    * plan shape, not its rows.
     *
     * AQE must be OFF while the checkpoint plans: under an
     * AdaptiveSparkPlan the LogicalRDD records UnknownPartitioning(0)
@@ -182,15 +144,7 @@ object Iterate {
     * WITH AQE, now seeing the real hashpartitioning and planning
     * exchange-free joins against it.
     */
-  def materializePartitioned(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try df.localCheckpoint(eager = true, storageLevel = CheckpointLevel)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def materializePartitioned(df: DataFrame): DataFrame =
+    graft.Sessions.withConf(df.sparkSession, "spark.sql.adaptive.enabled" -> "false")(
+      df.localCheckpoint(eager = true, storageLevel = CheckpointLevel))
 }

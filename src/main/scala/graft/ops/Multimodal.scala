@@ -447,10 +447,9 @@ object Multimodal {
     */
   def mediaTable(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      // 1-row-group fixture scan -> widen before the per-row synth work
-      .repartition(synthWidth(spark, dir))
+    // 1-row-group fixture scan -> widen before the per-row synth work
+    synthWiden(Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"), col("source")), dir)
       .as[(Long, Option[String], String)]
       .mapPartitions(_.map { case (id, textOpt, source) =>
         val payload = textOpt.map { text =>
@@ -473,28 +472,27 @@ object Multimodal {
     * replays in SQL. Generation is map-only (one tiny encode per row).
     */
 
-  /** Width for the synth+codec map over the fixture id stream: the
-    * per-row codec work is ~0.1-1 ms, so ~256 rows/task saturates the
-    * useful parallelism without paying 32 task launches for half a
-    * second of total work (measured: the full-cores first cut left the
-    * m-family ~0.2-0.3 s slower at 32c than 8c). Clamped to cores;
-    * grows with the corpus.
+  /** Widen the fixture id stream for the synth+codec map: the per-row
+    * codec work is ~0.1-1 ms, so ~256 rows/task saturates the useful
+    * parallelism without paying 32 task launches for half a second of
+    * total work (measured: the full-cores first cut left the m-family
+    * ~0.2-0.3 s slower at 32c than 8c). Grows with the corpus; a scan
+    * that is already wider keeps its partitions.
     */
-  private def synthWidth(spark: SparkSession, dir: String): Int = {
-    val rows = Tables.rowsOf(spark, dir, "documents")
-    math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, rows / 256L)).toInt
+  private def synthWiden(df: DataFrame, dir: String): DataFrame = {
+    val spark = df.sparkSession
+    graft.Sizing.widen(df, graft.Sizing.width(
+      spark, Tables.rowsOf(spark, dir, "documents"), graft.Sizing.SynthRows))
   }
 
   def imageTable(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, dir).select(col("doc_id"))
-      // the fixture parquet is ONE row group -> a 1-task scan; the synth
-      // + codec work is CPU-dense per row, so widen the 8-byte id stream
-      // before the map (guide: repartition immediately after an
-      // unsplittable read), sized ~256 rows/task. At scale a real media
-      // table scans wide already and this exchange is id-sized noise.
-      .repartition(synthWidth(spark, dir)).as[Long]
+    // the fixture parquet is ONE row group -> a 1-task scan; the synth
+    // + codec work is CPU-dense per row, so widen the 8-byte id stream
+    // before the map (guide: repartition immediately after an
+    // unsplittable read), sized ~256 rows/task. At scale a real media
+    // table scans wide already and pays no exchange.
+    synthWiden(Tables.documents(spark, dir).select(col("doc_id")), dir).as[Long]
       .mapPartitions(_.map(id => (id, ImageCodec.synthPayload(id))))
       .toDF("media_id", "payload")
   }
@@ -508,8 +506,7 @@ object Multimodal {
     */
   def audioTableLowDup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, dir).select(col("doc_id"))
-      .repartition(synthWidth(spark, dir)).as[Long]
+    synthWiden(Tables.documents(spark, dir).select(col("doc_id")), dir).as[Long]
       .filter((id: Long) => id % 3 == 2)
       .mapPartitions(_.map(id => (id, ImageCodec.synthAudioLowDup(id))))
       .toDF("media_id", "payload")
@@ -521,8 +518,7 @@ object Multimodal {
     */
   def audioTableShifted(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, dir).select(col("doc_id"))
-      .repartition(synthWidth(spark, dir)).as[Long]
+    synthWiden(Tables.documents(spark, dir).select(col("doc_id")), dir).as[Long]
       .filter((id: Long) => id % 3 == 2)
       .mapPartitions(_.map(id => (id, ImageCodec.synthAudioShifted(id))))
       .toDF("media_id", "payload")

@@ -740,14 +740,8 @@ object Similarity {
       val rows = all.join(
           mv.select(col(idCol), col("ca").as("cell")), Seq(idCol))
         .filter(col("cell").isin(affected.map(Long.box).toIndexedSeq: _*))
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try rows.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(path)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      graft.Sessions.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
+        rows.write.mode(org.apache.spark.sql.SaveMode.Overwrite).partitionBy("cell").parquet(path))
       rows.groupBy("cell").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }

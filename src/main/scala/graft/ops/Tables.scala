@@ -52,18 +52,13 @@ object Tables {
     * exchange would cost more than the serial scan.
     */
   private def widen(spark: SparkSession, df: DataFrame,
-                    dir: String, name: String): DataFrame = {
+                    dir: String, name: String): DataFrame =
     // width from ROW COUNT, not core count: widening 2,000 embedding
     // rows to 32 tasks puts ~60 rows per task and the per-task fixed
     // cost × 32 made the whole v-family SLOWER at 32 cores than at 8
-    // (measured: the first widen cut of this round used
-    // defaultParallelism and re-created exactly the anti-scaling it was
-    // fixing). ~512 rows per task keeps fixture-scale maps a few tasks
-    // and saturates the cores as soon as the data justifies it.
-    val target = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, rowsOf(spark, dir, name) / 512L)).toInt
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
+    // (measured: the first widen cut of this round used the core count
+    // and re-created exactly the anti-scaling it was fixing).
+    graft.Sizing.widen(df, graft.Sizing.width(spark, rowsOf(spark, dir, name), graft.Sizing.ScanRows))
 
   /** Row count per (dir, table), memoized per JVM keyed by the parquet
     * file's (path, size, mtime) — one tiny count job on first touch,

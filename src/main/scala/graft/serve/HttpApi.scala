@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.Executors
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 import scala.collection.immutable.ListMap
 import scala.concurrent.ExecutionContext
 import scala.util.control.NonFatal
@@ -37,6 +37,7 @@ final class HttpApi(spark: SparkSession, port: Int = 0)(implicit ec: ExecutionCo
   val registry = new Runs.Registry(spark)
 
   private var server: HttpServer = _
+  private[serve] var pool: ExecutorService = _
 
   /** Bind and serve; returns the actual port (ephemeral when port=0). */
   def start(): Int = synchronized {
@@ -44,14 +45,20 @@ final class HttpApi(spark: SparkSession, port: Int = 0)(implicit ec: ExecutionCo
     server = HttpServer.create(new InetSocketAddress(port), 0)
     // small pool: every handler is a metadata call or LIMIT-n collect, but
     // a long pipeline poll must not block other requests
-    server.setExecutor(Executors.newFixedThreadPool(8))
+    pool = Executors.newFixedThreadPool(8)
+    server.setExecutor(pool)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     server.start()
     server.getAddress.getPort
   }
 
+  /** Stop serving and shut the handler pool down: its threads are
+    * non-daemon, so a live pool would keep the JVM up after `main`. */
   def stop(): Unit = synchronized {
-    if (server != null) { server.stop(0); server = null }
+    if (server != null) {
+      server.stop(0); server = null
+      pool.shutdown(); pool.awaitTermination(10, TimeUnit.SECONDS)
+    }
   }
 
   // ------------------------------------------------------------- dispatch

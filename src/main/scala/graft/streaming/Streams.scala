@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface — the streaming upgrades of the batch
@@ -44,57 +45,60 @@ object Streams {
     * unbounded first batch is an OOM, not a convenience. */
   def parquetDirStream(spark: SparkSession, dir: String, schema: StructType,
                        maxFilesPerTrigger: Int = 0): DataFrame = {
-    noteSourceWidth(spark, dir)
     val r = spark.readStream.schema(schema)
     (if (maxFilesPerTrigger > 0) r.option("maxFilesPerTrigger", maxFilesPerTrigger)
      else r).parquet(dir)
   }
 
-  /** Data-derived shuffle/state width for the NEXT streaming query
-    * (consumed by [[runToMemory]]/[[runToParquet]]/the foreachBatch
-    * runners). Stateful operators pin `spark.sql.shuffle.partitions` at
-    * query start as their state-partition count, and AQE is disabled in
-    * streaming — so with the session default (= core count) every
-    * micro-batch committed one state/delta file PER CORE per stateful
-    * operator, which made the stateful rows of the r18 driver bench
-    * SLOWER at 32 cores than at 8 (st11: 97% of task run time was
-    * state-store file I/O wait). Width = input bytes / 1 MB clamped to
-    * [1, defaultParallelism]: fixture streams get a handful of state
-    * partitions, a 100 TB backlog fans out to the cluster. Driver-side
-    * stash, single-threaded builder assumption (the documented
-    * materializePartitioned discipline); cleared when consumed, so
-    * directly-constructed streams (tests) run unchanged.
+  /** Data-derived shuffle/state width for a streaming query, read off
+    * its own plan: the largest staged input among its file sources
+    * (each `StreamingRelation`'s `path`), one partition per MB, by
+    * [[graft.Sizing.width]]. Stateful operators pin
+    * `spark.sql.shuffle.partitions` at query start as their
+    * state-partition count, and AQE is disabled in streaming — so with
+    * the session default (= core count) every micro-batch committed one
+    * state/delta file PER CORE per stateful operator, which made the
+    * stateful rows of the r18 driver bench SLOWER at 32 cores than at 8
+    * (st11: 97% of task run time was state-store file I/O wait).
+    * Fixture streams get a handful of state partitions, a 100 TB backlog
+    * fans out to the cluster; a query without file sources (tests'
+    * memory streams) keeps the session width.
     */
-  @volatile private var pendingSourceWidth: Option[Int] = None
-  private def noteSourceWidth(spark: SparkSession, dir: String): Unit = {
-    val bytes = try {
-      val d = new java.io.File(dir)
-      if (d.isDirectory) d.listFiles().map(_.length()).sum else 0L
-    } catch { case _: Throwable => 0L }
-    if (bytes > 0L) {
-      val cap = spark.sparkContext.defaultParallelism.toLong
-      pendingSourceWidth =
-        Some(math.max(1L, math.min(cap, bytes / (1L << 20) + 1L)).toInt)
-    }
+  private[streaming] def sourceWidth(df: DataFrame): Option[Int] = {
+    val bytes = df.queryExecution.analyzed.collect {
+      case r: StreamingRelation => r.dataSource.options.get("path").fold(0L) { dir =>
+        try {
+          val d = new java.io.File(dir)
+          if (d.isDirectory) d.listFiles().map(_.length()).sum else 0L
+        } catch { case _: Throwable => 0L }
+      }
+    }.filter(_ > 0L)
+    if (bytes.isEmpty) None
+    else Some(graft.Sizing.width(df.sparkSession, bytes.max, graft.Sizing.StreamBytes))
   }
 
-  /** Run `body` (a streaming query start+drain) with the shuffle width
-    * pinned to the last [[noteSourceWidth]] stash, restoring after. */
-  private def withSourceWidth[T](spark: SparkSession)(body: => T): T = {
-    val w = pendingSourceWidth
-    pendingSourceWidth = None
-    w match {
-      case None => body
-      case Some(width) =>
-        val key = "spark.sql.shuffle.partitions"
-        val prev = spark.conf.getOption(key)
-        spark.conf.set(key, width.toString)
-        try body
-        finally prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-    }
+  /** Start `df` into the sink `sink` configures with an AvailableNow
+    * trigger and wait until all currently-available input is processed.
+    * The width conf is scoped to `start()` alone: the query clones the
+    * session conf when it is constructed, so it keeps its width, and the
+    * conf lock is free while the query runs (a foreachBatch body may
+    * itself enter a conf scope). Without `durableCheckpoint` the query
+    * checkpoints to an [[ephemeralCheckpoint]] that is deleted once the
+    * query has ended.
+    */
+  private def runAvailableNow(df: DataFrame, durableCheckpoint: Option[String] = None)
+      (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val ckpt = durableCheckpoint.getOrElse(ephemeralCheckpoint())
+    try {
+      val writer = sink(df.writeStream)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+      val width = sourceWidth(df).map("spark.sql.shuffle.partitions" -> _.toString)
+      val q = graft.Sessions.withConf(df.sparkSession, width.toSeq: _*)(writer.start())
+      q.awaitTermination()
+      q
+    } finally if (durableCheckpoint.isEmpty)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
   }
 
   /** Tumbling 1-hour windows per event_type with a watermark. Output shape
@@ -459,23 +463,14 @@ object Streams {
     * never duplicate verdicts.
     */
   def runMediaCurationBatches(newMedia: DataFrame, indexPath: String,
-                              outDir: String, maxDist: Int = 4): StreamingQuery = {
-    withSourceWidth(newMedia.sparkSession) {
-      val q = newMedia.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          val s = batch.sparkSession
-          writeBatchIdempotent(
-            graft.ops.Multimodal.curationAgainstIndex(
-              batch.toDF(), s.read.parquet(indexPath), maxDist),
-            outDir, batchId)
-        }
-        .option("checkpointLocation", ephemeralCheckpoint())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
-  }
+                              outDir: String, maxDist: Int = 4): StreamingQuery =
+    runAvailableNow(newMedia)(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      val s = batch.sparkSession
+      writeBatchIdempotent(
+        graft.ops.Multimodal.curationAgainstIndex(
+          batch.toDF(), s.read.parquet(indexPath), maxDist),
+        outDir, batchId)
+    })
 
   /** Streaming phrase matching (st24) — t33's incremental form, the
     * decontamination gate: new docs stream in and each row counts its
@@ -536,24 +531,15 @@ object Streams {
     */
   def runAudioMatchBatches(newMedia: DataFrame, indexPath: String,
                            sizesPath: String, outDir: String,
-                           threshold: Double = 0.5): StreamingQuery = {
-    withSourceWidth(newMedia.sparkSession) {
-      val q = newMedia.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          val s = batch.sparkSession
-          writeBatchIdempotent(
-            graft.ops.Multimodal.audioMatchAgainstIndex(
-              graft.ops.Multimodal.audioWindowSets(batch),
-              s.read.parquet(indexPath), s.read.parquet(sizesPath), threshold),
-            outDir, batchId)
-        }
-        .option("checkpointLocation", ephemeralCheckpoint())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
-  }
+                           threshold: Double = 0.5): StreamingQuery =
+    runAvailableNow(newMedia)(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      val s = batch.sparkSession
+      writeBatchIdempotent(
+        graft.ops.Multimodal.audioMatchAgainstIndex(
+          graft.ops.Multimodal.audioWindowSets(batch),
+          s.read.parquet(indexPath), s.read.parquet(sizesPath), threshold),
+        outDir, batchId)
+    })
 
   /** Streaming VIDEO near-dup matching (st30) — m9's incremental form,
     * filling the modality × (batch, stream) matrix's last cell (text
@@ -571,24 +557,15 @@ object Streams {
     */
   def runVideoMatchBatches(newMedia: DataFrame, indexPath: String,
                            sizesPath: String, outDir: String,
-                           threshold: Double = 0.5): StreamingQuery = {
-    withSourceWidth(newMedia.sparkSession) {
-      val q = newMedia.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          val s = batch.sparkSession
-          writeBatchIdempotent(
-            graft.ops.Multimodal.videoMatchAgainstIndex(
-              graft.ops.Multimodal.videoFrameSets(batch),
-              s.read.parquet(indexPath), s.read.parquet(sizesPath), threshold),
-            outDir, batchId)
-        }
-        .option("checkpointLocation", ephemeralCheckpoint())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
-  }
+                           threshold: Double = 0.5): StreamingQuery =
+    runAvailableNow(newMedia)(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      val s = batch.sparkSession
+      writeBatchIdempotent(
+        graft.ops.Multimodal.videoMatchAgainstIndex(
+          graft.ops.Multimodal.videoFrameSets(batch),
+          s.read.parquet(indexPath), s.read.parquet(sizesPath), threshold),
+        outDir, batchId)
+    })
 
   /** The foreachBatch sink discipline shared by every join-then-aggregate
     * streaming twin (st22/st23/st27/st28): each micro-batch lands in its
@@ -626,20 +603,11 @@ object Streams {
     * batch_id partition and can never double postings (spec'd by
     * replaying the whole stream into the same store).
     */
-  def runIndexAddBatches(newDocs: DataFrame, segmentDir: String): StreamingQuery = {
-    withSourceWidth(newDocs.sparkSession) {
-      val q = newDocs.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          writeBatchIdempotent(
-            graft.ops.TextStats.indexSegment(batch)._1, segmentDir, batchId)
-        }
-        .option("checkpointLocation", ephemeralCheckpoint())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
-  }
+  def runIndexAddBatches(newDocs: DataFrame, segmentDir: String): StreamingQuery =
+    runAvailableNow(newDocs)(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      writeBatchIdempotent(
+        graft.ops.TextStats.indexSegment(batch)._1, segmentDir, batchId)
+    })
 
   /** Streaming POSITIONAL index add (st31) — st27's phrase-serving
     * twin: new documents stream in and each micro-batch becomes its own
@@ -655,20 +623,11 @@ object Streams {
     * can never duplicate postings (duplicated positional rows would
     * inflate phrase match counts AND the index-derived query set).
     */
-  def runPositionalAddBatches(newDocs: DataFrame, segmentDir: String): StreamingQuery = {
-    withSourceWidth(newDocs.sparkSession) {
-      val q = newDocs.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          writeBatchIdempotent(
-            graft.ops.TextStats.positionalSegment(batch), segmentDir, batchId)
-        }
-        .option("checkpointLocation", ephemeralCheckpoint())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
-  }
+  def runPositionalAddBatches(newDocs: DataFrame, segmentDir: String): StreamingQuery =
+    runAvailableNow(newDocs)(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      writeBatchIdempotent(
+        graft.ops.TextStats.positionalSegment(batch), segmentDir, batchId)
+    })
 
   /** Streaming SNAPSHOT STATUS (st29) — [[graft.ops.Profiling
     * .snapshotDiffReport]]'s streaming face: new-crawl docs stream in and
@@ -727,46 +686,28 @@ object Streams {
   def runBm25TombstoneQueryBatches(queries: DataFrame,
                                    segPaths: Seq[(String, String)],
                                    deletePath: String, outDir: String,
-                                   k: Int = 10): StreamingQuery = {
-    withSourceWidth(queries.sparkSession) {
-      val q = queries.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          val s = batch.sparkSession
-          val segs = segPaths.map { case (tfs, lens) =>
-            (s.read.parquet(tfs), s.read.parquet(lens)) }
-          val qToks = batch.select(col("phrase"), explode(col("toks")).as("tok"))
-          writeBatchIdempotent(
-            graft.ops.TextStats.bm25TopKTombstone(segs,
-              s.read.parquet(deletePath), qToks, k), outDir, batchId)
-        }
-        .option("checkpointLocation", ephemeralCheckpoint())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
-  }
+                                   k: Int = 10): StreamingQuery =
+    runAvailableNow(queries)(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      val s = batch.sparkSession
+      val segs = segPaths.map { case (tfs, lens) =>
+        (s.read.parquet(tfs), s.read.parquet(lens)) }
+      val qToks = batch.select(col("phrase"), explode(col("toks")).as("tok"))
+      writeBatchIdempotent(
+        graft.ops.TextStats.bm25TopKTombstone(segs,
+          s.read.parquet(deletePath), qToks, k), outDir, batchId)
+    })
 
   def runBm25QueryBatches(queries: DataFrame,
                           segPaths: Seq[(String, String)],
-                          outDir: String, k: Int = 10): StreamingQuery = {
-    withSourceWidth(queries.sparkSession) {
-      val q = queries.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          val s = batch.sparkSession
-          val segs = segPaths.map { case (tfs, lens) =>
-            (s.read.parquet(tfs), s.read.parquet(lens)) }
-          val qToks = batch.select(col("phrase"), explode(col("toks")).as("tok"))
-          writeBatchIdempotent(
-            graft.ops.TextStats.bm25TopKFromSegments(segs, qToks, k), outDir, batchId)
-        }
-        .option("checkpointLocation", ephemeralCheckpoint())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
-  }
+                          outDir: String, k: Int = 10): StreamingQuery =
+    runAvailableNow(queries)(_.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      val s = batch.sparkSession
+      val segs = segPaths.map { case (tfs, lens) =>
+        (s.read.parquet(tfs), s.read.parquet(lens)) }
+      val qToks = batch.select(col("phrase"), explode(col("toks")).as("tok"))
+      writeBatchIdempotent(
+        graft.ops.TextStats.bm25TopKFromSegments(segs, qToks, k), outDir, batchId)
+    })
 
   /** Streaming similarity serving: a stream of query vectors scored
     * against a STATIC corpus — the online ANN-serving path. Each
@@ -1005,30 +946,15 @@ object Streams {
     * cache, the standard production choice. Correctness is
     * provider-independent (same keys, same values, same watermark
     * semantics) — the oracle rows are identical, which is exactly what
-    * the gate re-checks. Session-conf scoped: the provider is read at
-    * STREAM START, so wrapping the start call is sufficient, and
-    * restoring it leaves concurrently-defined batch queries untouched
-    * (Verify runs queries sequentially).
+    * the gate re-checks. Scoped by [[graft.Sessions.withConf]]: the
+    * provider is read at STREAM START, and the scope holds the conf lock
+    * for all of `body` — wrap a memory-sink or parquet run, never a
+    * foreachBatch runner whose batches enter a conf scope themselves.
     */
-  def withRocksDbState[T](spark: SparkSession)(body: => T): T = {
-    // dev A/B knob: SPARK_GRAFT_HEAP_STATE=1 keeps the default heap
-    // store so provider cost can be measured same-code, same-box
-    if (sys.env.get("SPARK_GRAFT_HEAP_STATE").contains("1")) return body
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  def withRocksDbState[T](spark: SparkSession)(body: => T): T =
+    graft.Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
-  /** Drive any streaming frame to a named in-memory table until all
-    * currently-available input is processed (test/dev harness; production
-    * sinks go through [[runToParquet]] with checkpointing).
-    */
   /** Checkpoint parent for EPHEMERAL streaming queries (memory sinks,
     * foreachBatch twins driven once with AvailableNow and discarded):
     * the state store writes one delta file per partition per micro-batch
@@ -1038,8 +964,9 @@ object Streams {
     * task run time, 3.7 s CPU on st11's two interval-join stages).
     * Ephemeral state belongs on the fastest local scratch (the same
     * [[graft.Sessions.scratchDir]] ops would point at node-local NVMe on
-    * a cluster); durable checkpoints ([[runToParquet]]) keep their
-    * caller-chosen locations unchanged.
+    * a cluster). Each is deleted once its query has ended, so tmpfs
+    * scratch does not grow with the number of queries run; durable
+    * checkpoints ([[runToParquet]]) keep their caller-chosen locations.
     */
   private[graft] def ephemeralCheckpoint(): String = {
     val root = java.nio.file.Paths.get(
@@ -1049,20 +976,13 @@ object Streams {
     java.nio.file.Files.createTempDirectory(root, "q").toString
   }
 
+  /** Drive any streaming frame to a named in-memory table until all
+    * currently-available input is processed (test/dev harness; production
+    * sinks go through [[runToParquet]] with checkpointing).
+    */
   def runToMemory(df: DataFrame, name: String,
-                  outputMode: OutputMode = OutputMode.Complete()): StreamingQuery = {
-    withSourceWidth(df.sparkSession) {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ephemeralCheckpoint())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
-  }
+                  outputMode: OutputMode = OutputMode.Complete()): StreamingQuery =
+    runAvailableNow(df)(_.format("memory").queryName(name).outputMode(outputMode))
 
   /** The DURABLE path: drive a streaming frame to a parquet file sink
     * with a checkpoint, processing everything available now, then
@@ -1075,17 +995,7 @@ object Streams {
     * aggregations emit a window only once the watermark passes it, which
     * is precisely the contract that makes re-emission impossible.
     */
-  def runToParquet(df: DataFrame, outDir: String, checkpointDir: String): StreamingQuery = {
-    withSourceWidth(df.sparkSession) {
-      val q = df.writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q
-    }
-  }
+  def runToParquet(df: DataFrame, outDir: String, checkpointDir: String): StreamingQuery =
+    runAvailableNow(df, Some(checkpointDir))(
+      _.format("parquet").option("path", outDir).outputMode(OutputMode.Append()))
 }

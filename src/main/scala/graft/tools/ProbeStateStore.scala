@@ -10,15 +10,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, Qu
   * captures `StreamingQueryProgress.stateOperators` via a listener
   * (numRowsTotal, memoryUsedBytes, and the RocksDB custom metrics when
   * that provider is active) and prints one line per stateful operator.
-  * Run once normally (RocksDB twins) and once with
-  * SPARK_GRAFT_HEAP_STATE=1 for the same-code heap A/B.
   */
 object ProbeStateStore {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local("graft-probe-statestore", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
-    val provider = if (sys.env.get("SPARK_GRAFT_HEAP_STATE").contains("1")) "heap" else "rocksdb"
 
     val captured = scala.collection.concurrent.TrieMap[
       String, org.apache.spark.sql.streaming.StreamingQueryProgress]()
@@ -46,12 +43,12 @@ object ProbeStateStore {
           val custom = memKeys.flatMap { k =>
             Option(so.customMetrics.get(k)).map(v => s"$k=$v")
           }.mkString(" ")
-          println(f"PROBE $name%-22s provider=$provider op=${so.operatorName}%-28s " +
+          println(f"PROBE $name%-22s op=${so.operatorName}%-28s " +
             f"rowsTotal=${so.numRowsTotal}%8d rowsUpdated=${so.numRowsUpdated}%8d " +
             f"memUsed=${so.memoryUsedBytes}%12d $custom")
         }
       }
-      println(f"PROBE $name%-22s provider=$provider wall=$wall%.2f s rows=$n")
+      println(f"PROBE $name%-22s wall=$wall%.2f s rows=$n")
     }
     spark.stop()
   }

@@ -1,0 +1,44 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+/** Keeps the single primitives single: session conf is mutated only inside
+  * [[Sessions.withConf]], and the core count is read only by [[Sizing]]. */
+class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  private def sources: Seq[(Path, IndexedSeq[String])] =
+    Using.resource(Files.walk(root))(_.iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList)
+      .map(p => p -> Files.readAllLines(p).asScala.toIndexedSeq)
+
+  private def hits(pattern: String, allowed: (Path, IndexedSeq[String], Int) => Boolean): Seq[String] =
+    for {
+      (p, lines) <- sources
+      (l, i) <- lines.zipWithIndex
+      if l.contains(pattern) && !allowed(p, lines, i)
+    } yield s"$p:${i + 1}: ${l.trim}"
+
+  test("the guard sees the program sources") {
+    assert(Files.isDirectory(root), s"run from the project root (cwd ${Paths.get("").toAbsolutePath})")
+    assert(sources.exists(_._1.endsWith("Sessions.scala")))
+  }
+
+  test("conf.set( / conf.unset( appear only inside Sessions.withConf") {
+    def inWithConf(p: Path, lines: IndexedSeq[String], i: Int): Boolean =
+      p.endsWith("graft/Sessions.scala") && {
+        val start = lines.lastIndexWhere(_.trim.startsWith("def "), i)
+        start >= 0 && lines(start).contains("def withConf")
+      }
+    val bad = hits("conf.set(", inWithConf) ++ hits("conf.unset(", inWithConf)
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  test("defaultParallelism appears only inside Sizing") {
+    val bad = hits("defaultParallelism", (p, _, _) => p.endsWith("graft/Sizing.scala"))
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+}

@@ -85,6 +85,24 @@ class LoadPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 2)
   }
 
+  test("C1: Pipeline.run hands the caller's job group back") {
+    val d = tmpDir("c1g")
+    Files.writeString(d.resolve("in.csv"), "id,v\n1,a\n")
+    val sc = spark.sparkContext
+    def group = sc.getLocalProperty("spark.jobGroup.id")
+    val config = Pipeline.PipelineConfig(
+      csvPath = d.resolve("in.csv").toString, outputPath = d.resolve("out").toString)
+    val none = group
+    Pipeline.run(spark, config)
+    assert(group == none)
+    sc.setJobGroup("caller-group", "the caller's own jobs")
+    try {
+      Pipeline.run(spark, config)
+      assert(group == "caller-group")
+      assert(sc.getLocalProperty("spark.job.description") == "the caller's own jobs")
+    } finally sc.clearJobGroup()
+  }
+
   test("C1 quirk: all-null column ends with 0 rows (shipped-data parity)") {
     val d = tmpDir("c1q")
     Files.writeString(d.resolve("in.csv"), "id,msg\n1,\n2,\n")

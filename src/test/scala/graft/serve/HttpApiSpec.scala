@@ -48,6 +48,15 @@ class HttpApiSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private def detail(r: HttpResponse[String]): String =
     obj(r)("detail").asInstanceOf[String]
 
+  test("stop() shuts down the handler pool start() created") {
+    val own = new HttpApi(spark, port = 0)
+    own.start()
+    val pool = own.pool
+    assert(!pool.isShutdown)
+    own.stop()
+    assert(pool.isTerminated)
+  }
+
   test("GET / serves the dashboard HTML") {
     val r = get("/")
     assert(r.statusCode() == 200)

@@ -1178,4 +1178,60 @@ class StreamsSpec extends SparkSpec {
     val got = spark.table("rocks_sessions").collect()
     assert(got.length == 1 && got.head.getAs[Long]("user_id") == 7L)
   }
+
+  private def ckptQueryDirs: Set[String] = {
+    val root = java.nio.file.Paths.get(
+      graft.Sessions.scratchDir.getOrElse(System.getProperty("java.io.tmpdir")), "graft-ckpt")
+    if (!java.nio.file.Files.isDirectory(root)) Set.empty
+    else scala.util.Using.resource(java.nio.file.Files.list(root)) { l =>
+      scala.jdk.CollectionConverters.IteratorHasAsScala(l.iterator).asScala
+        .map(_.getFileName.toString).toSet
+    }
+  }
+
+  test("ephemeral checkpoints: graft-ckpt holds no query directory once runToMemory or a foreachBatch runner ends") {
+    val before = ckptQueryDirs
+    val schema = spark.read.parquet(eventsDir).schema
+    Streams.runToMemory(
+      Streams.hourlyByType(Streams.parquetDirStream(spark, eventsDir, schema)), "ckpt_cleanup_mem")
+    assert(spark.table("ckpt_cleanup_mem").count() > 0)
+    assert((ckptQueryDirs -- before).isEmpty, s"left behind: ${ckptQueryDirs -- before}")
+    val segDir = tmpDir("ckpt_cleanup_segs").toString
+    val docsDir = tmpDir("ckpt_cleanup_docs").resolve("docs").toString
+    Tables.documents(spark, sfDir).write.parquet(docsDir)
+    Streams.runIndexAddBatches(
+      Streams.parquetDirStream(spark, docsDir, spark.read.parquet(docsDir).schema), segDir)
+    assert(Streams.readBatchSink(spark, segDir).count() > 0)
+    assert((ckptQueryDirs -- before).isEmpty, s"left behind: ${ckptQueryDirs -- before}")
+  }
+
+  test("stream width comes from the query's own file sources: the largest one, scoped to start") {
+    import spark.implicits._
+    val base = tmpDir("stream_width")
+    val small = base.resolve("small").toString
+    val big = base.resolve("big").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "g").write.parquet(small)
+    Seq((3L, "c")).toDF("id", "g").write.parquet(big)
+    // 2.5 MB the source skips (a leading "_" hides a file from the scan)
+    // but the byte sum counts: the big source sizes to 2 partitions
+    java.nio.file.Files.write(java.nio.file.Paths.get(big, "_pad"), new Array[Byte](5 << 19))
+    val schema = spark.read.parquet(small).schema
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    def statePartitions(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+      q.recentProgress.flatMap(_.stateOperators).head.numShufflePartitions
+    // an untransformed source reads the same as one inside a plan
+    assert(Streams.sourceWidth(Streams.parquetDirStream(spark, big, schema)) == Some(2))
+    assert(Streams.sourceWidth(Streams.parquetDirStream(spark, small, schema)) == Some(1))
+    // built last, the small source no longer decides the width
+    val both = Streams.parquetDirStream(spark, big, schema)
+      .union(Streams.parquetDirStream(spark, small, schema))
+    assert(Streams.sourceWidth(both) == Some(2))
+    val q2 = Streams.runToMemory(both.groupBy("g").count(), "width_both")
+    assert(statePartitions(q2) == 2)
+    val q1 = Streams.runToMemory(
+      Streams.parquetDirStream(spark, small, schema).groupBy("g").count(), "width_small")
+    assert(statePartitions(q1) == 1)
+    assert(spark.table("width_both").count() == 3)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == shufflePartitions)
+  }
 }
