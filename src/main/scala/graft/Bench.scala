@@ -130,10 +130,8 @@ object Bench {
         spark = newSession()
         appendPartial(s"""{"recycle_after":$i}""")
       }
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val secs = (System.nanoTime() - t0) / 1e9
-      appendPartial(s"""{"$name":${f"$secs%.3f"}}""")
+      val secs = time(name)(fn(spark, sfDir).count())
+      appendPartial(secs.fold(s"""{"failed":"$name"}""")(t => s"""{"$name":${f"$t%.3f"}}"""))
       // Measurement hygiene, OUTSIDE the timer: a query's loop
       // checkpoints (localCheckpoint blocks) stay registered in the
       // block manager until session death — across ~286 queries that
@@ -154,9 +152,8 @@ object Bench {
     // the (single) JSON line — a front-truncated tail still shows the
     // total — and per-query times are rounded to 3 decimals to keep the
     // whole line as short as possible.
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val (qs, total) = queriesJson(results)
+    val failed = results.collect { case (name, None) => name }
     // min(pre, post): the pre row keeps a small JIT first-touch bias
     // even after trimming (measured +0.4-0.6 s vs post on the same
     // box), so the LOWER of the two is the cleaner estimate of the
@@ -170,7 +167,7 @@ object Bench {
     val procs = Runtime.getRuntime.availableProcessors
     // Calibration fields sit AFTER "queries" so front-truncation of the
     // driver's stdout tail capture never loses them.
-    val line = s"""{"queries":$qs,"sf":"$sfDir","n":${results.size},""" +
+    val line = s"""{$qs,"sf":"$sfDir","n":${results.size},""" +
       s""""calib_pre":${f"$calibPre%.3f"},"calib_post":${f"$calibPost%.3f"},""" +
       s""""calib_quiet_min":${f"${Bench.CalibQuietMin}%.3f"},"calib_ratio":${f"$calibRatio%.3f"},""" +
       s""""load_avg":${f"$loadAvg%.2f"},"cpus":$procs,""" +
@@ -202,11 +199,37 @@ object Bench {
       // count (its scaling measurement) — in round 18 that 8-core run
       // passed the quiet gate and silently replaced the 32-core quiet
       // baseline, making every later tripwire compare apples to oranges.
-      if (calibRatio <= Bench.PromoteMaxRatio &&
+      // A run with a failed query is never a baseline.
+      if (failed.isEmpty && calibRatio <= Bench.PromoteMaxRatio &&
           scala.util.Try(cpus.toInt).getOrElse(procs) >= procs)
         try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"), line + "\n")
         catch { case _: Throwable => () }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Seconds `run` took, or None when it threw: a failed query is never
+    * timed, so it cannot read as a fast one. */
+  private[graft] def time(name: String)(run: => Long): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { run; Some((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      None
+    }
+  }
+
+  /** The per-query fields of the result line — `"queries"` holds the timed
+    * queries (3 decimals), `"failed"` the names of the ones that threw —
+    * and the total over the timed queries. */
+  private[graft] def queriesJson(results: Seq[(String, Option[Double])]): (String, Double) = {
+    val timed = results.collect { case (name, Some(secs)) => name -> secs }
+    val qs = timed.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    val failed = results.collect { case (name, None) => "\"" + name + "\"" }.mkString("[", ",", "]")
+    (s""""queries":$qs,"failed":$failed""", timed.map(_._2).sum)
   }
 }

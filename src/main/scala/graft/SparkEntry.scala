@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.etl.{Clean, Ingest, Load, Synthetic}
 import graft.ops._
+import graft.streaming.Streams
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -42,60 +44,34 @@ object SparkEntry {
     }),
     "s5_synthetic" -> ((s, _) => Synthetic.products(s).orderBy("id")),
     // JSON source path: parquet → json lines → schema'd read-back
-    // (fixture written once per sfDir — testdata is immutable)
+    // (fixture staged once per dataset fingerprint)
     "s8_json_roundtrip" -> ((s, d) => {
-      val tmp = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/s8_${Integer.toHexString(d.hashCode)}"
       val nation = Tables.nation(s, d)
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, "_SUCCESS")))
-        nation.write.mode("overwrite").json(tmp)
-      s.read.schema(nation.schema).json(tmp).orderBy("n_nationkey")
+      val dir = Fixtures.staged("s8", d)(nation.write.mode("overwrite").json(_))
+      s.read.schema(nation.schema).json(dir).orderBy("n_nationkey")
     }),
     // ORC source path: parquet → ORC → read-back (same contract as s8)
     // schema-evolution read: two pipeline "versions" write disjoint
     // column sets into one landing dir; mergeSchema reads the union
     // with null padding (MergeSchemaSpec pins schema + pruning)
     "s10_merge_schema" -> ((s, d) => {
-      // build both "pipeline versions" in a staging dir and promote it
-      // with ONE atomic rename. The completeness probe is our OWN
-      // sentinel written only after the rename commits — NOT Spark's
-      // _SUCCESS, which the FIRST write already drops, so a pre-fix
-      // crash between the two writes leaves a half-built (even-ids-only)
-      // dir that carries _SUCCESS and would pass that weaker probe
-      // forever. Dirs without the sentinel (any partial state from any
-      // crash window) are torn down and rebuilt.
-      val tmp = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/s10_${Integer.toHexString(d.hashCode)}"
+      // both "pipeline versions" write into one fixture; a crash between
+      // the two writes leaves no marker, so the half-built dir is rebuilt
       val docs = Tables.documents(s, d)
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, "_GRAFT_COMPLETE"))) {
-        val stage = tmp + ".stage"
+      val dir = Fixtures.staged("s10", d) { dir =>
         docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("lang"))
-          .write.mode("overwrite").parquet(stage)
+          .write.mode("overwrite").parquet(dir)
         docs.filter(col("doc_id") % 2 === 1)
           .select(col("doc_id"), col("source"), length(col("text")).cast("long").as("n_chars"))
-          .coalesce(1).write.mode("append").parquet(stage)
-        def rmTree(p: java.nio.file.Path): Unit =
-          if (java.nio.file.Files.exists(p)) {
-            val walk = java.nio.file.Files.walk(p)
-            try {
-              import scala.jdk.CollectionConverters._
-              walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-            } finally walk.close()
-          }
-        rmTree(java.nio.file.Paths.get(tmp)) // stale half-build, any vintage
-        java.nio.file.Files.move(java.nio.file.Paths.get(stage), java.nio.file.Paths.get(tmp),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(tmp, "_GRAFT_COMPLETE"))
+          .coalesce(1).write.mode("append").parquet(dir)
       }
-      Ingest.parquetMerged(s, tmp)
+      Ingest.parquetMerged(s, dir)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .orderBy("doc_id")
     }),
-    "s9_orc_roundtrip" -> ((s, d) => {
-      val tmp = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/s9_${Integer.toHexString(d.hashCode)}"
-      val nation = Tables.nation(s, d)
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, "_SUCCESS")))
-        nation.write.mode("overwrite").orc(tmp)
-      s.read.orc(tmp).orderBy("n_nationkey")
-    }),
+    "s9_orc_roundtrip" -> ((s, d) =>
+      s.read.orc(Fixtures.staged("s9", d)(Tables.nation(s, d).write.mode("overwrite").orc(_)))
+        .orderBy("n_nationkey")),
     "s6_list_files" -> ((s, d) => {
       val dir = Fixtures.listingDir(d)
       Ingest.listCsvFiles(s, dir).select("filename", "size_bytes", "size_mb")
@@ -162,7 +138,7 @@ object SparkEntry {
     // shape pinned in BucketedJoinSpec). The oracle is the plain join on
     // raw parquet: bucketing must never change results, only movement.
     "k3_bucketed_join" -> ((s, d) => {
-      val sfx = Integer.toHexString(d.hashCode)
+      val sfx = Fixtures.key(d)
       val ot = s"orders_bkt_$sfx"; val lt = s"lineitem_bkt_$sfx"
       Load.replaceTableBucketed(Tables.orders(s, d), ot, 8, Seq("o_orderkey"))
       Load.replaceTableBucketed(Tables.lineitem(s, d), lt, 8, Seq("l_orderkey"))
@@ -183,7 +159,7 @@ object SparkEntry {
     // lang touches ONE directory (PartitionPruneSpec pins the plan);
     // the registered query proves write→prune→read round-trip parity
     "k5_partition_prune" -> ((s, d) => {
-      val tmp = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/k5_${Integer.toHexString(d.hashCode)}"
+      val tmp = Fixtures.dir("k5", d)
       Load.replaceParquetPartitioned(
         Tables.documents(s, d).select(col("doc_id"), col("lang"), col("source")),
         tmp, Seq("lang"))
@@ -192,7 +168,7 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     "k4_zorder" -> ((s, d) => {
-      val tmp = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/k4_${Integer.toHexString(d.hashCode)}"
+      val tmp = Fixtures.dir("k4", d)
       Load.replaceZOrdered(Tables.lineitem(s, d), tmp, "l_partkey", "l_suppkey")
       s.read.parquet(tmp).select(
         col("l_orderkey"), col("l_linenumber"),
@@ -211,7 +187,7 @@ object SparkEntry {
         .orderBy("o_orderkey")
     }),
     "k1_roundtrip" -> ((s, d) => {
-      val tmp = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/k1_${Integer.toHexString(d.hashCode)}"
+      val tmp = Fixtures.dir("k1", d)
       Load.replaceParquet(Synthetic.products(s), tmp)
       s.read.parquet(tmp).groupBy("category")
         .agg(count(lit(1)).as("n"), sum(col("price")).as("total_price"))
@@ -281,40 +257,28 @@ object SparkEntry {
     // streaming twin: the same TypedImperativeAggregate runs as
     // Complete-mode streaming state; the sink snapshot feeds the same
     // stat projection, sharing e22's oracle verbatim
-    "st19_stream_kmv" -> ((s, d) => {
-      val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      val mem = s"st19_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.parquetDirStream(s, stage, schema)
-          .select(unix_micros(date_trunc("hour", col("ts"))).as("scope"),
+    "st19_stream_kmv" -> ((s, d) =>
+      Analytics.kmvStatsOf(replay(s, "st19", stagedEvents(s, d))(
+        _.select(unix_micros(date_trunc("hour", col("ts"))).as("scope"),
             pmod(call_function("splitmix64", col("user_id")),
               lit(1L << 61)).as("u"))
           .groupBy("scope")
-          .agg(call_function("kmv_sketch", col("u"), lit(256)).as("sk")),
-        mem, org.apache.spark.sql.streaming.OutputMode.Complete())
-      Analytics.kmvStatsOf(s.table(mem), 256).orderBy("scope")
-    }),
+          .agg(call_function("kmv_sketch", col("u"), lit(256)).as("sk"))), 256)
+        .orderBy("scope")),
     // st25 — streaming quantile sketches: the bottomk_pairs typed
     // aggregate holds a bounded (≤256-pair) uniform sample per event
     // type as Complete-mode state; the sink snapshot feeds the shared
     // stat projection (p14's estimator, streaming-bounded)
-    "st25_stream_quantiles" -> ((s, d) => {
-      val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      val mem = s"st25_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.parquetDirStream(s, stage, schema)
-          .select(col("event_type"),
+    "st25_stream_quantiles" -> ((s, d) =>
+      Profiling.sampleQuantileStatsOf(replay(s, "st25", stagedEvents(s, d))(
+        _.select(col("event_type"),
             call_function("splitmix64", col("event_id")).as("h"),
             col("value").cast("double").as("x"))
           .filter(col("x").isNotNull)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_rows"),
-            call_function("bottomk_pairs", col("h"), col("x"), lit(256)).as("sk")),
-        mem, org.apache.spark.sql.streaming.OutputMode.Complete())
-      Profiling.sampleQuantileStatsOf(s.table(mem), "event_type")
-    }),
+            call_function("bottomk_pairs", col("h"), col("x"), lit(256)).as("sk"))),
+        "event_type")),
     // per-flag sketches + array-op union merge = whole-table sketch
     "d5_kmv_union" -> (Analytics.kmvUnion(_, _)),
     // theta-sketch set op: |A ∩ B| from the two sketches alone
@@ -540,20 +504,14 @@ object SparkEntry {
     // join ('removed' is absence and belongs to batch p15)
     "st29_stream_snapshot_status" -> ((s, d) => {
       val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
       val idx = s.read.parquet(stage).filter(col("doc_id") % 16 =!= 7)
         .select(col("doc_id"), lit(true).as("in_a"),
           call_function("fnv1a64", col("text")).as("h_a"))
-      val mem = s"st29_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamSnapshotStatus(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema)
-            .filter(col("doc_id") % 16 =!= 3)
-            .withColumn("text", when(col("doc_id") % 20 === 5,
-              concat(col("text"), lit(" rev2"))).otherwise(col("text"))),
-          idx),
-        mem, org.apache.spark.sql.streaming.OutputMode.Append())
-      s.table(mem).orderBy("doc_id")
+      replay(s, "st29", stage, OutputMode.Append())(ev => Streams.streamSnapshotStatus(
+        ev.filter(col("doc_id") % 16 =!= 3)
+          .withColumn("text", when(col("doc_id") % 20 === 5,
+            concat(col("text"), lit(" rev2"))).otherwise(col("text"))),
+        idx)).orderBy("doc_id")
     }),
     "p11_key_skew" -> ((s, d) => {
       val ev = Tables.events(s, d)
@@ -568,19 +526,14 @@ object SparkEntry {
       import s.implicits._
       val cut = "2024-01-16 00:00:00"
       val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
       val base = s.read.parquet(stage)
         .filter(col("ts") < lit(cut).cast("timestamp"))
         .groupBy(col("event_type").as("category"))
         .agg(count(lit(1)).as("n_base"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val mem = s"st18_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamCategoryCounts(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema), cut),
-        mem, org.apache.spark.sql.streaming.OutputMode.Complete())
+      val cur = replay(s, "st18", stage)(Streams.streamCategoryCounts(_, cut))
       val counts = base.toDF("category", "n_base")
-        .join(s.table(mem), Seq("category"), "full_outer")
+        .join(cur, Seq("category"), "full_outer")
         .na.fill(0L, Seq("n_base", "n_cur"))
       Profiling.chiSquareTerms(counts)
     }),
@@ -734,56 +687,32 @@ object SparkEntry {
 
     // --- structured streaming in the correctness gate: the streaming
     //     hourly aggregation must equal e1_hourly's oracle ---
-    "st1_stream_hourly" -> ((s, d) => {
-      val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      val mem = s"st1_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.hourlyByType(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema)), mem)
-      s.table(mem).orderBy("window_start_us", "event_type")
-    }),
+    "st1_stream_hourly" -> ((s, d) =>
+      replay(s, "st1", stagedEvents(s, d))(Streams.hourlyByType(_))
+        .orderBy("window_start_us", "event_type")),
     // per-user session state rides the ROCKSDB store (round-13 #4): the
     // per-user-state family's key space tracks the user population, so
     // the default heap-backed store is the 100 TB/day scale-killer;
     // rows are provider-independent — the gate proves it
     "st2_stream_sessions" -> ((s, d) => {
       val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      val mem = s"st2_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.withRocksDbState(s) {
-        graft.streaming.Streams.runToMemory(
-          graft.streaming.Streams.userSessions(
-            graft.streaming.Streams.parquetDirStream(s, stage, schema)), mem)
-      }
-      s.table(mem).orderBy("user_id", "session_start_us")
+      Streams.withRocksDbState(s)(replay(s, "st2", stage)(Streams.userSessions(_)))
+        .orderBy("user_id", "session_start_us")
     }),
     // streaming exact dedup shares x1's oracle: the aggregate's survivor
     // (min doc_id per text) is arrival-order independent
-    "st3_stream_dedup" -> ((s, d) => {
-      val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
-      val mem = s"st3_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.dedupExactAgg(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema)), mem)
-      s.table(mem).orderBy("doc_id")
-    }),
+    "st3_stream_dedup" -> ((s, d) =>
+      replay(s, "st3", stagedDocuments(s, d))(Streams.dedupExactAgg(_)).orderBy("doc_id")),
     // streaming incremental dedup: odd docs stream in against the even
     // half as the static corpus, bloom-prefiltered; stateless append
     "st5_stream_increment" -> ((s, d) => {
       val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
       val corpus = s.read.parquet(stage).filter(col("doc_id") % 2 === 0)
       val bloom = Dedup.textBloom(corpus)
-      val mem = s"st5_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamSurvivors(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema)
-            .filter(col("doc_id") % 2 === 1), corpus, bloom)
-          .select(col("doc_id"), col("lang"), col("source")),
-        mem, org.apache.spark.sql.streaming.OutputMode.Append())
-      s.table(mem).orderBy("doc_id")
+      replay(s, "st5", stage, OutputMode.Append())(ev =>
+        Streams.streamSurvivors(ev.filter(col("doc_id") % 2 === 1), corpus, bloom)
+          .select(col("doc_id"), col("lang"), col("source")))
+        .orderBy("doc_id")
     }),
     // streaming DSIR resampling shares t28's oracle: bucket weights and
     // the corpus-max log-weight staged from the snapshot ride the plan
@@ -791,35 +720,24 @@ object SparkEntry {
     // log-weights bit for bit, stateless
     "st17_stream_importance" -> ((s, d) => {
       val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
       val statics = s.read.parquet(stage)
       val weights = TextStats.bucketWeights(statics)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val lwMax = TextStats.importanceWeights(statics)
         .agg(max(col("log_weight"))).head().getDouble(0)
-      val mem = s"st17_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamImportanceSample(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema),
-          weights, lwMax),
-        mem, org.apache.spark.sql.streaming.OutputMode.Append())
-      s.table(mem).orderBy("doc_id")
+      replay(s, "st17", stage, OutputMode.Append())(
+        Streams.streamImportanceSample(_, weights, lwMax)).orderBy("doc_id")
     }),
     // streaming quality gate shares c6's oracle: thresholds staged from
     // the same corpus snapshot the stream replays, the gate itself is a
     // stateless map-only score + broadcast-threshold compare
     "st16_stream_quality_gate" -> ((s, d) => {
       val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
       val thresholds = TextStats.qualityThresholds(
         TextStats.qualityScore(s.read.parquet(stage))
           .select(col("doc_id"), col("lang"), col("quality_score")))
-      val mem = s"st16_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamQualityGate(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema), thresholds),
-        mem, org.apache.spark.sql.streaming.OutputMode.Append())
-      s.table(mem).orderBy("doc_id")
+      replay(s, "st16", stage, OutputMode.Append())(
+        Streams.streamQualityGate(_, thresholds)).orderBy("doc_id")
     }),
     // streaming incremental SemDeDup shares x13's oracle: each verdict
     // depends only on the static corpus (cell assignment is the map-only
@@ -827,87 +745,48 @@ object SparkEntry {
     // ANTI join), so micro-batch boundaries cannot change the answer
     "st15_stream_semdedup" -> ((s, d) => {
       val stage = stagedEmbeddings(s, d)
-      val schema = s.read.parquet(stage).schema
       val corpus = s.read.parquet(stage).filter(col("vec_id") % 2 === 0)
       val codebook = Similarity.trainIvfCodebook(corpus, cells = 16, iters = 3)
         .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      val mem = s"st15_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamSemDedupIncrement(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema)
-            .filter(col("vec_id") % 2 === 1), corpus, codebook),
-        mem, org.apache.spark.sql.streaming.OutputMode.Append())
-      s.table(mem).orderBy("vec_id")
+      replay(s, "st15", stage, OutputMode.Append())(ev =>
+        Streams.streamSemDedupIncrement(ev.filter(col("vec_id") % 2 === 1), corpus, codebook))
+        .orderBy("vec_id")
     }),
     // st26 — x18's twin: streamed odd docs probe the static even-half
     // band index; first-agreeing-band arithmetic makes pair emission
     // exactly-once WITHOUT dedup state; shares x18's oracle
     "st26_stream_minhash" -> ((s, d) => {
       val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
       val corpus = s.read.parquet(stage).filter(col("doc_id") % 2 === 0)
-      val mem = s"st26_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamMinhashCross(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema)
-            .filter(col("doc_id") % 2 === 1), corpus),
-        mem, org.apache.spark.sql.streaming.OutputMode.Append())
-      s.table(mem).orderBy("doc_old", "doc_new")
+      replay(s, "st26", stage, OutputMode.Append())(ev =>
+        Streams.streamMinhashCross(ev.filter(col("doc_id") % 2 === 1), corpus))
+        .orderBy("doc_old", "doc_new")
     }),
     // streaming sliding windows share e5's oracle (identical grid/agg)
-    "st6_stream_sliding" -> ((s, d) => {
-      val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      val mem = s"st6_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.slidingByType(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema)), mem)
-      s.table(mem).orderBy("window_start_us", "event_type")
-    }),
+    "st6_stream_sliding" -> ((s, d) =>
+      replay(s, "st6", stagedEvents(s, d))(Streams.slidingByType(_))
+        .orderBy("window_start_us", "event_type")),
     // stateless streaming text pipeline: the map-only scrub runs
     // unchanged over a stream (append mode, no state store) — shares
     // c3's oracle
-    "st7_stream_scrub" -> ((s, d) => {
-      val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
-      val mem = s"st7_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        TextStats.scrubPii(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema))
-          .select(col("doc_id"), col("n_emails"), col("n_phones"), col("scrubbed")),
-        mem, org.apache.spark.sql.streaming.OutputMode.Append())
-      s.table(mem).orderBy("doc_id")
-    }),
+    "st7_stream_scrub" -> ((s, d) =>
+      replay(s, "st7", stagedDocuments(s, d), OutputMode.Append())(TextStats.scrubPii(_)
+          .select(col("doc_id"), col("n_emails"), col("n_phones"), col("scrubbed")))
+        .orderBy("doc_id")),
     // CDC compaction: latest value per key as a streaming aggregate
-    "st9_stream_latest" -> ((s, d) => {
-      val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      val mem = s"st9_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.latestPerUser(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema)), mem)
-      s.table(mem).orderBy("user_id")
-    }),
+    "st9_stream_latest" -> ((s, d) =>
+      replay(s, "st9", stagedEvents(s, d))(Streams.latestPerUser(_)).orderBy("user_id")),
     // streaming funnel via custom keyed state: per-user stage-reach
     // times; the per-stage user counts equal the batch funnel's, so it
     // shares e6's oracle
     "st10_stream_funnel" -> ((s, d) => {
       val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      import s.implicits._
       val stages = Seq("signup", "click", "purchase")
-      val mem = s"st10_mem_${Integer.toHexString(d.hashCode)}"
-      val ev = graft.streaming.Streams.parquetDirStream(s, stage, schema)
-        .select(col("user_id"), col("event_id"),
-                unix_micros(col("ts")).as("us"), col("event_type"))
-        .as[graft.streaming.Streams.FunnelEvent]
       // per-user funnel state → RocksDB (round-13 #4, the 6.3×-at-sf1 row)
-      graft.streaming.Streams.withRocksDbState(s) {
-        graft.streaming.Streams.runToMemory(
-          graft.streaming.Streams.streamFunnelStage(ev, stages).toDF(), mem,
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      }
-      val per = s.table(mem).groupBy("user_id").agg(max(col("max_stage")).as("ms"))
+      val per = Streams.withRocksDbState(s)(
+        replay(s, "st10", stage, OutputMode.Update())(ev =>
+          Streams.streamFunnelStage(funnelEvents(ev), stages).toDF()))
+        .groupBy("user_id").agg(max(col("max_stage")).as("ms"))
       stages.zipWithIndex.map { case (st, i) =>
         per.filter(col("ms") >= i + 1)
           .agg(count(lit(1)).as("n_users"))
@@ -918,73 +797,37 @@ object SparkEntry {
     // two-sided watermarked join state; event-time predicate makes the
     // result arrival-order independent, so a plain batch self-join SQL
     // is the oracle
-    "st11_stream_join" -> ((s, d) => {
-      val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      val mem = s"st11_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamIntervalJoin(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema),
-          "click", "purchase"),
-        mem, org.apache.spark.sql.streaming.OutputMode.Append())
-      s.table(mem).orderBy("user_id", "left_id", "right_id")
-    }),
+    "st11_stream_join" -> ((s, d) =>
+      replay(s, "st11", stagedEvents(s, d), OutputMode.Append())(
+        Streams.streamIntervalJoin(_, "click", "purchase"))
+        .orderBy("user_id", "left_id", "right_id")),
     // streaming SCD2: each state change emits its closed interval
     // exactly once; the union over batches equals e16's closed rows
     "st12_stream_scd2" -> ((s, d) => {
       val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      import s.implicits._
-      val mem = s"st12_mem_${Integer.toHexString(d.hashCode)}"
-      val ev = graft.streaming.Streams.parquetDirStream(s, stage, schema)
-        .select(col("user_id"), col("event_id"),
-                unix_micros(col("ts")).as("us"), col("event_type"))
-        .as[graft.streaming.Streams.FunnelEvent]
       // per-user interval-compression state → RocksDB (round-13 #4)
-      graft.streaming.Streams.withRocksDbState(s) {
-        graft.streaming.Streams.runToMemory(
-          graft.streaming.Streams.streamScd2(ev).toDF(), mem,
-          org.apache.spark.sql.streaming.OutputMode.Update())
-      }
-      s.table(mem).orderBy("user_id", "valid_from_us", "state")
+      Streams.withRocksDbState(s)(
+        replay(s, "st12", stage, OutputMode.Update())(ev =>
+          Streams.streamScd2(funnelEvents(ev)).toDF()))
+        .orderBy("user_id", "valid_from_us", "state")
     }),
     // streaming attribution: per-conversion credit rows emitted at
     // conversion time, aggregated to e17's exact report (shared oracle)
-    "st13_stream_attribution" -> ((s, d) => {
-      val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      import s.implicits._
-      val mem = s"st13_mem_${Integer.toHexString(d.hashCode)}"
-      val ev = graft.streaming.Streams.parquetDirStream(s, stage, schema)
-        .select(col("user_id"), col("event_id"),
-                unix_micros(col("ts")).as("us"), col("event_type"))
-        .as[graft.streaming.Streams.FunnelEvent]
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamAttribution(ev).toDF(), mem,
-        org.apache.spark.sql.streaming.OutputMode.Update())
-      s.table(mem).groupBy("touch_type")
+    "st13_stream_attribution" -> ((s, d) =>
+      replay(s, "st13", stagedEvents(s, d), OutputMode.Update())(ev =>
+          Streams.streamAttribution(funnelEvents(ev)).toDF())
+        .groupBy("touch_type")
         .agg(sum(when(col("is_first"), 1L).otherwise(0L)).as("n_first"),
              sum(when(col("is_last"), 1L).otherwise(0L)).as("n_last"),
              sum(col("n")).as("n_touch_events"),
              count(lit(1)).as("n_conversions_touched"))
-        .orderBy("touch_type")
-    }),
+        .orderBy("touch_type")),
     // streaming LINEAR attribution: per-conversion credit rows emitted
     // from the same horizon-pruned keyed state as st13; aggregated
     // emissions equal e18's exact integer report (shared oracle)
     "st14_stream_linear_attr" -> ((s, d) => {
-      val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
-      import s.implicits._
-      val mem = s"st14_mem_${Integer.toHexString(d.hashCode)}"
-      val ev = graft.streaming.Streams.parquetDirStream(s, stage, schema)
-        .select(col("user_id"), col("event_id"),
-                unix_micros(col("ts")).as("us"), col("event_type"))
-        .as[graft.streaming.Streams.FunnelEvent]
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamLinearAttribution(ev).toDF(), mem,
-        org.apache.spark.sql.streaming.OutputMode.Update())
-      val t = s.table(mem)
+      val t = replay(s, "st14", stagedEvents(s, d), OutputMode.Update())(ev =>
+        Streams.streamLinearAttribution(funnelEvents(ev)).toDF())
       val denom = broadcast(t.agg(countDistinct(col("conv_id")).as("n_convs")))
       t.groupBy("touch_type")
         .agg(sum(col("n")).as("n_touch_events"), sum(col("credit_bp")).as("credit_bp"))
@@ -998,33 +841,21 @@ object SparkEntry {
     // per-user counts — the final emission per user equals the batch
     // GROUP BY count (max() guards against multi-batch re-emission)
     "st8_running_counts" -> ((s, d) => {
-      val stage = stagedEvents(s, d)
-      val schema = s.read.parquet(stage).schema
       import s.implicits._
-      val mem = s"st8_mem_${Integer.toHexString(d.hashCode)}"
-      val evStream = graft.streaming.Streams.parquetDirStream(s, stage, schema)
-        .select(col("user_id"), col("ts"), col("value"))
-        .as[graft.streaming.Streams.EventRow]
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.runningUserCounts(evStream).toDF(), mem,
-        org.apache.spark.sql.streaming.OutputMode.Update())
-      s.table(mem).groupBy("user_id")
+      replay(s, "st8", stagedEvents(s, d), OutputMode.Update())(ev =>
+          Streams.runningUserCounts(
+            ev.select(col("user_id"), col("ts"), col("value")).as[Streams.EventRow]).toDF())
+        .groupBy("user_id")
         .agg(max(col("n_events")).as("n_events")).orderBy("user_id")
     }),
     // streaming ANN serving: query stream (every 20th vector) against the
     // static corpus; shares v1's oracle (identical sim/rank formulation)
     "st4_stream_topk" -> ((s, d) => {
       val stage = stagedEmbeddings(s, d)
-      val schema = s.read.parquet(stage).schema
-      val mem = s"st4_mem_${Integer.toHexString(d.hashCode)}"
-      val qStream = graft.streaming.Streams.parquetDirStream(s, stage, schema)
-        .filter(col("vec_id") % 20 === 0)
       // running top-k state per query → RocksDB (round-13 #4)
-      graft.streaming.Streams.withRocksDbState(s) {
-        graft.streaming.Streams.runToMemory(
-          graft.streaming.Streams.streamTopK(qStream, Tables.embeddings(s, d)), mem)
-      }
-      s.table(mem).orderBy("query_id", "rank")
+      Streams.withRocksDbState(s)(replay(s, "st4", stage)(ev =>
+        Streams.streamTopK(ev.filter(col("vec_id") % 20 === 0), Tables.embeddings(s, d))))
+        .orderBy("query_id", "rank")
     }),
 
     // --- text analysis ---
@@ -1158,14 +989,11 @@ object SparkEntry {
     // write's content (complete, nothing duplicated) plus the layout
     // bytes recovered vs the separate segments
     "c29_index_compact" -> ((s, d) => {
-      val idx = stagedTextIndexAux(s, d)
-      val store = s"$idx/compacted"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(store, "_SUCCESS")))
-        TextStats.compactSegments(
-            Seq(s.read.parquet(s"$idx/tfs"), s.read.parquet(s"$idx/addtfs")))
-          .write.mode("overwrite").parquet(store)
-      TextStats.indexCompactReport(s.read.parquet(store),
-        Seq(s.read.parquet(s"$idx/tfs"), s.read.parquet(s"$idx/addtfs")))
+      val segs = Seq(s.read.parquet(s"${stagedTextIndex(s, d)}/tfs"),
+        s.read.parquet(s"${stagedTextIndexAux(s, d)}/addtfs"))
+      val store = Fixtures.staged("textidxcompact", d)(
+        TextStats.compactSegments(segs).write.mode("overwrite").parquet(_))
+      TextStats.indexCompactReport(s.read.parquet(store), segs)
     }),
     // st28 — streaming BM25 query serving (the retrieval st4): phrase
     // queries stream in; each micro-batch serves them THROUGH the
@@ -1173,15 +1001,13 @@ object SparkEntry {
     // foreachBatch and appends to a parquet sink; gated by the t34/t38
     // oracle over the union corpus verbatim
     "st28_stream_bm25" -> ((s, d) => {
-      val idx = stagedTextIndexAux(s, d)
-      val qPath = s"$idx/queries"
-      val schema = s.read.parquet(qPath).schema
+      val (idx, aux) = (stagedTextIndex(s, d), stagedTextIndexAux(s, d))
       val out = java.nio.file.Files.createTempDirectory("graft_st28_out").toString
-      graft.streaming.Streams.runBm25QueryBatches(
-        graft.streaming.Streams.parquetDirStream(s, qPath, schema),
-        Seq((s"$idx/tfs", s"$idx/lens"), (s"$idx/addtfs", s"$idx/addlens")),
+      Streams.runBm25QueryBatches(
+        replayStream(s, s"$aux/queries"),
+        Seq((s"$idx/tfs", s"$idx/lens"), (s"$aux/addtfs", s"$aux/addlens")),
         out)
-      graft.streaming.Streams.readBatchSink(s, out).orderBy("phrase", "rank")
+      Streams.readBatchSink(s, out).orderBy("phrase", "rank")
     }),
     // t42 — phrase search THROUGH positional segments (t38's phrase
     // twin): the staged at-rest base postings + the odd half's O(batch)
@@ -1203,15 +1029,12 @@ object SparkEntry {
     // over the union corpus verbatim
     "st31_stream_positional_add" -> ((s, d) => {
       val idx = stagedPositionalIndex(s, d)
-      val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
       val segDir = java.nio.file.Files.createTempDirectory("graft_st31_seg").toString
-      graft.streaming.Streams.runPositionalAddBatches(
-        graft.streaming.Streams.parquetDirStream(s, stage, schema)
-          .filter(col("doc_id") % 2 === 1), segDir)
+      Streams.runPositionalAddBatches(
+        replayStream(s, stagedDocuments(s, d)).filter(col("doc_id") % 2 === 1), segDir)
       TextStats.phraseSearchFromSegments(Seq(
         s.read.parquet(idx),
-        graft.streaming.Streams.readBatchSink(s, segDir)))
+        Streams.readBatchSink(s, segDir)))
     }),
     // st32 — st28's takedown twin (the NRT face of t43): phrase
     // queries stream in and each micro-batch serves them through the
@@ -1219,15 +1042,14 @@ object SparkEntry {
     // static side re-read per batch, global stats subtracted exactly —
     // sharing t43's oracle over the RETAINED corpus verbatim
     "st32_stream_bm25_tombstone" -> ((s, d) => {
-      val idx = stagedTextIndexDeletes(s, d)
-      val qPath = s"$idx/delqueries"
-      val schema = s.read.parquet(qPath).schema
+      val (idx, aux) = (stagedTextIndex(s, d), stagedTextIndexAux(s, d))
+      val del = stagedTextIndexDeletes(s, d)
       val out = java.nio.file.Files.createTempDirectory("graft_st32_out").toString
-      graft.streaming.Streams.runBm25TombstoneQueryBatches(
-        graft.streaming.Streams.parquetDirStream(s, qPath, schema),
-        Seq((s"$idx/tfs", s"$idx/lens"), (s"$idx/addtfs", s"$idx/addlens")),
-        s"$idx/deletes", out)
-      graft.streaming.Streams.readBatchSink(s, out).orderBy("phrase", "rank")
+      Streams.runBm25TombstoneQueryBatches(
+        replayStream(s, s"$del/delqueries"),
+        Seq((s"$idx/tfs", s"$idx/lens"), (s"$aux/addtfs", s"$aux/addlens")),
+        s"$del/deletes", out)
+      Streams.readBatchSink(s, out).orderBy("phrase", "rank")
     }),
     // st33 — st31's takedown twin (the NRT face of t44): streamed
     // positional segments accumulate in the at-rest store, then phrase
@@ -1237,15 +1059,12 @@ object SparkEntry {
     "st33_stream_phrase_tombstone" -> ((s, d) => {
       val idx = stagedPositionalIndex(s, d)
       val del = stagedTextIndexDeletes(s, d)
-      val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
       val segDir = java.nio.file.Files.createTempDirectory("graft_st33_seg").toString
-      graft.streaming.Streams.runPositionalAddBatches(
-        graft.streaming.Streams.parquetDirStream(s, stage, schema)
-          .filter(col("doc_id") % 2 === 1), segDir)
+      Streams.runPositionalAddBatches(
+        replayStream(s, stagedDocuments(s, d)).filter(col("doc_id") % 2 === 1), segDir)
       TextStats.phraseSearchTombstone(Seq(
         s.read.parquet(idx),
-        graft.streaming.Streams.readBatchSink(s, segDir)),
+        Streams.readBatchSink(s, segDir)),
         s.read.parquet(s"$del/deletes"))
     }),
     // t44 — phrase serving in TOMBSTONE mode after a delete (t43's
@@ -1676,15 +1495,10 @@ object SparkEntry {
     // statelessly, sharing v23's oracle
     "st20_stream_pca" -> ((s, d) => {
       val stage = stagedEmbeddings(s, d)
-      val schema = s.read.parquet(stage).schema
       val comp = Similarity.powerIteration(s.read.parquet(stage))
         .orderBy("dim").collect().map(_.getDouble(1))
-      val mem = s"st20_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamPcaProject(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema), comp),
-        mem, org.apache.spark.sql.streaming.OutputMode.Append())
-      s.table(mem).orderBy("vec_id")
+      replay(s, "st20", stage, OutputMode.Append())(Streams.streamPcaProject(_, comp))
+        .orderBy("vec_id")
     }),
     // the at-rest serving path: corpus written hive-partitioned BY CELL,
     // probe reads prune to cell directories — identical results to v4
@@ -1692,10 +1506,8 @@ object SparkEntry {
     "v21_ivf_layout" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val codebook = Similarity.trainIvfCodebook(emb, cells = 16, iters = 3)
-      val tmp = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/v21_${Integer.toHexString(d.hashCode)}"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, "_SUCCESS")))
-        Similarity.writeIvfLayout(emb, codebook, tmp)
-      Similarity.ivfTopKFromLayout(s, tmp, Similarity.querySet(emb, "vec_id", 20), codebook)
+      val dir = Fixtures.staged("v21", d)(Similarity.writeIvfLayout(emb, codebook, _))
+      Similarity.ivfTopKFromLayout(s, dir, Similarity.querySet(emb, "vec_id", 20), codebook)
         .orderBy("query_id", "rank")
     }),
     // multi-probe IVF: each query probes its 4 nearest cells — the
@@ -1848,7 +1660,7 @@ object SparkEntry {
       val batch = emb.filter(col("vec_id") % 2 === 1)
       val cb = graft.ops.Iterate.materialize(
         Similarity.trainIvfCodebook(corpus, cells = 16, iters = 3))
-      val tmp = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/v28_${Integer.toHexString(d.hashCode)}"
+      val tmp = Fixtures.dir("v28", d)
       Similarity.writeIvfLayout(emb, cb, tmp)
       val newCb = graft.ops.Iterate.materialize(
         Similarity.ivfRetrainCodebook(corpus, batch, cb, iters = 2))
@@ -1861,22 +1673,17 @@ object SparkEntry {
     // are the only state (<= |cells| longs), report shared verbatim
     "st21_stream_ivf_add" -> ((s, d) => {
       val stage = stagedEmbeddings(s, d)
-      val schema = s.read.parquet(stage).schema
       val corpus = s.read.parquet(stage).filter(col("vec_id") % 2 === 0)
       val codebookDf = graft.ops.Iterate.materialize(
         Similarity.trainIvfCodebook(corpus, cells = 16, iters = 3))
       val cb = codebookDf.collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-      val mem = s"st21_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamIvfAddCounts(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema)
-            .filter(col("vec_id") % 2 === 1), cb),
-        mem)
+      val counts = replay(s, "st21", stage)(ev =>
+        Streams.streamIvfAddCounts(ev.filter(col("vec_id") % 2 === 1), cb))
       Similarity.ivfAddReportFromCounts(
         Similarity.assignCells(corpus, codebookDf)
           .groupBy("cell").agg(count(lit(1)).as("n_before")),
-        s.table(mem), codebookDf)
+        counts, codebookDf)
     }),
     // st22 — streaming MEDIA curation, c22's incremental twin: new
     // images stream in; each micro-batch runs the DISTRIBUTED verdict
@@ -1887,13 +1694,11 @@ object SparkEntry {
     // streaming state; the batch SQL replay gates the stream verbatim.
     "st22_stream_media_curation" -> ((s, d) => {
       val stage = stagedImages(s, d)
-      val schema = s.read.parquet(stage).schema
       val idx = stagedCurationIndex(s, d)
       val out = java.nio.file.Files.createTempDirectory("graft_st22_out").toString
-      graft.streaming.Streams.runMediaCurationBatches(
-        graft.streaming.Streams.parquetDirStream(s, stage, schema)
-          .filter(col("media_id") % 2 === 1), idx, out)
-      graft.streaming.Streams.readBatchSink(s, out).orderBy("media_id")
+      Streams.runMediaCurationBatches(
+        replayStream(s, stage).filter(col("media_id") % 2 === 1), idx, out)
+      Streams.readBatchSink(s, out).orderBy("media_id")
     }),
     // dimension-truncation recall curve (Matryoshka storage knob): re-rank
     // with the first d dims only, agreement vs the full-width top-k
@@ -1948,17 +1753,12 @@ object SparkEntry {
     // streamed half.
     "st24_stream_phrase_match" -> ((s, d) => {
       val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
       val corpus = s.read.parquet(stage).filter(col("doc_id") % 2 === 0)
       val phrases = TextStats.topNgrams(corpus)
         .collect().map(_.getString(0)).toSeq
-      val mem = s"st24_mem_${Integer.toHexString(d.hashCode)}"
-      graft.streaming.Streams.runToMemory(
-        graft.streaming.Streams.streamPhraseMatch(
-          graft.streaming.Streams.parquetDirStream(s, stage, schema)
-            .filter(col("doc_id") % 2 === 1), phrases),
-        mem, org.apache.spark.sql.streaming.OutputMode.Append())
-      s.table(mem).orderBy("doc_id", "phrase")
+      replay(s, "st24", stage, OutputMode.Append())(ev =>
+        Streams.streamPhraseMatch(ev.filter(col("doc_id") % 2 === 1), phrases))
+        .orderBy("doc_id", "phrase")
     }),
     // st27 — t37's streaming twin: new docs stream in; each
     // micro-batch appends its own O(batch) tf segment to the at-rest
@@ -1968,14 +1768,11 @@ object SparkEntry {
     // batch t37 and shares its oracle verbatim.
     "st27_stream_index_add" -> ((s, d) => {
       val idx = stagedTextIndex(s, d)
-      val stage = stagedDocuments(s, d)
-      val schema = s.read.parquet(stage).schema
       val segDir = java.nio.file.Files.createTempDirectory("graft_st27_seg").toString
-      graft.streaming.Streams.runIndexAddBatches(
-        graft.streaming.Streams.parquetDirStream(s, stage, schema)
-          .filter(col("doc_id") % 2 === 1), segDir)
+      Streams.runIndexAddBatches(
+        replayStream(s, stagedDocuments(s, d)).filter(col("doc_id") % 2 === 1), segDir)
       TextStats.indexAddReport(s.read.parquet(s"$idx/tfs"),
-        graft.streaming.Streams.readBatchSink(s, segDir))
+        Streams.readBatchSink(s, segDir))
     }),
     // st23 — m10's streaming twin (the modality matrix's last cell):
     // new tracks stream in; each micro-batch stream-static joins the
@@ -1988,14 +1785,12 @@ object SparkEntry {
     // planted retake pair ACROSS the corpus/stream boundary.
     "st23_stream_audio_match" -> ((s, d) => {
       val stage = stagedShiftedAudio(s, d)
-      val schema = s.read.parquet(stage).schema
       val idx = stagedAudioIndex(s, d)
       val out = java.nio.file.Files.createTempDirectory("graft_st23_out").toString
-      graft.streaming.Streams.runAudioMatchBatches(
-        graft.streaming.Streams.parquetDirStream(s, stage, schema)
-          .filter(expr("((media_id - 2) div 3) % 2 = 1")),
+      Streams.runAudioMatchBatches(
+        replayStream(s, stage).filter(expr("((media_id - 2) div 3) % 2 = 1")),
         s"$idx/index", s"$idx/sizes", out)
-      graft.streaming.Streams.readBatchSink(s, out).orderBy("media_id")
+      Streams.readBatchSink(s, out).orderBy("media_id")
     }),
     // c31 — curation-index ADD report (the image store's t37/v26
     // analog): the odd half arrives as its own O(batch) chunk-exploded
@@ -2018,14 +1813,12 @@ object SparkEntry {
     // corpus, odd member stream) ACROSS the corpus/stream boundary.
     "st30_stream_video_match" -> ((s, d) => {
       val stage = stagedVideos(s, d)
-      val schema = s.read.parquet(stage).schema
       val idx = stagedVideoIndex(s, d)
       val out = java.nio.file.Files.createTempDirectory("graft_st30_out").toString
-      graft.streaming.Streams.runVideoMatchBatches(
-        graft.streaming.Streams.parquetDirStream(s, stage, schema)
-          .filter(col("media_id") % 2 === 1),
+      Streams.runVideoMatchBatches(
+        replayStream(s, stage).filter(col("media_id") % 2 === 1),
         s"$idx/index", s"$idx/sizes", out)
-      graft.streaming.Streams.readBatchSink(s, out).orderBy("media_id")
+      Streams.readBatchSink(s, out).orderBy("media_id")
     }),
     // c32 — curation-index DELETE report (the t40 rule on the image
     // store, c31's other face): the delete list's chunk rows by ONE
@@ -2078,7 +1871,7 @@ object SparkEntry {
         Multimodal.audioWindowSets(
           aud.filter(expr("((media_id - 2) div 3) % 2 = 1"))),
         s.read.parquet(s"$idx/full"), s.read.parquet(s"$idx/dfs"),
-        s.read.parquet(s"$idx/sizes"),
+        s.read.parquet(s"${stagedAudioIndex(s, d)}/sizes"),
         aud.filter(expr("((media_id - 2) div 3) % 100 = 24"))
           .select(col("media_id").as("cid")))
         .orderBy("media_id")
@@ -2103,7 +1896,7 @@ object SparkEntry {
       Multimodal.videoMatchTombstone(
         Multimodal.videoFrameSets(vids.filter(col("media_id") % 2 === 1)),
         s.read.parquet(s"$idx/full"), s.read.parquet(s"$idx/dfs"),
-        s.read.parquet(s"$idx/sizes"),
+        s.read.parquet(s"${stagedVideoIndex(s, d)}/sizes"),
         vids.filter(col("media_id") % 200 === 2)
           .select(col("media_id").as("cid")))
         .orderBy("media_id")
@@ -2183,175 +1976,151 @@ object SparkEntry {
     })
   )
 
-  /** Stage the events table as plain-timestamp parquet for the streaming
-    * sources (streams need a static schema) — once per (sfDir, JVM temp).
-    * Shared by st1/st2; skipped when the _SUCCESS marker already exists
-    * (testdata is immutable).
+  /** Stage `df` as the parquet fixture `tag` of dataset dir `d`. */
+  private def stagedParquet(tag: String, d: String)(df: => DataFrame): String =
+    Fixtures.staged(tag, d)(df.write.mode("overwrite").parquet(_))
+
+  /** The staged parquet dir `stage` opened as a stream with the dir's own
+    * schema (streams need a static schema). */
+  private def replayStream(s: SparkSession, stage: String): DataFrame =
+    Streams.parquetDirStream(s, stage, s.read.parquet(stage).schema)
+
+  /** Run `plan` over [[replayStream]] of `stage` to a memory table and
+    * return the table. It is named for `tag` and the fixture dir, so a
+    * re-run replaces it instead of registering one more table.
     */
-  private def stagedEvents(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/events_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      Tables.events(s, d).write.mode("overwrite").parquet(stage)
-    stage
+  private def replay(s: SparkSession, tag: String, stage: String,
+                     mode: OutputMode = OutputMode.Complete())
+                    (plan: DataFrame => DataFrame): DataFrame = {
+    val name = s"${tag}_${java.nio.file.Paths.get(stage).getFileName}"
+    Streams.runToMemory(plan(replayStream(s, stage)), name, mode)
+    s.table(name)
   }
 
-  /** Real media FILES staged once per sfDir (ids < 1500 — bounded at
-    * every sf): one encoded PNG/JPEG/WAV per file, the s11 fixture. */
-  private def stagedMediaFiles(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/mediafiles_${Integer.toHexString(d.hashCode)}"
-    val root = java.nio.file.Paths.get(stage)
-    val marker = root.resolve("_STAGED")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(root)
+  /** The funnel-family typed view of an events stream. */
+  private def funnelEvents(ev: DataFrame): Dataset[Streams.FunnelEvent] = {
+    import ev.sparkSession.implicits._
+    ev.select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("us"), col("event_type"))
+      .as[Streams.FunnelEvent]
+  }
+
+  /** The events table as plain-timestamp parquet for the streaming
+    * sources. */
+  private def stagedEvents(s: SparkSession, d: String): String =
+    stagedParquet("events", d)(Tables.events(s, d))
+
+  /** Real media FILES (ids < 1500 — bounded at every sf): one encoded
+    * PNG/JPEG/WAV per file, the s11 fixture. */
+  private def stagedMediaFiles(s: SparkSession, d: String): String =
+    Fixtures.staged("mediafiles", d) { dir =>
       import s.implicits._
       Tables.documents(s, d).select(col("doc_id")).filter(col("doc_id") < 1500)
         .as[Long].collect().foreach { id =>
-          java.nio.file.Files.write(root.resolve(f"media_$id%06d.bin"),
+          java.nio.file.Files.write(java.nio.file.Paths.get(dir, f"media_$id%06d.bin"),
             Multimodal.ImageCodec.synthPayload(id))
         }
-      java.nio.file.Files.write(marker, Array.empty[Byte])
     }
-    stage
-  }
 
-  private def stagedShiftedAudio(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/shiftaudio_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      Multimodal.audioTableShifted(s, d).write.mode("overwrite").parquet(stage)
-    stage
-  }
+  private def stagedShiftedAudio(s: SparkSession, d: String): String =
+    stagedParquet("shiftaudio", d)(Multimodal.audioTableShifted(s, d))
 
-  /** st23's AT-REST corpus artifact, staged once per sfDir like any
-    * model/index snapshot: `index/` = the df-guarded window-hash
+  /** st23's AT-REST corpus artifact, staged like any model/index
+    * snapshot: `index/` = the df-guarded window-hash
     * inverted index (wh, cid), repartitioned by wh so probe joins
     * co-locate on the bucket key; `sizes/` = the full per-track
     * window-set sizes (cid, nb). Built by ONE distributed pass over the
     * corpus half (windowSets localCheckpointed so index and sizes share
     * the decode), no driver collection anywhere.
     */
-  private def stagedAudioIndex(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/audioidx_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "sizes", "_SUCCESS"))) {
+  private def stagedAudioIndex(s: SparkSession, d: String): String =
+    Fixtures.staged("audioidx", d) { dir =>
       val corpus = s.read.parquet(stagedShiftedAudio(s, d))
         .filter(expr("((media_id - 2) div 3) % 2 = 0"))
       val cs = graft.ops.Iterate.materialize(Multimodal.audioWindowSets(corpus))
       Multimodal.audioWindowIndex(cs).repartition(col("wh"))
-        .write.mode("overwrite").parquet(s"$stage/index")
+        .write.mode("overwrite").parquet(s"$dir/index")
       cs.select(col("doc_id").as("cid"), col("n_sh").as("nb"))
-        .write.mode("overwrite").parquet(s"$stage/sizes")
+        .write.mode("overwrite").parquet(s"$dir/sizes")
     }
-    stage
-  }
 
   /** t37/t38/st27's AT-REST text index: the corpus (even) half's tf
-    * segment + doc lengths ([[graft.ops.TextStats.indexSegment]]),
-    * staged once per sfDir — tfs repartitioned by tok so postings
-    * probes co-locate on the term key.
+    * segment + doc lengths ([[graft.ops.TextStats.indexSegment]]) —
+    * tfs repartitioned by tok so postings probes co-locate on the term
+    * key.
     */
-  private def stagedTextIndex(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/textidx_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "lens", "_SUCCESS"))) {
+  private def stagedTextIndex(s: SparkSession, d: String): String =
+    Fixtures.staged("textidx", d) { dir =>
       val (tfs, lens) = TextStats.indexSegment(
         Tables.documents(s, d).filter(col("doc_id") % 2 === 0))
-      tfs.repartition(col("tok")).write.mode("overwrite").parquet(s"$stage/tfs")
-      lens.write.mode("overwrite").parquet(s"$stage/lens")
+      tfs.repartition(col("tok")).write.mode("overwrite").parquet(s"$dir/tfs")
+      lens.write.mode("overwrite").parquet(s"$dir/lens")
     }
-    stage
-  }
 
   /** t42's AT-REST base postings: the corpus (even) half's positional
-    * segment ([[graft.ops.TextStats.positionalSegment]]), staged once
-    * per sfDir repartitioned by tok — candidate probes lead on the
-    * token key, like [[stagedTextIndex]]'s tf layout.
+    * segment ([[graft.ops.TextStats.positionalSegment]]), repartitioned
+    * by tok — candidate probes lead on the token key, like
+    * [[stagedTextIndex]]'s tf layout.
     */
-  private def stagedPositionalIndex(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/positional_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      TextStats.positionalSegment(
-          Tables.documents(s, d).filter(col("doc_id") % 2 === 0))
-        .repartition(col("tok"))
-        .write.mode("overwrite").parquet(stage)
-    stage
-  }
+  private def stagedPositionalIndex(s: SparkSession, d: String): String =
+    stagedParquet("positional", d)(TextStats.positionalSegment(
+        Tables.documents(s, d).filter(col("doc_id") % 2 === 0))
+      .repartition(col("tok")))
 
   /** The ADD-side segment + the derived query workload as at-rest
-    * parquet (st28/c29's inputs): `addtfs`/`addlens` = the odd half's
-    * tf segment, `queries` = one row per derived phrase with its term
-    * bag (a row is atomic in a stream, so a phrase never splits across
-    * micro-batches). Staged once per sfDir beside [[stagedTextIndex]].
+    * parquet (st28/c29's inputs, read beside [[stagedTextIndex]]):
+    * `addtfs`/`addlens` = the odd half's tf segment, `queries` = one row
+    * per derived phrase with its term bag (a row is atomic in a stream,
+    * so a phrase never splits across micro-batches).
     */
-  private def stagedTextIndexAux(s: SparkSession, d: String): String = {
-    val stage = stagedTextIndex(s, d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "queries", "_SUCCESS"))) {
+  private def stagedTextIndexAux(s: SparkSession, d: String): String =
+    Fixtures.staged("textidxaux", d) { dir =>
       val (addTfs, addLens) = TextStats.indexSegment(
         Tables.documents(s, d).filter(col("doc_id") % 2 === 1))
-      addTfs.repartition(col("tok")).write.mode("overwrite").parquet(s"$stage/addtfs")
-      addLens.write.mode("overwrite").parquet(s"$stage/addlens")
+      addTfs.repartition(col("tok")).write.mode("overwrite").parquet(s"$dir/addtfs")
+      addLens.write.mode("overwrite").parquet(s"$dir/addlens")
       TextStats.bm25QueryToks(Tables.documents(s, d))
         .groupBy("phrase").agg(collect_set(col("tok")).as("toks"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$stage/queries")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/queries")
     }
-    stage
-  }
 
-  private def stagedImages(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/images_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      Multimodal.imageTable(s, d).filter(col("media_id") % 3 === 0)
-        .write.mode("overwrite").parquet(stage)
-    stage
-  }
+  private def stagedImages(s: SparkSession, d: String): String =
+    stagedParquet("images", d)(Multimodal.imageTable(s, d).filter(col("media_id") % 3 === 0))
 
   /** st22's AT-REST curation index: the curated (even) image half's
     * chunk-exploded (ci, ckey, cid, chash, cq) pigeonhole rows
-    * ([[graft.ops.Multimodal.imageCurationIndexChunked]]), staged once
-    * per sfDir and repartitioned on the chunk probe key so the
+    * ([[graft.ops.Multimodal.imageCurationIndexChunked]]),
+    * repartitioned on the chunk probe key so the
     * stream-static join co-locates — the multimodal twin of
     * [[stagedAudioIndex]]'s wh-bucketed layout.
     */
-  private def stagedCurationIndex(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/curidx_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS"))) {
-      val corpus = s.read.parquet(stagedImages(s, d))
-        .filter(col("media_id") % 2 === 0)
-      Multimodal.imageCurationIndexChunked(corpus)
-        .repartition(col("ci"), col("ckey"))
-        .write.mode("overwrite").parquet(stage)
-    }
-    stage
-  }
+  private def stagedCurationIndex(s: SparkSession, d: String): String =
+    stagedParquet("curidx", d)(Multimodal.imageCurationIndexChunked(
+        s.read.parquet(stagedImages(s, d)).filter(col("media_id") % 2 === 0))
+      .repartition(col("ci"), col("ckey")))
 
   /** st30's streamed source: the m9 video fixture staged to parquet
-    * once per sfDir (payload binary rows, the binary pair headers
-    * included) so [[graft.streaming.Streams.parquetDirStream]] can
-    * replay it as a stream. */
-  private def stagedVideos(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/videos_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      Multimodal.mediaTable(s, d).write.mode("overwrite").parquet(stage)
-    stage
-  }
+    * (payload binary rows, the binary pair headers included) so
+    * [[replayStream]] can replay it as a stream. */
+  private def stagedVideos(s: SparkSession, d: String): String =
+    stagedParquet("videos", d)(Multimodal.mediaTable(s, d))
 
   /** st30's AT-REST frame-hash index: the corpus (even) half's
     * df-guarded (fh → cid) inverted index over sampled-frame hashes
     * ([[graft.ops.Multimodal.audioWindowIndex]] — the (doc_id, sh)
     * shape is modality-agnostic — over [[graft.ops.Multimodal
-    * .videoFrameSets]]), plus the full per-video set sizes; staged once
-    * per sfDir, index repartitioned on the hash probe key like
-    * [[stagedAudioIndex]]. */
-  private def stagedVideoIndex(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/vididx_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "sizes", "_SUCCESS"))) {
+    * .videoFrameSets]]), plus the full per-video set sizes; index
+    * repartitioned on the hash probe key like [[stagedAudioIndex]]. */
+  private def stagedVideoIndex(s: SparkSession, d: String): String =
+    Fixtures.staged("vididx", d) { dir =>
       val corpus = s.read.parquet(stagedVideos(s, d))
         .filter(col("media_id") % 2 === 0)
       val cs = graft.ops.Iterate.materialize(Multimodal.videoFrameSets(corpus))
       Multimodal.audioWindowIndex(cs).repartition(col("wh"))
-        .write.mode("overwrite").parquet(s"$stage/index")
+        .write.mode("overwrite").parquet(s"$dir/index")
       cs.select(col("doc_id").as("cid"), col("n_sh").as("nb"))
-        .write.mode("overwrite").parquet(s"$stage/sizes")
+        .write.mode("overwrite").parquet(s"$dir/sizes")
     }
-    stage
-  }
 
   /** The takedown-side extension of [[stagedAudioIndex]] (m11/m13):
     * `full/` = the UNGUARDED (wh, cid) postings
@@ -2361,33 +2130,26 @@ object SparkEntry {
     * table maintained by exact subtraction at serve time. Staged
     * beside the guarded serving view, which stays byte-identical.
     */
-  private def stagedAudioIndexFull(s: SparkSession, d: String): String = {
-    val stage = stagedAudioIndex(s, d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "dfs", "_SUCCESS"))) {
+  private def stagedAudioIndexFull(s: SparkSession, d: String): String =
+    Fixtures.staged("audioidxfull", d) { dir =>
       val corpus = s.read.parquet(stagedShiftedAudio(s, d))
         .filter(expr("((media_id - 2) div 3) % 2 = 0"))
-      val cs = graft.ops.Iterate.materialize(Multimodal.audioWindowSets(corpus))
-      Multimodal.hashIndexFull(cs).repartition(col("wh"))
-        .write.mode("overwrite").parquet(s"$stage/full")
-      Multimodal.hashIndexDfs(s.read.parquet(s"$stage/full"))
-        .write.mode("overwrite").parquet(s"$stage/dfs")
+      stageFullIndex(dir, Multimodal.audioWindowSets(corpus))
     }
-    stage
-  }
 
   /** [[stagedAudioIndexFull]] for the video frame-hash store (m12/m14). */
-  private def stagedVideoIndexFull(s: SparkSession, d: String): String = {
-    val stage = stagedVideoIndex(s, d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "dfs", "_SUCCESS"))) {
-      val corpus = s.read.parquet(stagedVideos(s, d))
-        .filter(col("media_id") % 2 === 0)
-      val cs = graft.ops.Iterate.materialize(Multimodal.videoFrameSets(corpus))
-      Multimodal.hashIndexFull(cs).repartition(col("wh"))
-        .write.mode("overwrite").parquet(s"$stage/full")
-      Multimodal.hashIndexDfs(s.read.parquet(s"$stage/full"))
-        .write.mode("overwrite").parquet(s"$stage/dfs")
+  private def stagedVideoIndexFull(s: SparkSession, d: String): String =
+    Fixtures.staged("vididxfull", d) { dir =>
+      stageFullIndex(dir, Multimodal.videoFrameSets(
+        s.read.parquet(stagedVideos(s, d)).filter(col("media_id") % 2 === 0)))
     }
-    stage
+
+  private def stageFullIndex(dir: String, sets: DataFrame): Unit = {
+    val cs = graft.ops.Iterate.materialize(sets)
+    Multimodal.hashIndexFull(cs).repartition(col("wh"))
+      .write.mode("overwrite").parquet(s"$dir/full")
+    Multimodal.hashIndexDfs(cs.sparkSession.read.parquet(s"$dir/full"))
+      .write.mode("overwrite").parquet(s"$dir/dfs")
   }
 
   /** The text-retrieval takedown statics (st32/st33): `deletes/` = the
@@ -2396,87 +2158,57 @@ object SparkEntry {
     * the query workload derived from the RETAINED corpus (t43's
     * contract: derivation never sees deleted docs), one row per phrase
     * with its term bag so a phrase never splits across micro-batches.
-    * Staged beside [[stagedTextIndexAux]]'s segments.
+    * Read beside [[stagedTextIndexAux]]'s segments.
     */
-  private def stagedTextIndexDeletes(s: SparkSession, d: String): String = {
-    val stage = stagedTextIndexAux(s, d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "delqueries", "_SUCCESS"))) {
+  private def stagedTextIndexDeletes(s: SparkSession, d: String): String =
+    Fixtures.staged("textidxdel", d) { dir =>
       val docs = Tables.documents(s, d)
       docs.select(col("doc_id")).filter(col("doc_id") % 10 === 6)
-        .write.mode("overwrite").parquet(s"$stage/deletes")
+        .write.mode("overwrite").parquet(s"$dir/deletes")
       TextStats.bm25QueryToks(docs.filter(col("doc_id") % 10 =!= 6))
         .groupBy("phrase").agg(collect_set(col("tok")).as("toks"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$stage/delqueries")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/delqueries")
     }
-    stage
-  }
 
-  private def stagedDocuments(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/documents_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      Tables.documents(s, d).write.mode("overwrite").parquet(stage)
-    stage
-  }
+  private def stagedDocuments(s: SparkSession, d: String): String =
+    stagedParquet("documents", d)(Tables.documents(s, d))
 
   /** The x4 near-dup pair table (ngramJaccard, threshold 0.5),
-    * materialized ONCE per sfDir and shared by every consumer — x5's
+    * materialized ONCE per dataset and shared by every consumer — x5's
     * cluster resolution, t9's leakage report, t12's leakproof split.
     * The shingle-explode pass is the expensive pipeline; at corpus scale
     * it runs once per corpus snapshot, and resolve/report/split are all
     * cheap joins against the same small pair table (the
     * Graft.assignSplitSafe / leakageReport contract).
     */
-  private[graft] def stagedPairs(s: SparkSession, d: String): DataFrame = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/pairs_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      Dedup.ngramJaccard(Tables.documents(s, d), threshold = 0.5)
-        .write.mode("overwrite").parquet(stage)
-    s.read.parquet(stage)
-  }
+  private[graft] def stagedPairs(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(stagedParquet("pairs", d)(
+      Dedup.ngramJaccard(Tables.documents(s, d), threshold = 0.5)))
 
-  /** PQ codebooks trained ONCE per sfDir (m=4, dim=64, cells=16,
+  /** PQ codebooks trained ONCE per dataset (m=4, dim=64, cells=16,
     * iters=3) and materialized like any model artifact — v13's error
     * report and v14's serving path both read this table, mirroring the
     * stagedPairs discipline: the expensive training loop runs once per
     * corpus snapshot, consumers are cheap joins.
     */
-  private[graft] def stagedPqBooks(s: SparkSession, d: String): DataFrame = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/pqbooks_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      Similarity.pqCodebooks(Tables.embeddings(s, d))
-        .write.mode("overwrite").parquet(stage)
-    s.read.parquet(stage)
-  }
+  private[graft] def stagedPqBooks(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(stagedParquet("pqbooks", d)(Similarity.pqCodebooks(Tables.embeddings(s, d))))
 
-  /** The t22 BPE merge table trained ONCE per sfDir (k=8) and
+  /** The t22 BPE merge table trained ONCE per dataset (k=8) and
     * materialized like the PQ codebooks — a model artifact the encode
     * path (c8) reads, so serving never re-runs the training loop.
     */
-  private[graft] def stagedBpeMerges(s: SparkSession, d: String): DataFrame = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/bpe_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      TextStats.bpeMerges(Tables.documents(s, d))
-        .write.mode("overwrite").parquet(stage)
-    s.read.parquet(stage)
-  }
+  private[graft] def stagedBpeMerges(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(stagedParquet("bpe", d)(TextStats.bpeMerges(Tables.documents(s, d))))
 
-  /** The t25 unigram vocab trained ONCE per sfDir and materialized like
+  /** The t25 unigram vocab trained ONCE per dataset and materialized like
     * the BPE merges — the model artifact the encode path (c12) reads.
     */
-  private[graft] def stagedUnigramVocab(s: SparkSession, d: String): DataFrame = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/unigram_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      TextStats.unigramVocab(Tables.documents(s, d))
-        .write.mode("overwrite").parquet(stage)
-    s.read.parquet(stage)
-  }
+  private[graft] def stagedUnigramVocab(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(stagedParquet("unigram", d)(TextStats.unigramVocab(Tables.documents(s, d))))
 
-  private def stagedEmbeddings(s: SparkSession, d: String): String = {
-    val stage = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_fixtures/embeddings_${Integer.toHexString(d.hashCode)}"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      Tables.embeddings(s, d).write.mode("overwrite").parquet(stage)
-    stage
-  }
+  private def stagedEmbeddings(s: SparkSession, d: String): String =
+    stagedParquet("embeddings", d)(Tables.embeddings(s, d))
 
   // ------------------------------------------------------------- oracle SQL
 

@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 /** Keeps the single primitives single: session conf is mutated only inside
-  * [[Sessions.withConf]], and the core count is read only by [[Sizing]]. */
+  * [[Sessions.withConf]], the core count is read only by [[Sizing]], and
+  * fixture dirs are named only by [[graft.ops.Fixtures]]. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -39,6 +40,13 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("defaultParallelism appears only inside Sizing") {
     val bad = hits("defaultParallelism", (p, _, _) => p.endsWith("graft/Sizing.scala"))
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  test("graft_fixtures appears only in Fixtures; SparkEntry names no temp dir or memory table") {
+    val bad = hits("graft_fixtures", (p, _, _) => p.endsWith("graft/ops/Fixtures.scala")) ++
+      Seq("Integer.toHexString(d.hashCode)", "java.io.tmpdir", "_mem_")
+        .flatMap(hits(_, (p, _, _) => !p.endsWith("graft/SparkEntry.scala")))
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 }
