@@ -26,9 +26,8 @@ object Bench {
     */
   val PromoteMaxRatio: Double = 1.8
 
-  /** Recycle the SparkSession every this many timed queries (env
-    * SPARK_GRAFT_RECYCLE overrides; <= 0 disables). One JVM running
-    * ~280 queries' broadcasts, AQE stage state, and streaming
+  /** Recycle the SparkSession every this many timed queries. One JVM
+    * running ~280 queries' broadcasts, AQE stage state, and streaming
     * state-store providers accumulates driver-heap and block-manager
     * pressure without bound — the r17 driver bench died at query ~270
     * with an evicted broadcast block ("Block broadcast_2925 does not
@@ -40,16 +39,14 @@ object Bench {
     */
   val RecycleEvery: Int = 75
 
+  /** Times the registry queries (SPARK_GRAFT_ONLY narrows them), each the
+    * min of SPARK_GRAFT_REPS runs (default 1), and prints one JSON line. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val recycleEvery = sys.env.get("SPARK_GRAFT_RECYCLE").map(_.toInt)
-      .getOrElse(RecycleEvery)
+    val reps = sys.env.get("SPARK_GRAFT_REPS").fold(1)(_.toInt)
     def newSession(): SparkSession = {
-      val s = Sessions.configure(
-        SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"), cpus)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = Sessions.local("graft-bench", cpus)
       // Untimed warmup: whichever query runs first otherwise absorbs the
       // one-time session cost (codegen/JIT compilation, shuffle manager and
       // scheduler init, parquet footer reads) — measured at ~6 s attributed
@@ -88,9 +85,10 @@ object Bench {
       times.sorted.take(8).sum
     }
     val calibPre = calib()
-    // Optional comma-separated subset for targeted scaling probes
-    // (sf0.1-vs-sf1 per-query ratios); unset = the full driver protocol.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
+    val selected = Harness.selected()
+    // A subset run (SPARK_GRAFT_ONLY) is a targeted probe: it writes no
+    // artifact, so it never clobbers a full run's evidence or baselines.
+    val full = selected.size == SparkEntry.queries.size
     // CRASH DURABILITY (r17 verdict ask #1): the complete JSON line is
     // only assembled at the end, so a mid-run JVM death (the r17 driver
     // bench: exit 56 at query ~270 of 278) would otherwise lose every
@@ -99,53 +97,32 @@ object Bench {
     // close per line — durable against kill -9), prefixed by a header
     // row carrying the run metadata. The file restarts per run and is
     // superseded by the final one-line JSON on success; after a crash
-    // it holds one row per completed query. Full runs only — subset
-    // probes must not clobber a crashed full run's evidence.
+    // it holds one row per completed query. Full runs only.
     val partialPath = java.nio.file.Paths.get("BENCH_PARTIAL.jsonl")
-    val writePartial = only.isEmpty
     def appendPartial(line: String): Unit =
-      if (writePartial)
+      if (full)
         try java.nio.file.Files.writeString(partialPath, line + "\n",
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
         catch { case _: Throwable => () }
-    if (writePartial)
+    if (full)
       try java.nio.file.Files.deleteIfExists(partialPath)
       catch { case _: Throwable => () }
-    // SORTED execution order: HashMap iteration order reshuffles whenever
-    // the query surface grows, which moves which queries run "warm"
-    // (page cache, JIT, broadcast reuse) and made committed per-query
-    // mins incomparable across rounds (the c18/t30 warm-order artifact,
-    // BENCH_NOTES.md round-14 close). Name order is stable under growth,
-    // so protocol mins compare like with like from here on.
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     appendPartial(s"""{"start":true,"sf":"$sfDir","n":${selected.size},""" +
       s""""cpus":"$cpus","calib_pre":${f"$calibPre%.3f"}}""")
-    val results = selected.zipWithIndex.map { case ((name, fn), i) =>
-      if (recycleEvery > 0 && i > 0 && i % recycleEvery == 0) {
+    val results = Harness.each("bench", spark, selected) { (_, fn) =>
+      Seq.fill(reps)(seconds(fn(spark, sfDir).count())).min
+    }.zipWithIndex.map { case ((name, secs), i) =>
+      appendPartial(secs.fold(s"""{"failed":"$name"}""")(t => s"""{"$name":${f"$t%.3f"}}"""))
+      if ((i + 1) % RecycleEvery == 0 && i + 1 < selected.size) {
         spark.stop()
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
         spark = newSession()
-        appendPartial(s"""{"recycle_after":$i}""")
+        appendPartial(s"""{"recycle_after":${i + 1}}""")
       }
-      val secs = time(name)(fn(spark, sfDir).count())
-      appendPartial(secs.fold(s"""{"failed":"$name"}""")(t => s"""{"$name":${f"$t%.3f"}}"""))
-      // Measurement hygiene, OUTSIDE the timer: a query's loop
-      // checkpoints (localCheckpoint blocks) stay registered in the
-      // block manager until session death — across ~286 queries that
-      // accumulation is exactly the memory pressure that killed the r17
-      // driver bench ("Block broadcast_2925 does not exist" at query
-      // ~270) and it contaminates later queries' timings with earlier
-      // queries' eviction/GC work. The query's own result was fully
-      // consumed by the count() above, so dropping the blocks here
-      // cannot change anything a timed region computes — this REMOVES
-      // cross-query state rather than adding any.
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
       name -> secs
-    }
+    }.toList
     // The driver keeps only the tail of stdout; with ~80 queries a
     // full-precision line overflows that capture and truncates from the
     // FRONT. Keys are ordered so the headline metrics sit at the END of
@@ -192,7 +169,7 @@ object Bench {
     // must leave the quiet baseline byte-identical. Threshold documented
     // in BENCH_NOTES.md (round-17 "Promotion gate"; re-derived for the
     // 0.47 floor in round 18).
-    if (only.isEmpty) {
+    if (full) {
       try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), line + "\n")
       catch { case _: Throwable => () }
       // Full-width runs only: the driver ALSO benches at a LOWER core
@@ -213,14 +190,15 @@ object Bench {
   }
 
   /** Seconds `run` took, or None when it threw: a failed query is never
-    * timed, so it cannot read as a fast one. */
-  private[graft] def time(name: String)(run: => Long): Option[Double] = {
+    * timed, so it cannot read as a fast one. `main` does the same to each
+    * query: `Harness.each` is `Harness.attempt` around `seconds`. */
+  private[graft] def time(name: String)(run: => Long): Option[Double] =
+    Harness.attempt("bench", name)(seconds(run))
+
+  private def seconds(run: => Long): Double = {
     val t0 = System.nanoTime()
-    try { run; Some((System.nanoTime() - t0) / 1e9) }
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      None
-    }
+    run
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** The per-query fields of the result line — `"queries"` holds the timed

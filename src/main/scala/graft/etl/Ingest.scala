@@ -34,17 +34,6 @@ object Ingest {
 
   private def readOne(spark: SparkSession, file: String,
                       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    // Spark's FileIndex silently drops `.`/`_`-prefixed files even when
-    // named explicitly; the reference's strict variant (api.py:44) reads
-    // them. Shim: scan a visible-name symlink from a temp dir.
-    val p = Paths.get(file)
-    val readable =
-      if (!isHidden(p.getFileName.toString)) file
-      else {
-        val d = Files.createTempDirectory("graft_hidden_csv")
-        d.toFile.deleteOnExit()
-        Files.createSymbolicLink(d.resolve("unhidden.csv"), p.toAbsolutePath).toString
-      }
     val base = spark.read.option("header", "true")
     val withSchema = schema match {
       case Some(s) => base.schema(s)
@@ -52,7 +41,25 @@ object Ingest {
     }
     // mode=FAILFAST surfaces malformed rows as errors, matching pandas'
     // ParserError behavior that the tolerant dir scan catches per file.
-    withSchema.option("mode", "FAILFAST").csv(readable)
+    withSchema.option("mode", "FAILFAST").csv(visible(file))
+  }
+
+  /** `file`, or for a hidden one a visible-name symlink to it in a temp
+    * dir: Spark's FileIndex silently drops `.`/`_`-prefixed files even
+    * when named explicitly, and the reference's strict variant (api.py:44)
+    * reads them. Both go at JVM exit — the link is registered after its
+    * dir because deleteOnExit runs last-registered first, and a dir that
+    * still holds the link cannot be deleted. */
+  private[etl] def visible(file: String): String = {
+    val p = Paths.get(file)
+    if (!isHidden(p.getFileName.toString)) file
+    else {
+      val d = Files.createTempDirectory("graft_hidden_csv")
+      d.toFile.deleteOnExit()
+      val link = Files.createSymbolicLink(d.resolve("unhidden.csv"), p.toAbsolutePath)
+      link.toFile.deleteOnExit()
+      link.toString
+    }
   }
 
   /** Single-file read (ingest.py:12-21): non-CSV suffix is an error. */

@@ -1,116 +1,37 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.{Harness, Sessions}
 import java.nio.file.{Files, Paths}
 
-/** Dump the formatted physical plans of the headline queries to PLANS.md —
-  * the artifact behind the scale claims (broadcasts, pushed filters,
-  * partial aggregation, exchange counts) so plan shapes can be reviewed
-  * without running anything.
+/** Dump the formatted physical plans of the registry queries (every one,
+  * or SPARK_GRAFT_ONLY's names) to one markdown file, `args(0)` (default
+  * PLANS.md) — the artifact behind the scale claims (broadcasts, pushed
+  * filters, partial aggregation, exchange counts) so plan shapes can be
+  * reviewed without running anything. Exits 1 when any query failed to
+  * plan, after the file is written.
   */
 object DumpPlans {
-  private val headline = Seq(
-    "q1_pricing", "q3_shipping", "q5_volume", "q6_forecast",
-    "w1_top_orders", "z1_asof_join",
-    "v5_topk_agg", "v3_emb_near_dup",
-    "x2_minhash_lsh", "x3_simhash", "x4_ngram_jaccard",
-    "t3_fingerprint", "c1_clean_corpus", "c4_pack", "e2_sessions",
-    "x6_cross_dedup", "v9_knn_sampled", "v10_ivf_assign",
-    "v4_ivf_topk", "m1_format_profile",
-    "x7_bloom_cross_dedup", "t12_leakproof_split", "z2_range_join",
-    "e6_funnel", "e7_retention", "e8_gaps", "m3_features",
-    "t13_decontaminate", "e9_active_users", "p3_correlations",
-    "q13_custdist", "q15_top_supplier", "q17_small_qty", "q18_large_orders",
-    "q21_waiting", "q22_idle_bal", "e10_anomaly", "e11_incremental_hourly",
-    "e12_gapfill", "t14_coverage", "t15_heavy_hitters", "t16_boilerplate",
-    "m4_ahash", "m5_image_neardup", "k2_upsert", "p4_spend_buckets",
-    "j4_full_outer", "q7_nation_volume", "q8_market_share", "w3_revenue_share",
-    "g2_unpivot", "d3_sketch_union", "t17_fuzzy_terms", "p5_histogram",
-    "w4_order_timeline", "c5_normalize", "v13_pq_err", "v14_pq_topk",
-    "p6_constraints", "e13_funnel_timing", "e14_ewma", "c6_quality_gate",
-    "st9_stream_latest", "t18_dup_profile",
-    "k3_bucketed_join", "w5_topk_per_group", "e15_transitions",
-    "p7_psi", "t19_stratified_sample",
-    "t20_balance_weights", "t21_novelty", "v15_ivfpq_topk",
-    // round 11
-    "d4_kmv_distinct", "d5_kmv_union", "d6_kmv_intersect",
-    "n1_part_pagerank", "n2_triangles", "e16_scd2", "e17_attribution",
-    "t24_weighted_sample", "p8_ks_drift", "t22_bpe_merges", "c7_classifier",
-    "c8_bpe_encode", "t23_importance", "x10_emb_dup_scale", "k4_zorder",
-    "c9_corpus_pipeline", "z3_asof_tolerance",
-    // round 12
-    "c10_shuffle_shard", "c11_shard_manifest", "t25_unigram_vocab",
-    "v12_ivf_multiprobe", "x11_dup_spans", "c12_unigram_encode",
-    "t26_token_budget_mix", "c13_span_scrub", "v16_dim_recall",
-    "v17_ivf_probe_curve", "e18_linear_attribution",
-    // round-12 close
-    "x12_semdedup", "x13_semdedup_increment", "v18_cell_outliers",
-    "c14_keep_best", "t27_tfidf", "t28_importance_sample",
-    "p9_rfm_segments", "n3_local_clustering", "m6_audio_neardup",
-    "c15_emb_curation", "e20_session_paths", "d7_kmv_jaccard",
-    // round-12 continuation
-    "x14_containment", "v19_coreset", "v20_mmr", "n4_assoc_rules",
-    "p10_chisq_drift", "t29_collocations", "e21_cusum", "c16_group_cap",
-    "p11_key_skew", "p12_winsorize", "k5_partition_prune",
-    "t30_readability", "g3_grouping_sets", "w6_spend_ecdf",
-    "m7_image_dup_resolve", "s10_merge_schema", "t31_zipf",
-    "e22_kmv_hourly", "v21_ivf_layout", "c17_snapshot_diff", "n5_kcore",
-    "e23_concurrency", "v22_power_iteration", "v23_pca_project",
-    "d8_countmin",
-    // round 13
-    "q2_min_cost_supp", "q11_important_stock", "q16_supplier_cnt",
-    "q20_promo_suppliers", "t32_bpe_batched", "d2_approx_distinct",
-    "c18_curation_report", "c19_epoch_plan", "m8_audio_neardup_low",
-    "c20_context_pack", "v24_hard_negatives", "n6_label_prop",
-    "c21_pretrain_pipeline", "p13_outliers",
-    // round 14
-    "n7_doc_communities", "v25_hard_neg_ann", "c22_media_curation",
-    "x15_cc_contraction", "d9_kmv_difference", "c23_curriculum_order",
-    "m9_video_neardup", "n8_hub_distances", "v26_ivf_add_report",
-    // round 15
-    "v27_ivf_retrain", "v28_ivf_relayout", "m10_audio_shift_neardup",
-    "x16_cdc_dedup", "k6_salted_join", "c24_training_manifest",
-    "c25_perplexity_buckets", "s11_binary_ingest",
-    // round-15 continuation
-    "c26_chunk_scrub", "t33_phrase_search", "x17_scrub_audit",
-    "t34_bm25_topk",
-    // round-15 second continuation
-    "p14_sample_quantiles", "t35_hybrid_rrf", "c27_temperature_mix",
-    "x18_minhash_cross", "n9_ppr_selection", "t36_index_layout",
-    "c28_clf_calibration", "v29_post_retrain_topk",
-    // round 16
-    "t37_index_add", "t38_index_search_merged", "c29_index_compact",
-    "t39_merge_policy", "t40_index_delete", "c30_bin_pack",
-    "v30_ivf_delete_report", "p15_snapshot_diff",
-    // round-16 close
-    "t41_incremental_profile", "v31_post_delete_topk",
-    "st29_stream_snapshot_status",
-    // round 17
-    "t42_phrase_merged", "t43_post_delete_bm25", "n10_pagerank_shuffle",
-    "st30_stream_video_match", "st31_stream_positional_add",
-    "st22_stream_media_curation", "t44_post_delete_phrase",
-    "c31_curation_add",
-    // round 18
-    "c32_curation_delete", "c33_post_delete_curation",
-    "m11_audio_post_delete", "m12_video_post_delete",
-    "m13_audio_delete_report", "m14_video_delete_report",
-    "st32_stream_bm25_tombstone", "st33_stream_phrase_tombstone")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val out = args.headOption.getOrElse("PLANS.md")
     val spark = Sessions.local("graft-plans")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
-    sb.append(s"Generated by `graft.tools.DumpPlans` against `$sfDir`.\n")
-    headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
+    val plans = Harness.each("plans", spark) { (_, fn) =>
+      fn(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
-    }
-    Files.writeString(Paths.get(out), sb.toString)
+        // bloom-filter literals print as megabytes of hex — squash runs
+        // (the plan SHAPE is the evidence)
+        .replaceAll("0x[0-9A-Fa-f]{64}[0-9A-Fa-f]*", "0x<bloom-literal-squashed>")
+    }.toList
+    val sections = plans.collect { case (name, Some(plan)) => s"\n## $name\n\n```\n$plan```\n" }
+    Files.writeString(Paths.get(out),
+      "# PLANS — formatted physical plans of the registry queries\n\n" +
+      s"Generated by `graft.tools.DumpPlans` against `$sfDir`.\n" + sections.mkString)
     println(s"PLANS written to $out")
     spark.stop()
+    val failed = plans.collect { case (name, None) => name }
+    if (failed.nonEmpty) {
+      System.err.println(s"[plans] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

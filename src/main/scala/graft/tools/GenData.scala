@@ -251,11 +251,7 @@ object GenData {
     val outDir = args(0)
     val sf = args.lift(1).map(_.toDouble).getOrElse(1.0)
     val adv = args.lift(2).contains("adv")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-gendata"), cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("graft-gendata", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
 
     def sz(base: Long): Long = math.max(1L, (base * sf).toLong)
     val nCust = sz(150000); val nSupp = sz(10000); val nPart = sz(200000)

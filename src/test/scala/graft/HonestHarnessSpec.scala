@@ -30,4 +30,30 @@ class HonestHarnessSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(out, "bad")))
     assert(spark.read.parquet(s"$out/good").count() == 3)
   }
+
+  test("the run loop drops a query's loop checkpoints and leaves the log level as it was") {
+    val loggers = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
+    def rddLevel = loggers.getLogger("org.apache.spark.rdd.MapPartitionsRDD").getLevel
+    val levelBefore = rddLevel
+    var during = 0
+    val queries: Seq[(String, Harness.Query)] = Seq("loop" -> { (s, _) =>
+      val df = graft.ops.Iterate.materialize(s.range(100).toDF())
+      during = s.sparkContext.getPersistentRDDs.size
+      df
+    })
+    val results = Harness.each("test", spark, queries)((_, fn) => fn(spark, sfDir).count()).toList
+    assert(results == List("loop" -> Some(100L)))
+    assert(during > 0)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(rddLevel == levelBefore)
+  }
+
+  test("the run loop's query set: all in name order, a subset, or an error for an unknown name") {
+    val all = Harness.selected(None).map(_._1)
+    assert(all == SparkEntry.queries.keys.toSeq.sorted)
+    assert(Harness.selected(Some("w1_top_orders,q1_pricing")).map(_._1) == Seq("q1_pricing", "w1_top_orders"))
+    val e = intercept[IllegalArgumentException](Harness.selected(Some("q1_pricing,q1_pricnig")))
+    assert(e.getMessage.contains("q1_pricnig"))
+  }
 }

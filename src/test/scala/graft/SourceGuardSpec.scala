@@ -5,8 +5,10 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 /** Keeps the single primitives single: session conf is mutated only inside
-  * [[Sessions.withConf]], the core count is read only by [[Sizing]], and
-  * fixture dirs are named only by [[graft.ops.Fixtures]]. */
+  * [[Sessions.withConf]], the core count is read only by [[Sizing]],
+  * fixture dirs are named only by [[graft.ops.Fixtures]], sessions are
+  * built only by [[Sessions]], and leaked blocks are swept only by the
+  * run loop [[Harness.each]]. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -47,6 +49,19 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     val bad = hits("graft_fixtures", (p, _, _) => p.endsWith("graft/ops/Fixtures.scala")) ++
       Seq("Integer.toHexString(d.hashCode)", "java.io.tmpdir", "_mem_")
         .flatMap(hits(_, (p, _, _) => !p.endsWith("graft/SparkEntry.scala")))
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  test("SparkSession.builder appears only in Sessions; getPersistentRDDs only in the run loop") {
+    def comment(l: String) = { val t = l.trim; t.startsWith("*") || t.startsWith("//") }
+    def inEach(p: Path, lines: IndexedSeq[String], i: Int): Boolean =
+      p.endsWith("graft/Harness.scala") && {
+        val start = lines.lastIndexWhere(_.trim.startsWith("def "), i)
+        start >= 0 && lines(start).contains("def each")
+      }
+    val bad = hits("SparkSession.builder", (p, lines, i) =>
+      p.endsWith("graft/Sessions.scala") || comment(lines(i))) ++
+      hits("getPersistentRDDs", inEach)
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 }

@@ -2,6 +2,7 @@ package graft.etl
 
 import graft.SparkSpec
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** S1–S4, U1: file/dir CSV ingestion semantics
   * (reference: /root/reference/src/ingest.py, api.py:34-51). */
@@ -90,4 +91,25 @@ class IngestSpec extends SparkSpec {
     assert(rows.head.getLong(2) == 10L)
     assert(Ingest.listCsvFiles(spark, "/tmp/graft_nope").count() == 0)
   }
+
+  test("S2 strict: the hidden-file shim leaves nothing behind once its JVM exits") {
+    val d = tmpDir("hiddenshim")
+    write(d, ".h.csv", "x\n1\n")
+    val childTmp = tmpDir("hiddenshim_tmp")
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val child = new ProcessBuilder(javaBin, s"-Djava.io.tmpdir=$childTmp",
+      "-cp", System.getProperty("java.class.path"),
+      "graft.etl.HiddenShimMain", d.resolve(".h.csv").toString)
+      .redirectErrorStream(true).start()
+    val out = new String(child.getInputStream.readAllBytes()).trim
+    assert(child.waitFor() == 0, out)
+    assert(out.linesIterator.exists(l => l.startsWith(childTmp.toString) && l.endsWith("unhidden.csv")), out)
+    val left = Files.list(childTmp).iterator().asScala.toList
+    assert(left.isEmpty, left.mkString(", "))
+  }
+}
+
+/** Builds the hidden-file shim for `args(0)`, prints its path and exits. */
+object HiddenShimMain {
+  def main(args: Array[String]): Unit = println(Ingest.visible(args(0)))
 }

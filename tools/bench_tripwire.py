@@ -6,7 +6,9 @@ Usage: python3 tools/bench_tripwire.py [bench_json] [mins_json]
 
 Compares each query's time in a single bench run against the committed
 quiet-protocol minimums and ALARMS at >1.5x for non-iterative rows.
-Exit code 1 when any alarm fires, so the round close can gate on it.
+A query that threw has no time; the bench lists it under "failed", and
+the tripwire names it. Exit code 1 when any alarm fires or any query
+failed, so the round close can gate on it.
 
 Three row classes:
 - alarmed: >1.5x the committed min AND above the absolute noise floor
@@ -80,6 +82,7 @@ FLOOR_S = 0.25
 def main(bench_path="BENCH_LOCAL.json", mins_path="BENCH_MINS.json"):
     doc = json.load(open(bench_path))
     bench = doc["queries"]
+    failed = doc.get("failed", [])
     mins = json.load(open(mins_path))["queries"]
     # Box-factor normalization (round-15 verdict ask #1): the bench
     # emits a calibration row (8 tiny jobs, pre+post) whose quiet min is
@@ -131,17 +134,19 @@ def main(bench_path="BENCH_LOCAL.json", mins_path="BENCH_MINS.json"):
 
     print(f"tripwire: {len(bench)} queries vs {len(mins)} committed mins "
           f"({bench_path} vs {mins_path})")
+    if failed:
+        print(f"FAILED: {len(failed)} queries threw and have no time: {', '.join(failed)}")
     if alarmed:
         print(f"ALARM: {len(alarmed)} non-iterative rows >{THRESH}x the committed min:")
         table(alarmed)
     else:
-        print(f"clean: no non-iterative row exceeds {THRESH}x its committed min")
+        print(f"{'timed rows' if failed else 'clean'}: no non-iterative row exceeds {THRESH}x its committed min")
     if exempt_hot:
         print(f"note: {len(exempt_hot)} ITERATIVE/WARM_STATE rows over {THRESH}x (exempt, re-measure quiet):")
         table(exempt_hot)
     if new:
         print(f"new (no baseline yet): {', '.join(q for q, _ in new)}")
-    return 1 if alarmed else 0
+    return 1 if alarmed or failed else 0
 
 
 if __name__ == "__main__":
