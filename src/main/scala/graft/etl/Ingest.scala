@@ -1,11 +1,21 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions, UnivocityParser}
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.functions.{col, input_file_block_start}
+import org.apache.spark.sql.types.{DataType, NullType, StructType}
 import org.slf4j.LoggerFactory
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import scala.util.{Failure, Success, Try}
+import scala.util.Try
+import scala.util.control.NonFatal
 
 /** CSV ingestion with the reference's file/dir semantics.
   *
@@ -16,13 +26,14 @@ import scala.util.{Failure, Success, Try}
   * missing-column null fill, matching `pd.concat(..., ignore_index=True)`
   * (`/root/reference/src/ingest.py:36`).
   *
-  * Scale notes: schema inference costs an extra pass over the data; callers
-  * on large inputs should pass `schema` to skip it. The per-file driver loop
-  * exists only to reproduce the reference's per-file fault tolerance and
-  * union-by-name; each file is still read as a distributed scan. For a
-  * homogeneous 100 TB directory use [[readCsvDirFast]], which issues ONE
-  * multi-file scan (single source relation, partition-parallel, no
-  * per-file plan nodes).
+  * Scale notes: schema inference and the per-file checks share ONE job over
+  * every file's lines (see [[inferAndCheck]]); callers on large inputs can
+  * pass `schema` to skip it. Each file is then read as its own distributed
+  * scan under its own inferred schema, only to reproduce the reference's
+  * per-file dtypes, fault tolerance and union-by-name. For a homogeneous
+  * 100 TB directory use [[readCsvDirFast]], which issues ONE multi-file
+  * scan (single source relation, partition-parallel, no per-file plan
+  * nodes).
   */
 object Ingest {
   private val log = LoggerFactory.getLogger(getClass)
@@ -32,17 +43,13 @@ object Ingest {
   private def isCsv(name: String): Boolean = name.toLowerCase.endsWith(".csv")
   private def isHidden(name: String): Boolean = name.startsWith(".")
 
-  private def readOne(spark: SparkSession, file: String,
-                      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    val base = spark.read.option("header", "true")
-    val withSchema = schema match {
-      case Some(s) => base.schema(s)
-      case None    => base.option("inferSchema", "true")
-    }
+  private val ReadOptions = Map("header" -> "true", "inferSchema" -> "true", "mode" -> "FAILFAST")
+
+  /** A read of `path` (already [[visible]]) under `schema`. */
+  private def readOne(spark: SparkSession, path: String, schema: StructType): DataFrame =
     // mode=FAILFAST surfaces malformed rows as errors, matching pandas'
     // ParserError behavior that the tolerant dir scan catches per file.
-    withSchema.option("mode", "FAILFAST").csv(visible(file))
-  }
+    spark.read.options(ReadOptions).schema(schema).csv(path)
 
   /** `file`, or for a hidden one a visible-name symlink to it in a temp
     * dir: Spark's FileIndex silently drops `.`/`_`-prefixed files even
@@ -62,12 +69,13 @@ object Ingest {
     }
   }
 
-  /** Single-file read (ingest.py:12-21): non-CSV suffix is an error. */
+  /** Single-file read (ingest.py:12-21): non-CSV suffix is an error, and
+    * so is a file that fails the checks of [[readCsvDir]]. */
   def readCsvFile(spark: SparkSession, path: String,
-                  schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+                  schema: Option[StructType] = None): DataFrame = {
     if (!isCsv(path))
       throw new IngestException(s"Unsupported file type (expected .csv): $path")
-    readOne(spark, path, schema)
+    readFiles(spark, Seq(path), strict = true, schema, fullValidation = false).head
   }
 
   /** Directory read. `strict=false` = tolerant (src/ingest.py:23-36):
@@ -75,16 +83,17 @@ object Ingest {
     * `strict=true` = API variant (api.py:41-51): hidden files included,
     * first bad file aborts.
     *
-    * Validation depth: by default each file is checked eagerly via header/
-    * schema inference plus a one-row sample parse — a malformed row DEEPER
+    * Validation depth: by default a file is rejected when it cannot be read
+    * or when its first data row's field count differs from its header's
+    * (what a FAILFAST parse of that row rejects) — a malformed row DEEPER
     * in a file surfaces at action time and fails the whole job, unlike the
     * reference's eager pandas parse which skips exactly that file. Pass
-    * `fullValidation=true` for faithful per-file skip semantics (full
-    * FAILFAST parse per file up front — one extra scan per file, the same
-    * work pandas does anyway).
+    * `fullValidation=true` for faithful per-file skip semantics: every
+    * row's field count is checked (every row is parsed under `schema` when
+    * one is given), in the same single job as inference.
     */
   def readCsvDir(spark: SparkSession, dir: String, strict: Boolean = false,
-                 schema: Option[org.apache.spark.sql.types.StructType] = None,
+                 schema: Option[StructType] = None,
                  fullValidation: Boolean = false): DataFrame = {
     val p = Paths.get(dir)
     val entries = Files.list(p).iterator().asScala.toSeq
@@ -94,32 +103,113 @@ object Ingest {
       .sorted
     if (entries.isEmpty)
       throw new IngestException(s"No CSV files found in directory: $dir")
-
-    val frames = entries.flatMap { name =>
-      val full = p.resolve(name).toString
-      // Validate eagerly (schema + a bounded sample parse) so a corrupt
-      // file is caught here, per file, instead of failing the whole job
-      // mid-scan later. The returned frame stays lazy/distributed.
-      Try {
-        val df = readOne(spark, full, schema)
-        df.schema // forces header/inference read
-        // full FAILFAST parse: foreach materializes every column — a bare
-        // count() would let column pruning skip parsing entirely
-        if (fullValidation) df.foreach(_ => ())
-        else if (schema.isEmpty) df.limit(1).collect() // bounded sanity parse
-        df
-      } match {
-        case Success(df) => Some(df)
-        case Failure(e) if !strict =>
-          log.warn(s"Skipping unreadable CSV $full: ${e.getMessage}")
-          None
-        case Failure(e) =>
-          throw new IngestException(s"Failed to read $full: ${e.getMessage}")
-      }
-    }
+    val frames = readFiles(spark, entries.map(p.resolve(_).toString), strict, schema, fullValidation)
     if (frames.isEmpty)
       throw new IngestException(s"No readable CSV files in directory: $dir")
     unionByName(frames)
+  }
+
+  /** One lazy frame per readable file, in order. A file that fails
+    * [[inferAndCheck]] is warned about and skipped, or with `strict`
+    * aborts the read naming it. */
+  private def readFiles(spark: SparkSession, files: Seq[String], strict: Boolean,
+                        schema: Option[StructType], fullValidation: Boolean): Seq[DataFrame] = {
+    val paths = files.map(visible)
+    val checked =
+      if (schema.isDefined && !fullValidation) paths.map(_ => Right(schema.get))
+      else inferAndCheck(spark, paths, schema, fullValidation)
+    files.zip(paths).zip(checked).flatMap {
+      case ((_, path), Right(s)) => Some(readOne(spark, path, s))
+      case ((file, _), Left(why)) if !strict =>
+        log.warn(s"Skipping unreadable CSV $file: $why")
+        None
+      case ((file, _), Left(why)) =>
+        throw new IngestException(s"Failed to read $file: $why")
+    }
+  }
+
+  /** What one task of the inference job saw of its slice of one file. */
+  private final case class Slice(file: Int, types: Array[DataType],
+                                 firstRow: Option[(Long, Int)], ragged: Boolean,
+                                 error: Option[String])
+
+  /** Every file's schema (`schema` when given, else inferred per file
+    * exactly as Spark's `TextInputCSVDataSource.inferFromDataset` infers
+    * it, with the same public `CSVUtils`/`CSVInferSchema` functions), or
+    * why the file is rejected: a read error, a first data row whose field
+    * count differs from the header's, or with `fullValidation` any row
+    * that does. The header lines are read on the driver; everything else
+    * is ONE job over the union of the files' lines, where Spark's own
+    * inference runs two jobs per file and the FAILFAST checks one more. */
+  private def inferAndCheck(spark: SparkSession, paths: Seq[String], schema: Option[StructType],
+                            fullValidation: Boolean): Seq[Either[String, StructType]] = {
+    val session = spark.asInstanceOf[ClassicSession]
+    val conf = session.sessionState.conf
+    val opts = new CSVOptions(ReadOptions, conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val hadoopConf = session.sessionState.newHadoopConf()
+    // each file's header line and the column names Spark makes of it
+    val headers: Seq[Either[String, Option[(String, Array[String])]]] = paths.map { p =>
+      Try(CSVUtils.readHeaderLine(new HadoopPath(p), opts, hadoopConf).map { line =>
+        line -> CSVUtils.makeSafeHeader(new CsvParser(opts.asParserSettings).parseLine(line),
+          conf.caseSensitiveAnalysis, opts)
+      }).toEither.left.map(_.toString)
+    }
+    val lines = headers.zipWithIndex.collect { case (Right(Some((line, names))), i) =>
+      sliceJob(spark, paths(i), i, line, names.length, opts, schema, fullValidation)
+    }
+    val slices = if (lines.isEmpty) Map.empty[Int, Seq[Slice]] else
+      SQLExecution.withSQLConfPropagated(session)(spark.sparkContext.union(lines).collect()).toSeq.groupBy(_.file)
+    val infer = new CSVInferSchema(opts)
+    headers.zipWithIndex.map {
+      case (Left(error), _) => Left(error)
+      case (Right(None), _) => Right(schema.getOrElse(new StructType())) // no header: no columns
+      case (Right(Some((_, header))), i) =>
+        val seen = slices.getOrElse(i, Nil)
+        val firstWidth = seen.flatMap(_.firstRow).minByOption(_._1).map(_._2)
+        seen.flatMap(_.error).headOption.map(Left(_))
+          .orElse(firstWidth.filter(w => schema.isEmpty && w != header.length).map(w =>
+            Left(s"first data row has $w fields, header has ${header.length}")))
+          .orElse(seen.find(_.ragged).map(_ => Left("malformed data row")))
+          .getOrElse(Right(schema.getOrElse(StructType(infer.toStructFields(
+            seen.map(_.types).foldLeft(Array.fill[DataType](header.length)(NullType))(infer.mergeRowTypes),
+            header)))))
+    }
+  }
+
+  /** The tasks of [[inferAndCheck]] for file `file` at `path`, one [[Slice]]
+    * per split. A method of its own, so the task closure captures only its
+    * arguments (a closure inside a pattern-matching function would capture
+    * the session along with it). */
+  private def sliceJob(spark: SparkSession, path: String, file: Int, header: String, width: Int,
+                       opts: CSVOptions, schema: Option[StructType],
+                       fullValidation: Boolean): RDD[Slice] =
+    spark.read.text(path).select(input_file_block_start(), col("value")).rdd
+      .mapPartitions(rows => Iterator(scanSlice(file, header, width, rows, opts, schema, fullValidation)))
+
+  /** One task of [[inferAndCheck]]: `rows` are (block start, line) of one
+    * split of file `file`. Errors are caught here so they stay tied to
+    * their file instead of failing the job. */
+  private def scanSlice(file: Int, header: String, width: Int, rows: Iterator[Row], opts: CSVOptions,
+                        schema: Option[StructType], fullValidation: Boolean): Slice = {
+    val tokenizer = new CsvParser(opts.asParserSettings)
+    val infer = new CSVInferSchema(opts)
+    val parser = schema.filter(_ => fullValidation).map(new UnivocityParser(_, opts))
+    var types = Array.fill[DataType](width)(NullType)
+    var firstRow = Option.empty[(Long, Int)]
+    var ragged = false
+    var start = -1L
+    val error = try {
+      val lines = rows.map { r => start = r.getLong(0); r.getString(1) }
+      CSVUtils.filterHeaderLine(CSVUtils.filterCommentAndEmpty(lines, opts), header, opts).foreach { line =>
+        val tokens = tokenizer.parseLine(line)
+        if (firstRow.isEmpty) firstRow = Some(start -> tokens.length)
+        if (fullValidation)
+          ragged ||= parser.fold(tokens.length != width)(p => Try(p.parse(line)).isFailure)
+        if (schema.isEmpty) types = infer.inferRowType(types, tokens)
+      }
+      None
+    } catch { case NonFatal(e) => Some(e.toString) }
+    Slice(file, types, firstRow, ragged, error)
   }
 
   /** pd.concat(ignore_index=True) equivalence: align by column name, outer
@@ -130,7 +220,7 @@ object Ingest {
 
   /** Path-kind dispatch (ingest.py:9-40): file vs dir vs missing. */
   def ingest(spark: SparkSession, path: String, strict: Boolean = false,
-             schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+             schema: Option[StructType] = None): DataFrame = {
     val p = Paths.get(path)
     if (Files.isRegularFile(p)) readCsvFile(spark, path, schema)
     else if (Files.isDirectory(p)) readCsvDir(spark, path, strict, schema)
@@ -143,7 +233,7 @@ object Ingest {
     * Spark's own `_`/`.` filter, and `pathGlobFilter` keeps only CSVs.
     */
   def readCsvDirFast(spark: SparkSession, dir: String,
-                     schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+                     schema: Option[StructType] = None): DataFrame = {
     val base = spark.read
       .option("header", "true")
       .option("pathGlobFilter", "*.{csv,CSV}")

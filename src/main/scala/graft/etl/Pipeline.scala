@@ -1,7 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.slf4j.LoggerFactory
 
 /** C1-C4: the reference's 3-stage linear flow, ingest → clean → load
@@ -11,9 +11,9 @@ import org.slf4j.LoggerFactory
   * In Spark the three stages are ONE lazy Catalyst plan until the write:
   * scan + null-filter fuse into a single WholeStageCodegen stage of the
   * write job — no intermediate materialization (unlike the reference's
-  * stage-at-a-time pandas copies). The row counts the reference reports are
-  * extra actions; we cache the cleaned frame once so count + write share
-  * the scan instead of reading the input twice.
+  * stage-at-a-time pandas copies). The row counts the reference reports
+  * ride that same job as observed metrics, so a run is two jobs: ingest's
+  * schema inference and the write.
   */
 object Pipeline {
   private val log = LoggerFactory.getLogger(getClass)
@@ -28,8 +28,7 @@ object Pipeline {
   final case class PipelineResult(
       rowsIngested: Long, rowsCleaned: Long, recordsProcessed: Long)
 
-  /** Run with telemetry (counts). For fire-and-forget loads where the
-    * counts don't matter, use [[runNoCount]] — single job, single pass. */
+  /** Run with telemetry (per-stage row counts). */
   def run(spark: SparkSession, config: PipelineConfig): PipelineResult = {
     // the job group is a thread-local property: label this run's jobs,
     // then hand the caller's thread back with its own group
@@ -42,25 +41,20 @@ object Pipeline {
   }
 
   private def runLabelled(spark: SparkSession, config: PipelineConfig): PipelineResult = {
+    // Both counts are observed by the write job itself. It is one result
+    // stage with no exchange, and Spark merges a result stage's
+    // accumulators once per partition, so a retried task cannot count
+    // its rows twice. The observations are read only once the write has
+    // returned: a failed write throws before anything waits on them.
+    val (ingested, cleaned) = (Observation(), Observation())
     val raw = Ingest.ingest(spark, config.csvPath, config.strict)
-    val cleaned = Clean.dropAnyNull(raw, config.dropNullSubset)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nClean = cleaned.count()
-      log.info(s"Cleaned data: $nClean records remain")
-      Load.replaceParquet(cleaned, config.outputPath)
-      // The raw count is a second input scan — the price of the
-      // reference's per-stage row telemetry (api.py:79-91); callers that
-      // don't need it use runNoCount (single pass).
-      val nRaw = raw.count()
-      log.info(s"Loaded $nRaw records from ${config.csvPath}")
-      PipelineResult(nRaw, nClean, nClean)
-    } finally cleaned.unpersist()
-  }
-
-  /** Single-pass variant: ingest+clean+load as one write job. */
-  def runNoCount(spark: SparkSession, config: PipelineConfig): Unit = {
-    val raw = Ingest.ingest(spark, config.csvPath, config.strict)
-    Load.replaceParquet(Clean.dropAnyNull(raw, config.dropNullSubset), config.outputPath)
+      .observe(ingested, count(lit(1)).as("rows"))
+    val clean = Clean.dropAnyNull(raw, config.dropNullSubset)
+      .observe(cleaned, count(lit(1)).as("rows"))
+    Load.replaceParquet(clean, config.outputPath)
+    val nRaw = ingested.get("rows").asInstanceOf[Long]
+    val nClean = cleaned.get("rows").asInstanceOf[Long]
+    log.info(s"Loaded $nRaw records from ${config.csvPath}; $nClean remain after cleaning")
+    PipelineResult(nRaw, nClean, nClean)
   }
 }

@@ -177,7 +177,7 @@ final class HttpApi(spark: SparkSession, port: Int = 0)(implicit ec: ExecutionCo
     val params = queryParams(ex)
     val df = resolveTable(params)
     sendJson(ex, 200, Json.Obj(
-      "total_records" -> df.count(),
+      "total_records" -> Queries.rowCount(df),
       "columns_count" -> df.schema.size,
       "columns" -> df.schema.fieldNames.toList,
       "table_name" -> params.getOrElse("table_name", "products"),

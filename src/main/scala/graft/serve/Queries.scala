@@ -1,15 +1,24 @@
 package graft.serve
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+
+import scala.util.Using
 
 /** The serving queries of `/root/reference/api.py`: preview (L1), stats
   * (A1+A3), table-exists (M1), schema introspection (M2).
   *
   * Preview compiles to CollectLimitExec — Spark fetches at most `limit`
   * rows from the first non-empty partitions, never a full scan; count is
-  * a partial/final count aggregate with no row movement beyond one long
-  * per partition. Both shapes are cluster-safe at any data size.
+  * read from parquet footers on the driver ([[rowCount]]), else a
+  * partial/final count aggregate with no row movement beyond one long per
+  * partition. Both shapes are cluster-safe at any data size.
   */
 object Queries {
   final class TableNotFound(t: String)
@@ -40,7 +49,28 @@ object Queries {
                               columns: Seq[String], tableName: String)
   def stats(spark: SparkSession, table: String): TableStats = {
     val df = resolve(spark, table)
-    TableStats(df.count(), df.schema.size, df.schema.fieldNames.toSeq, table)
+    TableStats(rowCount(df), df.schema.size, df.schema.fieldNames.toSeq, table)
+  }
+
+  /** `df.count()`, except that a bare scan of parquet files is counted from
+    * the files' footers on the driver. A footer holds its file's row count,
+    * so no Spark job runs: a stats read then never waits for task slots,
+    * which a pipeline run beside it (`Runs`) can hold all of. Past Spark's
+    * own limit for driver-side file work
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`, 32 files)
+    * the count stays a distributed job. */
+  def rowCount(df: DataFrame): Long = {
+    val state = df.asInstanceOf[ClassicDataset[_]].sparkSession.sessionState
+    df.queryExecution.optimizedPlan match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
+            fs.location.inputFiles.length <= state.conf.parallelPartitionDiscoveryThreshold =>
+        val conf = state.newHadoopConf()
+        fs.location.inputFiles.iterator.map { f =>
+          Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf)))(_.getRecordCount)
+        }.sum
+      case _ => df.count()
+    }
   }
 
   /** Stats as a one-row DataFrame (oracle-friendly shape). */

@@ -63,6 +63,16 @@ class IngestSpec extends SparkSpec {
     assert(df.count() == 2) // only good.csv survived
   }
 
+  test("S2 fullValidation with a given schema: a value that does not parse skips that file") {
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
+    val d = tmpDir("s2schema")
+    write(d, "good.csv", "x,y\n1,a\n2,b\n")
+    write(d, "bad.csv", "x,y\n3,c\nnot-a-number,d\n")
+    val schema = new StructType().add("x", IntegerType).add("y", StringType)
+    val df = Ingest.readCsvDir(spark, d.toString, schema = Some(schema), fullValidation = true)
+    assert(df.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
+  }
+
   test("U1: union-by-name aligns heterogeneous schemas with null fill") {
     val d = tmpDir("u1")
     write(d, "a.csv", "id,name\n1,x\n")
@@ -72,6 +82,91 @@ class IngestSpec extends SparkSpec {
     assert(df.count() == 2)
     val row2 = df.filter(df("id") === 2).collect().head
     assert(row2.isNullAt(row2.fieldIndex("name")))
+  }
+
+  test("S2: a file whose first data row has extra fields is skipped; strict aborts naming it") {
+    val d = tmpDir("s2firstrow")
+    write(d, "a.csv", "x,y\n1,a\n2,b\n")
+    write(d, "bad.csv", "x,y\n3,c,EXTRA\n4,d\n")
+    write(d, "c.csv", "x,y\n5,e\n")
+    val df = Ingest.readCsvDir(spark, d.toString)
+    assert(df.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 5))
+    val e = intercept[Ingest.IngestException] {
+      Ingest.readCsvDir(spark, d.toString, strict = true)
+    }
+    assert(e.getMessage.contains("bad.csv"), e.getMessage)
+  }
+
+  test("S2: dtypes are inferred per file, then widened by the union") {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val num = tmpDir("s2num")
+    write(num, "a.csv", "x\n1\n2\n")
+    write(num, "b.csv", "x\n1.5\n2.25\n")
+    val dn = Ingest.readCsvDir(spark, num.toString)
+    assert(dn.schema("x").dataType == DoubleType)
+    assert(dn.collect().map(_.getDouble(0)).sorted.toSeq == Seq(1.0, 1.5, 2.0, 2.25))
+    // Characterization: ANSI union widening takes int ∪ string to bigint
+    // (not string, as pd.concat's object column would), so the words fail
+    // their cast when the frame is read.
+    val mixed = tmpDir("s2mixed")
+    write(mixed, "a.csv", "x\n1\n2\n")
+    write(mixed, "b.csv", "x\nfoo\nbar\n")
+    val dm = Ingest.readCsvDir(spark, mixed.toString)
+    assert(dm.schema("x").dataType == LongType)
+    val e = intercept[Exception](dm.collect())
+    assert(e.getMessage.contains("CAST_INVALID_INPUT"), e.getMessage)
+  }
+
+  test("S2: a header-only file adds its columns and no rows") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val d = tmpDir("s2headeronly")
+    write(d, "a.csv", "id,name\n1,x\n2,y\n")
+    write(d, "h.csv", "id,extra\n")
+    val df = Ingest.readCsvDir(spark, d.toString)
+    assert(df.columns.toSeq == Seq("id", "name", "extra"))
+    // the header-only file's columns infer as string; id widens with a.csv's int
+    assert(df.schema("id").dataType == LongType)
+    assert(df.schema("extra").dataType == StringType)
+    assert(df.count() == 2)
+    assert(df.filter(df("extra").isNotNull).count() == 0)
+  }
+
+  test("S2: a 0-byte CSV file reads as no columns and no rows") {
+    val d = tmpDir("s2zero")
+    write(d, "a.csv", "x\n1\n")
+    write(d, "empty.csv", "")
+    val df = Ingest.readCsvDir(spark, d.toString)
+    assert(df.columns.toSeq == Seq("x"))
+    assert(df.collect().map(_.getInt(0)).toSeq == Seq(1))
+    val only = tmpDir("s2zeroonly")
+    write(only, "empty.csv", "")
+    for (alone <- Seq(Ingest.readCsvDir(spark, only.toString, strict = true),
+                      Ingest.readCsvFile(spark, only.resolve("empty.csv").toString))) {
+      assert(alone.columns.isEmpty)
+      assert(alone.collect().isEmpty)
+    }
+  }
+
+  test("S2: the checks and the dtypes hold when each file is read in many splits") {
+    import org.apache.spark.sql.functions.sum
+    import org.apache.spark.sql.types.DoubleType
+    val d = tmpDir("s2splits")
+    val rows = (1 to 200).map(i => s"$i,v$i")
+    write(d, "a.csv", ("x,y" +: rows :+ "0.5,last").mkString("", "\n", "\n"))
+    write(d, "b.csv", ("x,y" +: "1,a,EXTRA" +: rows).mkString("", "\n", "\n"))
+    write(d, "c.csv", ("x,y" +: (rows.take(100) ++ ("7,deep,EXTRA" +: rows.drop(100)))).mkString("", "\n", "\n"))
+    def kept(df: org.apache.spark.sql.DataFrame) = df.inputFiles.map(_.split('/').last).sorted.toSeq
+    graft.Sessions.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "256",
+                            "spark.sql.files.openCostInBytes" -> "0") {
+      assert(spark.read.text(d.resolve("a.csv").toString).rdd.getNumPartitions > 4)
+      // the first data row of b.csv is rejected; c.csv's bad row is deeper
+      val df = Ingest.readCsvDir(spark, d.toString)
+      assert(kept(df) == Seq("a.csv", "c.csv"))
+      assert(df.schema("x").dataType == DoubleType)
+      val full = Ingest.readCsvDir(spark, d.toString, fullValidation = true)
+      assert(kept(full) == Seq("a.csv"))
+      assert(full.agg(sum("x")).head.getDouble(0) == 20100.5)
+    }
   }
 
   test("S2 fast path: one multi-file scan reads all CSVs in dir") {

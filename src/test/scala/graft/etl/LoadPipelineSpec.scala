@@ -103,6 +103,47 @@ class LoadPipelineSpec extends SparkSpec {
     } finally sc.clearJobGroup()
   }
 
+  test("C1: Pipeline.run takes at most 2 jobs, whatever the number of input files") {
+    def jobsFor(files: Int): Int = {
+      val d = tmpDir(s"c1jobs$files")
+      val in = Files.createDirectory(d.resolve("in"))
+      for (i <- 0 until files)
+        Files.writeString(in.resolve(f"part$i%02d.csv"), s"id,v\n${2 * i},a\n${2 * i + 1},\n")
+      val config = Pipeline.PipelineConfig(csvPath = in.toString, outputPath = d.resolve("out").toString)
+      var res: Pipeline.PipelineResult = null
+      val n = jobsInGroup("graft-pipeline") { res = Pipeline.run(spark, config) }
+      assert(res == Pipeline.PipelineResult(2L * files, files.toLong, files.toLong))
+      n
+    }
+    val (three, eight) = (jobsFor(3), jobsFor(8))
+    assert(three == eight, s"3 files: $three jobs, 8 files: $eight jobs")
+    assert(eight <= 2, s"$eight jobs")
+  }
+
+  test("C1: a failing write fails the run at once and hands the caller's group back") {
+    val d = tmpDir("c1fail")
+    Files.writeString(d.resolve("in.csv"), "id,v\n1,a\n")
+    val blocker = Files.writeString(d.resolve("out"), "a regular file, not a directory")
+    val config = Pipeline.PipelineConfig(
+      csvPath = d.resolve("in.csv").toString, outputPath = blocker.resolve("t").toString)
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "the caller's own jobs")
+    try {
+      val t0 = System.nanoTime()
+      intercept[Exception](Pipeline.run(spark, config))
+      assert((System.nanoTime() - t0) / 1e9 < 30)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+    } finally sc.clearJobGroup()
+    val reg = new graft.serve.Runs.Registry(spark)(scala.concurrent.ExecutionContext.global)
+    val rec = reg.start(config)
+    val deadline = System.currentTimeMillis() + 30000
+    while (reg.get(rec.runId).get.endTime.isEmpty && System.currentTimeMillis() < deadline)
+      Thread.sleep(100)
+    val cur = reg.get(rec.runId).get
+    assert(cur.status == "failed", s"run ended as $cur")
+    assert(cur.errorMessage.exists(_.nonEmpty), s"run ended as $cur")
+  }
+
   test("C1 quirk: all-null column ends with 0 rows (shipped-data parity)") {
     val d = tmpDir("c1q")
     Files.writeString(d.resolve("in.csv"), "id,msg\n1,\n2,\n")

@@ -31,6 +31,26 @@ class ServeSpec extends SparkSpec {
     }
   }
 
+  test("A1 row count: a bare parquet scan is counted from its footers, with no job") {
+    import org.apache.spark.sql.functions.col
+    val d = tmpDir("rowcount")
+    val flat = d.resolve("flat").toString
+    spark.range(0, 1000, 1, 5).toDF("id").write.parquet(flat)
+    val parts = d.resolve("parts").toString
+    spark.range(0, 300, 1, 3).withColumn("k", col("id") % 3).write.partitionBy("k").parquet(parts)
+    val sc = spark.sparkContext
+    val frames = Seq(flat, parts).map(spark.read.parquet(_)) // reading the schema is a job of its own
+    var counts = Seq.empty[Long]
+    val jobs = jobsInGroup("rowcount-probe") {
+      sc.setJobGroup("rowcount-probe", "row count")
+      try counts = frames.map(Queries.rowCount) finally sc.clearJobGroup()
+    }
+    assert(counts == Seq(1000L, 300L))
+    assert(jobs == 0, s"$jobs jobs")
+    // anything but a bare scan is counted by Spark
+    assert(Queries.rowCount(spark.read.parquet(flat).filter(col("id") < 10)) == 10)
+  }
+
   test("M1: unknown table raises TableNotFound (404 shape)") {
     intercept[Queries.TableNotFound] { Queries.preview(spark, "no_such_table") }
   }

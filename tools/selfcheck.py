@@ -3,10 +3,10 @@
 
 Usage: python3 tools/selfcheck.py <sfDir> <verifyOutDir> [query,query,...]
 
-The optional 3rd arg restricts the check to those queries (matching
-graft.Verify's subset arg — Verify always dumps the FULL oracle map, so
-a subset re-run needs this to avoid "no spark output" noise for the
-queries it didn't run).
+The optional 3rd arg restricts the check to those queries (pass the same
+names as SPARK_GRAFT_ONLY gave graft.Verify — Verify always dumps the FULL
+oracle map, so a subset re-run needs this to avoid "no spark output" noise
+for the queries it didn't run).
 
 For each query in <verifyOutDir>/oracle_sql.json: run the SQL in DuckDB
 (tables = parquet files in sfDir), read the spark result parquet, sort
