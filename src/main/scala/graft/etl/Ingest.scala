@@ -3,12 +3,11 @@ package graft.etl
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions, UnivocityParser}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
-import org.apache.spark.sql.functions.{col, input_file_block_start}
 import org.apache.spark.sql.types.{DataType, NullType, StructType}
 import org.slf4j.LoggerFactory
 
@@ -83,14 +82,13 @@ object Ingest {
     * `strict=true` = API variant (api.py:41-51): hidden files included,
     * first bad file aborts.
     *
-    * Validation depth: by default a file is rejected when it cannot be read
-    * or when its first data row's field count differs from its header's
-    * (what a FAILFAST parse of that row rejects) — a malformed row DEEPER
-    * in a file surfaces at action time and fails the whole job, unlike the
-    * reference's eager pandas parse which skips exactly that file. Pass
-    * `fullValidation=true` for faithful per-file skip semantics: every
-    * row's field count is checked (every row is parsed under `schema` when
-    * one is given), in the same single job as inference.
+    * Validation: a file is rejected when it cannot be read or when any
+    * data row's field count differs from its header's: the row a FAILFAST
+    * parse would reject when the frame is read. The reference's eager
+    * pandas parse likewise skips a file with an over-long row (a short one
+    * it pads with NaN). The check runs in the same single job as schema
+    * inference. With a given `schema` no job runs unless
+    * `fullValidation=true`, which then parses every row under `schema`.
     */
   def readCsvDir(spark: SparkSession, dir: String, strict: Boolean = false,
                  schema: Option[StructType] = None,
@@ -117,7 +115,7 @@ object Ingest {
     val paths = files.map(visible)
     val checked =
       if (schema.isDefined && !fullValidation) paths.map(_ => Right(schema.get))
-      else inferAndCheck(spark, paths, schema, fullValidation)
+      else inferAndCheck(spark, paths, schema)
     files.zip(paths).zip(checked).flatMap {
       case ((_, path), Right(s)) => Some(readOne(spark, path, s))
       case ((file, _), Left(why)) if !strict =>
@@ -128,21 +126,23 @@ object Ingest {
     }
   }
 
-  /** What one task of the inference job saw of its slice of one file. */
+  /** What one task of the inference job saw of its slice of one file:
+    * the types its rows infer, why its first rejected row is rejected
+    * (if one is), and any read error. */
   private final case class Slice(file: Int, types: Array[DataType],
-                                 firstRow: Option[(Long, Int)], ragged: Boolean,
-                                 error: Option[String])
+                                 badRow: Option[String], error: Option[String])
 
   /** Every file's schema (`schema` when given, else inferred per file
     * exactly as Spark's `TextInputCSVDataSource.inferFromDataset` infers
-    * it, with the same public `CSVUtils`/`CSVInferSchema` functions), or
-    * why the file is rejected: a read error, a first data row whose field
-    * count differs from the header's, or with `fullValidation` any row
-    * that does. The header lines are read on the driver; everything else
-    * is ONE job over the union of the files' lines, where Spark's own
-    * inference runs two jobs per file and the FAILFAST checks one more. */
-  private def inferAndCheck(spark: SparkSession, paths: Seq[String], schema: Option[StructType],
-                            fullValidation: Boolean): Seq[Either[String, StructType]] = {
+    * it, with the same `CSVUtils`/`CSVInferSchema` functions — Spark
+    * internals, not a stable API; IngestSpec pins the result against
+    * Spark's own inference), or why the file is rejected: a read error, or
+    * a data row whose field count differs from the header's (with a given
+    * `schema`: a row that does not parse under it). The header lines are
+    * read on the driver; everything else is ONE job over the union of the
+    * files' lines, where Spark's own inference runs two jobs per file. */
+  private def inferAndCheck(spark: SparkSession, paths: Seq[String],
+                            schema: Option[StructType]): Seq[Either[String, StructType]] = {
     val session = spark.asInstanceOf[ClassicSession]
     val conf = session.sessionState.conf
     val opts = new CSVOptions(ReadOptions, conf.csvColumnPruning, conf.sessionLocalTimeZone)
@@ -155,7 +155,7 @@ object Ingest {
       }).toEither.left.map(_.toString)
     }
     val lines = headers.zipWithIndex.collect { case (Right(Some((line, names))), i) =>
-      sliceJob(spark, paths(i), i, line, names.length, opts, schema, fullValidation)
+      sliceJob(spark, paths(i), i, line, names.length, opts, schema)
     }
     val slices = if (lines.isEmpty) Map.empty[Int, Seq[Slice]] else
       SQLExecution.withSQLConfPropagated(session)(spark.sparkContext.union(lines).collect()).toSeq.groupBy(_.file)
@@ -165,11 +165,7 @@ object Ingest {
       case (Right(None), _) => Right(schema.getOrElse(new StructType())) // no header: no columns
       case (Right(Some((_, header))), i) =>
         val seen = slices.getOrElse(i, Nil)
-        val firstWidth = seen.flatMap(_.firstRow).minByOption(_._1).map(_._2)
-        seen.flatMap(_.error).headOption.map(Left(_))
-          .orElse(firstWidth.filter(w => schema.isEmpty && w != header.length).map(w =>
-            Left(s"first data row has $w fields, header has ${header.length}")))
-          .orElse(seen.find(_.ragged).map(_ => Left("malformed data row")))
+        seen.flatMap(s => s.error.orElse(s.badRow)).headOption.map(Left(_))
           .getOrElse(Right(schema.getOrElse(StructType(infer.toStructFields(
             seen.map(_.types).foldLeft(Array.fill[DataType](header.length)(NullType))(infer.mergeRowTypes),
             header)))))
@@ -181,35 +177,39 @@ object Ingest {
     * arguments (a closure inside a pattern-matching function would capture
     * the session along with it). */
   private def sliceJob(spark: SparkSession, path: String, file: Int, header: String, width: Int,
-                       opts: CSVOptions, schema: Option[StructType],
-                       fullValidation: Boolean): RDD[Slice] =
-    spark.read.text(path).select(input_file_block_start(), col("value")).rdd
-      .mapPartitions(rows => Iterator(scanSlice(file, header, width, rows, opts, schema, fullValidation)))
+                       opts: CSVOptions, parseUnder: Option[StructType]): RDD[Slice] =
+    spark.read.text(path).rdd
+      .mapPartitions(rows => Iterator(scanSlice(file, header, width, rows.map(_.getString(0)), opts, parseUnder)))
 
-  /** One task of [[inferAndCheck]]: `rows` are (block start, line) of one
-    * split of file `file`. Errors are caught here so they stay tied to
-    * their file instead of failing the job. */
-  private def scanSlice(file: Int, header: String, width: Int, rows: Iterator[Row], opts: CSVOptions,
-                        schema: Option[StructType], fullValidation: Boolean): Slice = {
+  /** One task of [[inferAndCheck]]: `lines` are one split of file `file`.
+    * Every data row's field count is checked against the header's `width`
+    * (a mismatch is what a FAILFAST parse rejects), or with `parseUnder`
+    * every row is parsed under that schema; without `parseUnder` the rows'
+    * types are inferred. Errors are caught here so they stay tied to their
+    * file instead of failing the job. */
+  private def scanSlice(file: Int, header: String, width: Int, lines: Iterator[String], opts: CSVOptions,
+                        parseUnder: Option[StructType]): Slice = {
     val tokenizer = new CsvParser(opts.asParserSettings)
     val infer = new CSVInferSchema(opts)
-    val parser = schema.filter(_ => fullValidation).map(new UnivocityParser(_, opts))
+    val parser = parseUnder.map(new UnivocityParser(_, opts))
     var types = Array.fill[DataType](width)(NullType)
-    var firstRow = Option.empty[(Long, Int)]
-    var ragged = false
-    var start = -1L
+    var badRow = Option.empty[String]
     val error = try {
-      val lines = rows.map { r => start = r.getLong(0); r.getString(1) }
       CSVUtils.filterHeaderLine(CSVUtils.filterCommentAndEmpty(lines, opts), header, opts).foreach { line =>
-        val tokens = tokenizer.parseLine(line)
-        if (firstRow.isEmpty) firstRow = Some(start -> tokens.length)
-        if (fullValidation)
-          ragged ||= parser.fold(tokens.length != width)(p => Try(p.parse(line)).isFailure)
-        if (schema.isEmpty) types = infer.inferRowType(types, tokens)
+        parser match {
+          case Some(p) =>
+            if (badRow.isEmpty && Try(p.parse(line)).isFailure)
+              badRow = Some("a data row does not parse under the given schema")
+          case None =>
+            val tokens = tokenizer.parseLine(line)
+            if (badRow.isEmpty && tokens.length != width)
+              badRow = Some(s"a data row has ${tokens.length} fields, header has $width")
+            types = infer.inferRowType(types, tokens)
+        }
       }
       None
     } catch { case NonFatal(e) => Some(e.toString) }
-    Slice(file, types, firstRow, ragged, error)
+    Slice(file, types, badRow, error)
   }
 
   /** pd.concat(ignore_index=True) equivalence: align by column name, outer

@@ -1,7 +1,13 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
+
+import java.io.IOException
+import java.util.UUID
+import scala.util.Try
+import scala.util.control.NonFatal
 
 /** Sinks. The reference's load is a SQLite full-replace
   * (`/root/reference/src/load.py:5-8`): drop+recreate table, schema from
@@ -22,9 +28,37 @@ object Load {
   def replaceTable(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Overwrite).saveAsTable(quote(table))
 
-  /** K1 parquet-path flavor: replace a parquet directory "table". */
-  def replaceParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
+  /** K1 parquet-path flavor: replace a parquet directory "table". The frame
+    * is written to a hidden sibling first and swapped in by rename only
+    * once the write has succeeded, so a write that fails (a row that fails
+    * its cast, a full disk) leaves the old table as it was — like the
+    * reference, whose eager parse raises before `to_sql(replace)` drops
+    * anything. A plain Overwrite deletes the old files before its job
+    * runs. */
+  def replaceParquet(df: DataFrame, path: String): Unit = {
+    val target = new Path(path)
+    val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val dest = fs.makeQualified(target)
+    def sibling(kind: String) = new Path(dest.getParent, s".${dest.getName}.$kind-${UUID.randomUUID()}")
+    val staged = sibling("staged")
+    try df.write.parquet(staged.toString)
+    catch { case NonFatal(e) => Try(fs.delete(staged, true)); throw e }
+    SwapLock.synchronized {
+      val old = sibling("replaced")
+      if (fs.exists(dest) && !fs.rename(dest, old))
+        throw new IOException(s"could not move $dest aside to replace it")
+      if (!fs.rename(staged, dest)) {
+        if (fs.exists(old)) fs.rename(old, dest)
+        Try(fs.delete(staged, true))
+        throw new IOException(s"could not move the new table into $dest")
+      }
+      fs.delete(old, true)
+    }
+  }
+
+  /** Serializes the renames of [[replaceParquet]]s in this JVM, so two
+    * loads of the same path cannot interleave them. */
+  private object SwapLock
 
   /** Keyed upsert (MERGE): rows of `updates` replace same-key rows of
     * `base`; unmatched base rows survive; new keys insert. Both sides

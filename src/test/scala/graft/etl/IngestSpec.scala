@@ -159,14 +159,29 @@ class IngestSpec extends SparkSpec {
     graft.Sessions.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "256",
                             "spark.sql.files.openCostInBytes" -> "0") {
       assert(spark.read.text(d.resolve("a.csv").toString).rdd.getNumPartitions > 4)
-      // the first data row of b.csv is rejected; c.csv's bad row is deeper
+      // b.csv's first data row is rejected, and c.csv's deeper one too
       val df = Ingest.readCsvDir(spark, d.toString)
-      assert(kept(df) == Seq("a.csv", "c.csv"))
+      assert(kept(df) == Seq("a.csv"))
       assert(df.schema("x").dataType == DoubleType)
-      val full = Ingest.readCsvDir(spark, d.toString, fullValidation = true)
-      assert(kept(full) == Seq("a.csv"))
-      assert(full.agg(sum("x")).head.getDouble(0) == 20100.5)
+      assert(df.agg(sum("x")).head.getDouble(0) == 20100.5)
     }
+  }
+
+  test("S1: the one-job inference gives the schema Spark's own inferSchema gives") {
+    val d = tmpDir("s1types")
+    write(d, "t.csv", Seq(
+      "i,big,d,b,dec,day,ts,nul,q,mixed",
+      "1,9000000000,1.5,true,12345678901234567890,2024-01-31,2024-01-31 10:11:12,,\"a, quoted\",1",
+      "2,-3,2e3,FALSE,1,2024-02-29,2024-02-29T23:59:59,,plain,x",
+      "3,,,,,,,,\"\",2.5"
+    ).mkString("", "\n", "\n"))
+    val f = d.resolve("t.csv").toString
+    val ours = Ingest.readCsvFile(spark, f)
+    val sparks = spark.read.option("header", "true").option("inferSchema", "true").csv(f)
+    assert(ours.schema == sparks.schema)
+    assert(ours.collect().toSeq == sparks.collect().toSeq)
+    assert(ours.schema.map(_.dataType.simpleString) ==
+      Seq("int", "bigint", "double", "boolean", "decimal(20,0)", "date", "timestamp", "string", "string", "string"))
   }
 
   test("S2 fast path: one multi-file scan reads all CSVs in dir") {

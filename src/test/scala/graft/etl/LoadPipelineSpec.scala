@@ -2,6 +2,7 @@ package graft.etl
 
 import graft.SparkSpec
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** K1–K3 sinks + C1/C2 pipeline composition
   * (reference: /root/reference/src/load.py, flows/pipeline.py). */
@@ -142,6 +143,32 @@ class LoadPipelineSpec extends SparkSpec {
     val cur = reg.get(rec.runId).get
     assert(cur.status == "failed", s"run ended as $cur")
     assert(cur.errorMessage.exists(_.nonEmpty), s"run ended as $cur")
+  }
+
+  test("C1: a run that fails leaves the table of the last good run as it was") {
+    val d = tmpDir("c1keep")
+    val out = d.resolve("out").toString
+    def run(in: java.nio.file.Path) =
+      Pipeline.run(spark, Pipeline.PipelineConfig(csvPath = in.toString, outputPath = out))
+    def table = spark.read.parquet(out).collect().map(_.getInt(0)).sorted.toSeq
+    val good = Files.writeString(d.resolve("good.csv"), "id,v\n1,a\n2,b\n")
+    assert(run(good).rowsCleaned == 2)
+    // a malformed row past the first data row: rejected at ingest
+    val ragged = Files.writeString(d.resolve("ragged.csv"), "id,v\n3,c\n4,d,EXTRA\n")
+    intercept[Ingest.IngestException](run(ragged))
+    assert(table == Seq(1, 2))
+    // ints in one file and words in the other: the union widens x to
+    // bigint and the words fail their cast inside the write job
+    val mixed = Files.createDirectory(d.resolve("mixed"))
+    Files.writeString(mixed.resolve("a.csv"), "id,v\n5,e\n")
+    Files.writeString(mixed.resolve("b.csv"), "id,v\nsix,f\n")
+    val e = intercept[Exception](run(mixed))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("CAST_INVALID_INPUT")), e.toString)
+    assert(table == Seq(1, 2))
+    // no staged or replaced copy is left beside the table
+    assert(Files.list(d).iterator().asScala.map(_.getFileName.toString).toSeq.sorted ==
+      Seq("good.csv", "mixed", "out", "ragged.csv"))
   }
 
   test("C1 quirk: all-null column ends with 0 rows (shipped-data parity)") {
