@@ -35,13 +35,19 @@ object Load {
     * reference, whose eager parse raises before `to_sql(replace)` drops
     * anything. A plain Overwrite deletes the old files before its job
     * runs. */
-  def replaceParquet(df: DataFrame, path: String): Unit = {
+  def replaceParquet(df: DataFrame, path: String): Unit =
+    replaceDir(df, path)(df.write.parquet(_))
+
+  /** The staged swap behind every directory replace here: `write` fills a
+    * hidden sibling of `path`, which is renamed over `path` only after
+    * `write` returns. */
+  private def replaceDir(df: DataFrame, path: String)(write: String => Unit): Unit = {
     val target = new Path(path)
     val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val dest = fs.makeQualified(target)
     def sibling(kind: String) = new Path(dest.getParent, s".${dest.getName}.$kind-${UUID.randomUUID()}")
     val staged = sibling("staged")
-    try df.write.parquet(staged.toString)
+    try write(staged.toString)
     catch { case NonFatal(e) => Try(fs.delete(staged, true)); throw e }
     SwapLock.synchronized {
       val old = sibling("replaced")
@@ -56,7 +62,7 @@ object Load {
     }
   }
 
-  /** Serializes the renames of [[replaceParquet]]s in this JVM, so two
+  /** Serializes the renames of [[replaceDir]]s in this JVM, so two
     * loads of the same path cannot interleave them. */
   private object SwapLock
 
@@ -91,9 +97,7 @@ object Load {
   def replaceParquetPartitioned(df: DataFrame, path: String,
                                 partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty)
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
+    replaceDir(df, path)(df.write.partitionBy(partitionCols: _*).parquet(_))
   }
 
   /** Z-ordered replace-load: multi-dimensional clustering (`OPTIMIZE
@@ -119,13 +123,13 @@ object Load {
       when(col(mx) > col(mn),
         least(floor((col(v).cast("double") - col(mn)) * 65535.0 / (col(mx) - col(mn))), lit(65535.0)))
         .otherwise(lit(0.0)).cast("long")
-    df.crossJoin(broadcast(mm))
+    val zordered = df.crossJoin(broadcast(mm))
       .withColumn("__z", call_function("zorder64",
         bin16(c1, "__min1", "__max1"), bin16(c2, "__min2", "__max2")))
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__min1", "__max1", "__min2", "__max2", "__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
+    replaceDir(df, path)(zordered.write.parquet(_))
   }
 
   /** Bucketed replace-load: pre-shuffles the table into `buckets` hash
@@ -195,14 +199,9 @@ object Load {
     val shaped =
       if (keys.isEmpty) df.repartition(files)
       else df.repartition(files, keys.map(org.apache.spark.sql.functions.col): _*)
-    shaped.write.mode(SaveMode.Overwrite).parquet(path)
+    replaceDir(df, path)(shaped.write.parquet(_))
     files
   }
-
-  /** K2: the API variant auto-creates parent dirs (api.py:62) — Spark
-    * writers already do; alias kept for contract clarity. */
-  def replaceParquetWithDirs(df: DataFrame, path: String): Unit =
-    replaceParquet(df, path)
 
   /** K3: header CSV write. `singleFile=true` produces ONE plain `.csv`
     * FILE at `path` like `to_csv(index=False)` (api.py:606) — Spark's csv
@@ -212,7 +211,7 @@ object Load {
     */
   def writeCsv(df: DataFrame, path: String, singleFile: Boolean = false): Unit = {
     if (!singleFile) {
-      df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
+      replaceDir(df, path)(df.write.option("header", "true").csv(_))
     } else {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       import scala.jdk.CollectionConverters._

@@ -1098,33 +1098,20 @@ object Analytics {
     * percentile is this account" column a CRM export carries.
     *
     * Scale shape: a global ORDER BY window would sort every customer in
-    * ONE task; instead the ECDF runs over per-VALUE counts with the
-    * c4/ksDrift distributed prefix sum (range exchange on spend,
-    * per-partition cumsums, broadcast offsets), then joins back by
-    * value — the spend totals are decimal-exact doubles, so the value
-    * join is exact. Two shuffles total (custkey agg, spend range).
+    * ONE task; instead the ECDF is a [[Prefix]] sum over per-VALUE
+    * counts, joined back by value — the spend totals are decimal-exact
+    * doubles, so the value join is exact.
     */
   def spendPercentiles(spark: SparkSession, dir: String): DataFrame = {
     val spend = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(exactSum(col("o_totalprice")).as("spend"))
     val perV = spend.groupBy("spend").agg(count(lit(1)).as("c"))
-    val sorted = perV.repartitionByRange(col("spend"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted.groupBy("pid").agg(sum(col("c")).as("pc"))
-      .withColumn("off", coalesce(
-        sum(col("pc")).over(Window.orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("off"))
-    val within = Window.partitionBy(col("pid")).orderBy(col("spend"))
-    val cum = sorted.join(broadcast(offsets), Seq("pid"))
-      .withColumn("cum", col("off") + sum(col("c")).over(within))
-      .select(col("spend"), col("cum"))
-    val total = spend.agg(count(lit(1)).as("n"))
-    spend.join(cum, Seq("spend")).crossJoin(broadcast(total))
+    val cum = Prefix.sums(perV, Nil, Seq(col("spend")), "c" -> col("c"))
+      .select(col("spend"), col("c_cum"), col("c_total"))
+    spend.join(cum, Seq("spend"))
       .select(col("o_custkey"), col("spend"),
-        roundTo(col("cum").cast("double") / col("n").cast("double"), 6).as("cume_dist"))
+        roundTo(col("c_cum").cast("double") / col("c_total").cast("double"), 6).as("cume_dist"))
       .orderBy("o_custkey")
   }
 

@@ -94,10 +94,9 @@ object EventWindows {
     * serving team reads.
     *
     * Scale shape: boundaries aggregate per instant first (map-side
-    * combined), then BOTH running counts ride ONE c4-style distributed
-    * prefix sum over the distinct-instant rows — range exchange,
-    * per-partition cumsums, broadcast offsets; no single-task global
-    * window, and the row count is O(distinct boundaries), not events.
+    * combined), then BOTH running counts ride ONE [[Prefix]] sum over the
+    * distinct-instant rows — no single-task global window, and the row
+    * count is O(distinct boundaries), not events.
     */
   def sessionConcurrency(spark: SparkSession, dir: String,
                          gapMinutes: Int = 30): DataFrame = {
@@ -106,22 +105,10 @@ object EventWindows {
     val pts = s.select(col("s").as("us"), lit(1L).as("cs"), lit(0L).as("ce"))
       .unionAll(s.select(col("e").as("us"), lit(0L).as("cs"), lit(1L).as("ce")))
       .groupBy("us").agg(sum(col("cs")).as("n_starts"), sum(col("ce")).as("n_ends"))
-    val sorted = pts.repartitionByRange(col("us"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val byPid = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sorted.groupBy("pid")
-      .agg(sum(col("n_starts")).as("ps"), sum(col("n_ends")).as("pe"))
-      .withColumn("offs", coalesce(sum(col("ps")).over(byPid), lit(0L)))
-      .withColumn("offe", coalesce(sum(col("pe")).over(byPid), lit(0L)))
-      .select(col("pid"), col("offs"), col("offe"))
-    val within = Window.partitionBy(col("pid")).orderBy(col("us"))
-    sorted.join(broadcast(offsets), Seq("pid"))
-      .withColumn("starts_cum", col("offs") + sum(col("n_starts")).over(within))
-      .withColumn("ends_before",
-        col("offe") + sum(col("n_ends")).over(within) - col("n_ends"))
+    // open at t = starts through t − ends strictly before t
+    Prefix.sums(pts, Nil, Seq(col("us")), "starts" -> col("n_starts"), "ends" -> col("n_ends"))
       .select(col("us"), col("n_starts"), col("n_ends"),
-        (col("starts_cum") - col("ends_before")).as("n_active"))
+        (col("starts_cum") - (col("ends_cum") - col("n_ends"))).as("n_active"))
       .orderBy("us")
   }
 

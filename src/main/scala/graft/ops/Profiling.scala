@@ -293,41 +293,21 @@ object Profiling {
     * side; grow to DECIMAL beyond), and only the final ratio divides.
     *
     * Scale shape: values collapse to the distinct-value count table
-    * first (map-side partial aggregation), then the running counts use
-    * the same DISTRIBUTED PREFIX SUM as c4's packing — range exchange,
-    * per-partition cumsum, broadcast one-row-per-partition offsets —
-    * so no global single-task window anywhere; the argmax is a
-    * TakeOrdered(1). The value domain, not the row count, bounds every
+    * first (map-side partial aggregation), then the running counts and
+    * the sample sizes are one [[Prefix]] sum — no global single-task
+    * window anywhere; the argmax is a TakeOrdered(1). The value domain, not the row count, bounds every
     * post-aggregation stage.
     */
   def ksDrift(df: DataFrame, groupCol: String, valueCol: String,
               groupA: String, groupB: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = df.filter(col(groupCol).isin(groupA, groupB))
       .select(col(valueCol).as("v"),
               when(col(groupCol) === groupA, 1L).otherwise(0L).as("ia"))
-    val totals = s.agg(sum(col("ia")).as("na"), (count(lit(1)) - sum(col("ia"))).as("nb"))
     val perV = s.groupBy(col("v"))
       .agg(sum(col("ia")).as("ca"), (count(lit(1)) - sum(col("ia"))).as("cb"))
-    // distributed prefix sum over distinct values (the c4 discipline):
-    // freeze the range exchange, then per-partition cumsums + broadcast
-    // per-partition offsets
-    val sorted = perV.repartitionByRange(col("v"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val byPid = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sorted.groupBy("pid")
-      .agg(sum(col("ca")).as("pa"), sum(col("cb")).as("pb"))
-      .withColumn("offa", coalesce(sum(col("pa")).over(byPid), lit(0L)))
-      .withColumn("offb", coalesce(sum(col("pb")).over(byPid), lit(0L)))
-      .select("pid", "offa", "offb")
-    val within = Window.partitionBy("pid").orderBy("v")
-    sorted.join(broadcast(offsets), "pid")
-      .withColumn("cuma", col("offa") + sum(col("ca")).over(within))
-      .withColumn("cumb", col("offb") + sum(col("cb")).over(within))
-      .crossJoin(broadcast(totals))
-      .select(col("v"), col("na"), col("nb"),
-              abs(col("cuma") * col("nb") - col("cumb") * col("na")).as("num"))
+    Prefix.sums(perV, Nil, Seq(col("v")), "a" -> col("ca"), "b" -> col("cb"))
+      .select(col("v"), col("a_total").as("na"), col("b_total").as("nb"),
+              abs(col("a_cum") * col("b_total") - col("b_cum") * col("a_total")).as("num"))
       .orderBy(col("num").desc, col("v")).limit(1)
       .select(lit(groupA).as("group_a"), lit(groupB).as("group_b"),
               col("na").as("n_a"), col("nb").as("n_b"),
@@ -370,10 +350,8 @@ object Profiling {
     * so the rank targets are exact integer arithmetic — no FP product
     * deciding a boundary rank differently across engines.
     *
-    * Scale shape: quantiles by rank over per-(group, value) COUNTS with
-    * the c4/ksDrift distributed prefix sum — range exchange on
-    * (group, value), per-partition cumsums, broadcast offsets; no
-    * per-group single-task sort. Bounds are O(groups) rows and broadcast
+    * Scale shape: quantiles by rank over per-(group, value) COUNTS, a
+    * [[Prefix]] sum per group — no per-group single-task sort. Bounds are O(groups) rows and broadcast
     * back for the one-pass clip report. Ties are safe: equal values
     * share a rank range but the bound VALUE is identical whichever
     * instance the target rank lands on, and the clip counts compare
@@ -384,36 +362,24 @@ object Profiling {
                       den: Long = 100L): DataFrame = {
     require(den > 0 && lowNum >= 0 && highNum <= den && lowNum <= highNum,
       "need 0 <= lowNum <= highNum <= den")
-    import org.apache.spark.sql.expressions.Window
     val s = df.select(col(groupCol).as("grp"), col(valueCol).cast("double").as("x"))
       .filter(col("x").isNotNull)
     val perV = s.groupBy("grp", "x").agg(count(lit(1)).as("c"))
-    val sorted = perV.repartitionByRange(col("grp"), col("x"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted.groupBy("pid", "grp").agg(sum(col("c")).as("pc"))
-      .withColumn("off", coalesce(
-        sum(col("pc")).over(Window.partitionBy("grp").orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("grp"), col("off"))
-    val within = Window.partitionBy(col("pid"), col("grp")).orderBy(col("x"))
-    val cum = sorted.join(broadcast(offsets), Seq("pid", "grp"))
-      .withColumn("cum", col("off") + sum(col("c")).over(within))
-    // totals and the clip pass both read the CHECKPOINTED per-value
-    // count table — the former derivations from `perV` / the raw rows
-    // re-scanned and re-aggregated the full input twice more. The
-    // weighted forms are exact: c · decimal(x) sums in decimal, so
-    // c repetitions of x and one c-weighted term are the same rational
-    // number, and the final decimal→double conversion is identical.
-    val totals = sorted.groupBy("grp").agg(sum(col("c")).as("n"))
-    val bounds = cum.join(broadcast(totals), Seq("grp"))
+    // the bounds and the clip pass both read the checkpointed per-value
+    // count table inside `cum`, not the raw rows again. The weighted forms
+    // are exact: c · decimal(x) sums in decimal, so c repetitions of x and
+    // one c-weighted term are the same rational number, and the final
+    // decimal→double conversion is identical.
+    val cum = Prefix.sums(perV, Seq("grp"), Seq(col("x")), "c" -> col("c"))
+      .withColumnRenamed("c_total", "n")
+    val bounds = cum
       .withColumn("lo_t", expr(s"(n * $lowNum + ${den - 1}) div $den"))
       .withColumn("hi_t", expr(s"(n * $highNum + ${den - 1}) div $den"))
       .groupBy("grp", "n")
-      .agg(min(when(col("cum") >= col("lo_t"), col("x"))).as("lo"),
-           min(when(col("cum") >= col("hi_t"), col("x"))).as("hi"))
+      .agg(min(when(col("c_cum") >= col("lo_t"), col("x"))).as("lo"),
+           min(when(col("c_cum") >= col("hi_t"), col("x"))).as("hi"))
     val clipped = greatest(col("lo"), least(col("hi"), col("x")))
-    sorted.join(broadcast(bounds), Seq("grp"))
+    cum.select("grp", "x", "c").join(broadcast(bounds), Seq("grp"))
       .groupBy("grp", "n", "lo", "hi")
       .agg(sum(when(col("x") < col("lo"), col("c")).otherwise(0L)).as("n_clipped_low"),
            sum(when(col("x") > col("hi"), col("c")).otherwise(0L)).as("n_clipped_high"),

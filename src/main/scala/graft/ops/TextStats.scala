@@ -351,14 +351,10 @@ object TextStats {
     * as a prefix-sum comparison. Output: the kept docs with their token
     * count and running total.
     *
-    * Scale shape — the [[packChunks]]/[[shuffleShard]] distributed-rank
-    * discipline per language (a bare PARTITION BY lang window puts each
-    * language in ONE task — the dominant language of a 100 TB corpus is
-    * most of the corpus): range-repartition by (lang, skey, id),
-    * materialized once; per-(partition, lang) token subtotals become a
-    * broadcast offsets table (the only global window runs over that);
-    * each row's running total = partition offset + within-partition
-    * prefix sum. Budgets enter as a literal CASE — no join.
+    * Scale shape: the running total is a [[Prefix]] sum per language (a
+    * bare PARTITION BY lang window puts each language in ONE task — the
+    * dominant language of a 100 TB corpus is most of the corpus). Budgets
+    * enter as a literal CASE — no join.
     */
   def tokenBudgetMix(df: DataFrame, budgets: Map[String, Long],
                      defaultBudget: Long = Long.MaxValue, seed: Long = 42L,
@@ -366,7 +362,6 @@ object TextStats {
                      idCol: String = "doc_id"): DataFrame = {
     require((budgets.values.toSeq :+ defaultBudget).forall(_ >= 0L),
       "budgets must be non-negative")
-    import org.apache.spark.sql.expressions.Window
     val budget = budgets.toSeq.sortBy(_._1).foldLeft(lit(defaultBudget): Column) {
       case (acc, (l, b)) => when(col(langCol) === l, lit(b)).otherwise(acc)
     }
@@ -379,22 +374,9 @@ object TextStats {
       call_function("splitmix64",
         call_function("splitmix64", col(idCol).cast("long")).bitwiseXOR(lit(seed)))
         .as("skey"))
-    val sorted = keyed.repartitionByRange(col(langCol), col("skey"), col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted.groupBy("pid", langCol).agg(sum("n_tokens").as("ptok"))
-      .withColumn("poff", coalesce(
-        sum("ptok").over(Window.partitionBy(langCol).orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col(langCol), col("poff"))
-    val within = Window.partitionBy(col("pid"), col(langCol))
-      .orderBy(col("skey"), col(idCol))
-    sorted.join(broadcast(offsets), Seq("pid", langCol))
-      .withColumn("cum_before",
-        col("poff") + sum("n_tokens").over(within) - col("n_tokens"))
-      .filter(col("cum_before") < budget)
-      .select(col(idCol), col(langCol), col("n_tokens"),
-        (col("cum_before") + col("n_tokens")).as("cum_tokens"))
+    Prefix.sums(keyed, Seq(langCol), Seq(col("skey"), col(idCol)), "tok" -> col("n_tokens"))
+      .filter(col("tok_cum") - col("n_tokens") < budget)
+      .select(col(idCol), col(langCol), col("n_tokens"), col("tok_cum").as("cum_tokens"))
       .orderBy(idCol)
   }
 
@@ -551,33 +533,20 @@ object TextStats {
     * token budget, this hard-caps the head classes (the standard
     * anti-domination pass before mixing a multilingual corpus).
     *
-    * Scale shape: the [[tokenBudgetMix]] distributed-rank discipline —
-    * range-exchange on (group, skey, id), per-partition row_number +
-    * broadcast per-(partition, group) offsets. No per-group single-task
-    * window; a billion-doc language costs one range shuffle. Emits
-    * (id, group, cap_rank) for survivors; cap_rank < k is the keep rule
-    * replayed verbatim by the oracle.
+    * Scale shape: the rank is a [[Prefix]] row count per group — no
+    * per-group single-task window; a billion-doc language costs one range
+    * shuffle. Emits (id, group, cap_rank) for survivors; cap_rank < k is
+    * the keep rule replayed verbatim by the oracle.
     */
   def groupCap(df: DataFrame, k: Long, seed: Long = 42L,
                groupCol: String = "lang", idCol: String = "doc_id"): DataFrame = {
     require(k >= 0L, "cap must be non-negative")
-    import org.apache.spark.sql.expressions.Window
     val keyed = df.select(col(idCol), col(groupCol),
       call_function("splitmix64",
         call_function("splitmix64", col(idCol).cast("long")).bitwiseXOR(lit(seed)))
         .as("skey"))
-    val sorted = keyed.repartitionByRange(col(groupCol), col("skey"), col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted.groupBy("pid", groupCol).agg(count(lit(1)).as("pn"))
-      .withColumn("poff", coalesce(
-        sum("pn").over(Window.partitionBy(groupCol).orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col(groupCol), col("poff"))
-    val within = Window.partitionBy(col("pid"), col(groupCol))
-      .orderBy(col("skey"), col(idCol))
-    sorted.join(broadcast(offsets), Seq("pid", groupCol))
-      .withColumn("cap_rank", (col("poff") + row_number().over(within) - 1).cast("long"))
+    Prefix.sums(keyed, Seq(groupCol), Seq(col("skey"), col(idCol)), "rows" -> lit(1L))
+      .withColumn("cap_rank", col("rows_cum") - 1L)
       .filter(col("cap_rank") < k)
       .select(col(idCol), col(groupCol), col("cap_rank"))
       .orderBy(idCol)
@@ -669,8 +638,7 @@ object TextStats {
     * Scale: per-source tokens + quality are one source-keyed aggregate
     * (map-side partials); the ranking window runs over SOURCE rows —
     * crawl-catalog-sized, thousands at most, the documented exception
-    * to the distributed-rank discipline (same class as the
-    * O(partitions) offset tables).
+    * to running totals by [[Prefix]].
     */
   def epochPlan(docs: DataFrame, budget: Long, maxEpochs: Long = 4L,
                 sourceCol: String = "source", textCol: String = "text"): DataFrame = {
@@ -801,53 +769,19 @@ object TextStats {
     * every `budget` tokens. Emits each chunk's absolute `token_start`
     * and the `seq_id` of the sequence its first token lands in.
     *
-    * Scale shape — a distributed prefix sum, because a global
-    * `Window.orderBy` with no partition key is a single-task scan:
-    * (1) range-repartition by (doc_id, chunk_id) so partition p holds a
-    * contiguous key range; (2) per-partition token totals → an
-    * OFFSETS table with one row per partition — the only global window
-    * runs over THAT (bounded by cluster width, never by data); (3)
-    * broadcast the offsets back and add a within-partition running sum.
-    * Every value is independent of where the range boundaries fall, so
-    * the result is deterministic under any partitioning. (A
-    * mapPartitions variant could skip the hash(pid) exchange the
-    * within-partition window inserts; kept declarative deliberately.)
-    *
-    * Partition-pinning note: the offsets branch and the main branch BOTH
-    * read `sorted`, and the inner join on `pid` is only correct if the
-    * two reads see the SAME partition assignment. Left as two lazy plan
-    * subtrees they would not be guaranteed to: column pruning gives the
-    * offsets branch a thinner scan (so Catalyst cannot dedupe the
-    * subtrees), RangePartitioner's reservoir-sample seed differs per
-    * exchange instance, and AQE may coalesce the thin exchange to a
-    * different partition count than the wide one. So the range exchange
-    * is materialized ONCE — an eager `localCheckpoint` right after
-    * stamping `pid` — and both branches read that single incarnation.
-    * Cost: one materialization of the chunk set (memory+disk blocks,
-    * lineage truncated → executor loss means task-level retry of the
-    * checkpointed blocks rather than lineage replay); this is the price
-    * of a deterministic global tape, paid once per pack.
+    * Scale shape: the tape is a [[Prefix]] sum in (doc_id, chunk_id)
+    * order — a global `Window.orderBy` with no partition key would be a
+    * single-task scan — so the result is deterministic under any
+    * partitioning.
     */
   def packChunks(chunks: DataFrame, budget: Int = 512,
                  docCol: String = "doc_id", chunkCol: String = "chunk_id",
                  tokCol: String = "n_chunk_tokens"): DataFrame = {
     require(budget > 0, "budget must be positive")
-    import org.apache.spark.sql.expressions.Window
-    // One physical incarnation of the range exchange: pid→row assignment
-    // is frozen here, so the offsets join below cannot disagree with it.
-    val sorted = chunks.repartitionByRange(col(docCol), col(chunkCol))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted.groupBy("pid").agg(sum(col(tokCol)).as("ptot"))
-      .withColumn("poff", coalesce(
-        sum("ptot").over(Window.orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "poff")
-    val within = Window.partitionBy("pid").orderBy(col(docCol), col(chunkCol))
-    sorted.join(broadcast(offsets), "pid")
-      .withColumn("token_start", col("poff") + sum(col(tokCol)).over(within) - col(tokCol))
+    Prefix.sums(chunks, Nil, Seq(col(docCol), col(chunkCol)), "__tok" -> col(tokCol))
+      .withColumn("token_start", col("__tok_cum") - col(tokCol))
       .withColumn("seq_id", floor(col("token_start") / budget).cast("long"))
-      .drop("pid", "poff")
+      .drop("__tok_cum", "__tok_total")
   }
 
   /** UNIGRAM-LM tokenizer induction (SentencePiece-style), the other
@@ -1073,27 +1007,6 @@ object TextStats {
         element_at(dp, length(col("w")) + 1).getField("seg")))
   }
 
-  /** Deterministic corpus SHUFFLE-AND-SHARD — the last-mile operator of
-    * every training-data pipeline: impose a seeded pseudo-random global
-    * order on the curated corpus and cut it into `nShards` equal shards
-    * (sizes differ by at most one doc, larger shards first — exact
-    * SQL-standard NTILE semantics). The permutation key is
-    * splitmix64(splitmix64(doc_id) XOR seed): content-independent (a
-    * re-ingested doc keeps its slot), seed-separable (a new seed is a
-    * fresh permutation), and integer-replayable by the DuckDB oracle.
-    *
-    * Scale shape — the [[packChunks]] distributed-rank discipline,
-    * because NTILE as a bare window function is a single-task global
-    * sort: (1) range-repartition by (skey, id) so partition p holds a
-    * contiguous slice of the permutation, materialized ONCE
-    * (localCheckpoint) so the offsets branch and the main branch see
-    * the same partition assignment; (2) per-partition counts → a
-    * cluster-width offsets table (the only global window runs over
-    * that); (3) rank = partition offset + within-partition row_number,
-    * shard from rank by integer arithmetic. Every shard boundary is a
-    * pure function of (N, nShards, rank) — re-sharding with a different
-    * partition count reproduces the identical assignment (spec-pinned).
-    */
   /** CONTEXT-WINDOW packing plan (c20) — the GPT-style pretraining
     * pack: documents concatenate in a seeded permutation order (the
     * [[shuffleShard]] key: content-independent, seed-separable) into
@@ -1109,16 +1022,12 @@ object TextStats {
     * prefix sum over integer token counts in (skey, id) order, and the
     * window ids are integer divisions of those offsets.
     *
-    * Scale shape: the [[tokenBudgetMix]]/[[shuffleShard]]
-    * distributed-rank discipline — range-exchange on (skey, id),
-    * per-partition token subtotals become a broadcast O(partitions)
-    * offsets table, each row's offset = partition offset + local
-    * prefix sum. No single-task data-sized window; one shuffle total.
+    * Scale shape: rank and offset are one [[Prefix]] sum in (skey, id)
+    * order — no single-task data-sized window.
     */
   def contextPack(df: DataFrame, contextLen: Long, seed: Long = 42L,
                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(contextLen >= 1L, "contextLen must be positive")
-    import org.apache.spark.sql.expressions.Window
     val keyed = df.filter(col(textCol).isNotNull)
       .select(col(idCol),
         size(regexp_extract_all(col(textCol), lit("\\S+"), lit(0))).cast("long").as("n_tokens"),
@@ -1126,23 +1035,10 @@ object TextStats {
           call_function("splitmix64", col(idCol).cast("long")).bitwiseXOR(lit(seed)))
           .as("skey"))
       .filter(col("n_tokens") > 0)
-    val sorted = keyed.repartitionByRange(col("skey"), col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted.groupBy("pid")
-      .agg(sum("n_tokens").as("ptok"), count(lit(1)).as("pn"))
-      .withColumn("toff", coalesce(
-        sum("ptok").over(Window.orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("roff", coalesce(
-        sum("pn").over(Window.orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "toff", "roff")
-    val within = Window.partitionBy("pid").orderBy(col("skey"), col(idCol))
-    sorted.join(broadcast(offsets), Seq("pid"))
-      .withColumn("pack_rank", (col("roff") + row_number().over(within) - 1).cast("long"))
-      .withColumn("start_offset",
-        col("toff") + sum("n_tokens").over(within) - col("n_tokens"))
+    Prefix.sums(keyed, Nil, Seq(col("skey"), col(idCol)),
+        "tok" -> col("n_tokens"), "rows" -> lit(1L))
+      .withColumn("pack_rank", col("rows_cum") - 1L)
+      .withColumn("start_offset", col("tok_cum") - col("n_tokens"))
       .withColumn("window_first", expr(s"start_offset div $contextLen"))
       .withColumn("window_last", expr(s"(start_offset + n_tokens - 1) div $contextLen"))
       .select(col(idCol), col("pack_rank"), col("n_tokens"), col("start_offset"),
@@ -1151,39 +1047,45 @@ object TextStats {
       .orderBy(idCol)
   }
 
+  /** 0-based integer NTILE(n) of the 0-based `rank` over `total` rows:
+    * the first total mod n tiles carry ceil(total/n) rows, the rest floor
+    * — all integer DIV/%, so any engine reproduces the cut points exactly;
+    * greatest(…, 1) guards the (never-taken) total < n branch. */
+  private def intNtile(rank: String, total: String, n: Int): Column = expr(
+    s"""CAST(CASE
+       |  WHEN $rank < ($total % $n) * (($total DIV $n) + 1)
+       |  THEN $rank DIV (($total DIV $n) + 1)
+       |  ELSE ($total % $n) +
+       |    ($rank - ($total % $n) * (($total DIV $n) + 1))
+       |      DIV greatest($total DIV $n, 1)
+       |END AS BIGINT)""".stripMargin)
+
+  /** Deterministic corpus SHUFFLE-AND-SHARD — the last-mile operator of
+    * every training-data pipeline: impose a seeded pseudo-random global
+    * order on the curated corpus and cut it into `nShards` equal shards
+    * (sizes differ by at most one doc, larger shards first — exact
+    * SQL-standard NTILE semantics). The permutation key is
+    * splitmix64(splitmix64(doc_id) XOR seed): content-independent (a
+    * re-ingested doc keeps its slot), seed-separable (a new seed is a
+    * fresh permutation), and integer-replayable by the DuckDB oracle.
+    *
+    * Scale shape: the rank is a [[Prefix]] row count in (skey, id) order,
+    * because NTILE as a bare window function is a single-task global
+    * sort; the shard follows from rank by integer arithmetic. Every shard
+    * boundary is a pure function of (N, nShards, rank) — re-sharding with
+    * a different partition count reproduces the identical assignment
+    * (spec-pinned).
+    */
   def shuffleShard(df: DataFrame, nShards: Int, seed: Long = 42L,
                    idCol: String = "doc_id"): DataFrame = {
     require(nShards > 0, "nShards must be positive")
-    import org.apache.spark.sql.expressions.Window
     val keyed = df.select(col(idCol),
       call_function("splitmix64",
         call_function("splitmix64", col(idCol).cast("long")).bitwiseXOR(lit(seed)))
         .as("skey"))
-    val sorted = keyed.repartitionByRange(col("skey"), col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted.groupBy("pid").agg(count(lit(1)).as("pn"))
-      .withColumn("poff", coalesce(
-        sum("pn").over(Window.orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "poff")
-    val total = sorted.agg(count(lit(1)).as("n_total"))
-    val within = Window.partitionBy("pid").orderBy(col("skey"), col(idCol))
-    // NTILE(nShards) on 0-based rank i over N rows: the first N mod
-    // nShards shards carry ceil(N/nShards) docs, the rest floor — all
-    // integer DIV/%, so any engine reproduces the cut points exactly;
-    // greatest(base, 1) guards the (never-taken) N < nShards branch
-    sorted.join(broadcast(offsets), "pid")
-      .withColumn("rank", (col("poff") + row_number().over(within) - 1).cast("long"))
-      .crossJoin(broadcast(total))
-      .withColumn("shard", expr(
-        s"""CAST(CASE
-           |  WHEN rank < (n_total % $nShards) * ((n_total DIV $nShards) + 1)
-           |  THEN rank DIV ((n_total DIV $nShards) + 1)
-           |  ELSE (n_total % $nShards) +
-           |    (rank - (n_total % $nShards) * ((n_total DIV $nShards) + 1))
-           |      DIV greatest(n_total DIV $nShards, 1)
-           |END AS BIGINT)""".stripMargin))
+    Prefix.sums(keyed, Nil, Seq(col("skey"), col(idCol)), "rows" -> lit(1L))
+      .withColumn("rank", col("rows_cum") - 1L)
+      .withColumn("shard", intNtile("rank", "rows_total", nShards))
       .select(col(idCol), col("skey"), col("rank"), col("shard"))
   }
 
@@ -1198,56 +1100,26 @@ object TextStats {
     *
     * Bands are exact integer ntile cuts over the global
     * (quality_score, id) rank; both the band rank and the final
-    * training rank use the distributed-rank discipline
-    * (repartitionByRange + per-partition offsets — the c4/c10 pattern;
-    * the only unpartitioned window is the O(partitions) offset table).
-    * Every cut point and shuffle key is integer arithmetic the oracle
-    * replays exactly (ntile + splitmix64).
+    * training rank are [[Prefix]] row counts. Every cut point and
+    * shuffle key is integer arithmetic the oracle replays exactly
+    * (ntile + splitmix64).
     */
   def curriculumOrder(docs: DataFrame, nBands: Int = 4, seed: Long = 42L,
                       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(nBands > 0, "nBands must be positive")
-    import org.apache.spark.sql.expressions.Window
-    // global rank → 0-based integer ntile (the c10 cut-point rule:
-    // first n_total % nBands tiles carry ceil(n/nBands) rows)
-    def intNtile(rank: String, total: String): String =
-      s"""CAST(CASE
-         |  WHEN $rank < ($total % $nBands) * (($total DIV $nBands) + 1)
-         |  THEN $rank DIV (($total DIV $nBands) + 1)
-         |  ELSE ($total % $nBands) +
-         |    ($rank - ($total % $nBands) * (($total DIV $nBands) + 1))
-         |      DIV greatest($total DIV $nBands, 1)
-         |END AS BIGINT)""".stripMargin
-    def offsets(sorted: DataFrame): DataFrame =
-      sorted.groupBy("pid").agg(count(lit(1)).as("pn"))
-        .withColumn("poff", coalesce(
-          sum("pn").over(Window.orderBy("pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("pid", "poff")
     val scored = qualityScore(docs.filter(col(textCol).isNotNull), textCol)
       .select(col(idCol), col("quality_score"))
     // pass A: quality band
-    val sortedQ = scored.repartitionByRange(col("quality_score"), col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val total = sortedQ.agg(count(lit(1)).as("n_total"))
-    val withinQ = Window.partitionBy("pid").orderBy(col("quality_score"), col(idCol))
-    val banded = sortedQ.join(broadcast(offsets(sortedQ)), "pid")
-      .withColumn("qrank", (col("poff") + row_number().over(withinQ) - 1).cast("long"))
-      .crossJoin(broadcast(total))
-      .withColumn("band", expr(intNtile("qrank", "n_total")) + 1L)
+    val banded = Prefix.sums(scored, Nil, Seq(col("quality_score"), col(idCol)), "rows" -> lit(1L))
+      .withColumn("qrank", col("rows_cum") - 1L)
+      .withColumn("band", intNtile("qrank", "rows_total", nBands) + 1L)
       .select(col(idCol), col("quality_score"), col("band"))
     // pass B: global training rank over (band, seeded shuffle key, id)
     val keyed = banded.withColumn("skey",
       call_function("splitmix64",
         call_function("splitmix64", col(idCol).cast("long")).bitwiseXOR(lit(seed))))
-    val sortedC = keyed.repartitionByRange(col("band"), col("skey"), col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val withinC = Window.partitionBy("pid").orderBy(col("band"), col("skey"), col(idCol))
-    sortedC.join(broadcast(offsets(sortedC)), "pid")
-      .withColumn("train_rank", (col("poff") + row_number().over(withinC)).cast("long"))
-      .select(col(idCol), col("band"), col("quality_score"), col("train_rank"))
+    Prefix.sums(keyed, Nil, Seq(col("band"), col("skey"), col(idCol)), "rows" -> lit(1L))
+      .select(col(idCol), col("band"), col("quality_score"), col("rows_cum").as("train_rank"))
   }
 
   /** TRAINER-READY per-doc manifest (c24's row table) — the one plan
@@ -1264,10 +1136,8 @@ object TextStats {
     * curriculum rank (contiguous — shard 0 trains first; [[shuffleShard]]
     * would destroy the ordering c23 just built).
     *
-    * Scale shape: [[curriculumOrder]]'s two distributed-rank passes plus
-    * ONE more for the token prefix sum (the c4/c20 discipline —
-    * repartitionByRange on train_rank, per-partition offsets, the only
-    * unpartitioned window is the O(partitions) offset table). Everything
+    * Scale shape: [[curriculumOrder]]'s two [[Prefix]] passes plus ONE
+    * more for the token prefix sum in train_rank order. Everything
     * downstream of the quality scorer moves 8-byte ids and counts.
     */
   def trainingManifest(docs: DataFrame, contextLen: Long = 512L, nShards: Int = 8,
@@ -1275,40 +1145,19 @@ object TextStats {
                        textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(contextLen >= 1L, "contextLen must be positive")
     require(nShards > 0, "nShards must be positive")
-    import org.apache.spark.sql.expressions.Window
     val packable = docs.filter(col(textCol).isNotNull)
       .filter(tokenCount(col(textCol)) > 0)
     val ord = curriculumOrder(packable, nBands, seed, textCol, idCol)
     val toks = packable.select(col(idCol),
       tokenCount(col(textCol)).cast("long").as("n_tokens"))
     val keyed = ord.join(toks, idCol)
-    val sorted = keyed.repartitionByRange(col("train_rank"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted.groupBy("pid")
-      .agg(sum("n_tokens").as("ptok"))
-      .withColumn("toff", coalesce(
-        sum("ptok").over(Window.orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "toff")
-    val total = sorted.agg(count(lit(1)).as("n_total"))
-    val within = Window.partitionBy("pid").orderBy("train_rank")
-    sorted.join(broadcast(offsets), "pid")
-      .crossJoin(broadcast(total))
-      .withColumn("start_offset",
-        col("toff") + sum("n_tokens").over(within) - col("n_tokens"))
+    Prefix.sums(keyed, Nil, Seq(col("train_rank")), "tok" -> col("n_tokens"), "rows" -> lit(1L))
+      .withColumn("start_offset", col("tok_cum") - col("n_tokens"))
       .withColumn("window_first", expr(s"start_offset div $contextLen"))
       .withColumn("window_last", expr(s"(start_offset + n_tokens - 1) div $contextLen"))
       .withColumn("rank0", col("train_rank") - 1L)
       // the c10 integer ntile cut rule, applied to the CURRICULUM rank
-      .withColumn("shard", expr(
-        s"""CAST(CASE
-           |  WHEN rank0 < (n_total % $nShards) * ((n_total DIV $nShards) + 1)
-           |  THEN rank0 DIV ((n_total DIV $nShards) + 1)
-           |  ELSE (n_total % $nShards) +
-           |    (rank0 - (n_total % $nShards) * ((n_total DIV $nShards) + 1))
-           |      DIV greatest(n_total DIV $nShards, 1)
-           |END AS BIGINT)""".stripMargin))
+      .withColumn("shard", intNtile("rank0", "rows_total", nShards))
       .select(col(idCol), col("band"), col("train_rank"), col("n_tokens"),
         col("start_offset"), col("window_first"), col("window_last"), col("shard"))
   }
@@ -1400,41 +1249,20 @@ object TextStats {
     * `nBuckets` exact integer ntiles: head / middle / tail for the
     * default 3. `keep` drops the tail bucket — CCNet's standard policy.
     *
-    * The per-group rank uses [[groupCap]]'s distributed discipline
-    * (repartitionByRange on (lang, ce, id) + per-(partition, lang)
-    * offsets — no single-task per-language window), and the cut points
-    * are the c10 integer rule, which DuckDB's NTILE replays exactly.
+    * The per-group rank is a [[Prefix]] row count per language (no
+    * single-task per-language window), and the cut points are the c10
+    * integer rule, which DuckDB's NTILE replays exactly.
     * Docs with < 2 tokens have no bigrams and are out of scope (the
     * t11 contract).
     */
   def perplexityBuckets(docs: DataFrame, nBuckets: Int = 3,
                         textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(nBuckets > 0, "nBuckets must be positive")
-    import org.apache.spark.sql.expressions.Window
     val ce = bigramCrossEntropy(docs, 0.5, textCol, idCol)
       .join(docs.select(col(idCol), col("lang")), idCol)
-    val sorted = ce.repartitionByRange(col("lang"), col("cross_entropy"), col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted.groupBy("pid", "lang").agg(count(lit(1)).as("pn"))
-      .withColumn("poff", coalesce(
-        sum("pn").over(Window.partitionBy("lang").orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("lang"), col("poff"))
-    val totals = sorted.groupBy("lang").agg(count(lit(1)).as("n_lang"))
-    val within = Window.partitionBy(col("pid"), col("lang"))
-      .orderBy(col("cross_entropy"), col(idCol))
-    sorted.join(broadcast(offsets), Seq("pid", "lang"))
-      .withColumn("rank0", (col("poff") + row_number().over(within) - 1).cast("long"))
-      .join(broadcast(totals), Seq("lang"))
-      .withColumn("bucket", expr(
-        s"""CAST(CASE
-           |  WHEN rank0 < (n_lang % $nBuckets) * ((n_lang DIV $nBuckets) + 1)
-           |  THEN rank0 DIV ((n_lang DIV $nBuckets) + 1)
-           |  ELSE (n_lang % $nBuckets) +
-           |    (rank0 - (n_lang % $nBuckets) * ((n_lang DIV $nBuckets) + 1))
-           |      DIV greatest(n_lang DIV $nBuckets, 1)
-           |END AS BIGINT)""".stripMargin) + 1L)
+    Prefix.sums(ce, Seq("lang"), Seq(col("cross_entropy"), col(idCol)), "rows" -> lit(1L))
+      .withColumn("rank0", col("rows_cum") - 1L)
+      .withColumn("bucket", intNtile("rank0", "rows_total", nBuckets) + 1L)
       .withColumn("keep", col("bucket") < nBuckets)
       .select(col(idCol), col("lang"), col("cross_entropy"), col("bucket"), col("keep"))
       .orderBy(idCol)
@@ -2731,10 +2559,8 @@ object TextStats {
     * right-to-left, … — the deterministic distributed approximation of
     * greedy least-loaded LPT (each two-pass round gives every shard
     * one long+one short doc, bounding spread by one doc per round
-    * without LPT's sequential state). The rank uses the
-    * distributed-rank discipline (range exchange + O(partitions)
-    * offset table — the c4/c10 pattern, no single-task window); the
-    * assignment is two integer DIV/MODs the oracle replays. Output:
+    * without LPT's sequential state). The rank is a [[Prefix]] row
+    * count (no single-task window); the assignment is two integer DIV/MODs the oracle replays. Output:
     * per-shard fill report — docs, tokens, padding vs the fullest
     * shard, 6dp fill ratio.
     */
@@ -2742,23 +2568,12 @@ object TextStats {
                     textCol: String = "text",
                     idCol: String = "doc_id"): DataFrame = {
     require(nBins > 0, "nBins must be positive")
-    import org.apache.spark.sql.expressions.Window
     val toks = docs.filter(col(textCol).isNotNull)
       .select(col(idCol),
         size(regexp_extract_all(col(textCol), lit("\\S+"), lit(0)))
           .cast("long").as("n_tokens"))
-    val sorted = toks.withColumn("negt", -col("n_tokens"))
-      .repartitionByRange(col("negt"), col(idCol))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val offsets = sorted.groupBy("pid").agg(count(lit(1)).as("pn"))
-      .withColumn("poff", coalesce(
-        sum("pn").over(Window.orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "poff")
-    val within = Window.partitionBy("pid").orderBy(col("negt"), col(idCol))
-    val per = sorted.join(broadcast(offsets), Seq("pid"))
-      .withColumn("rank", (col("poff") + row_number().over(within) - 1).cast("long"))
+    val per = Prefix.sums(toks, Nil, Seq(col("n_tokens").desc, col(idCol)), "rows" -> lit(1L))
+      .withColumn("rank", col("rows_cum") - 1L)
       .withColumn("shard", expr(
         s"CAST(CASE WHEN (rank DIV $nBins) % 2 = 0 THEN rank % $nBins " +
           s"ELSE ${nBins - 1} - rank % $nBins END AS BIGINT)"))

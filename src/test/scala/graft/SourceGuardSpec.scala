@@ -7,8 +7,9 @@ import scala.util.Using
 /** Keeps the single primitives single: session conf is mutated only inside
   * [[Sessions.withConf]], the core count is read only by [[Sizing]],
   * fixture dirs are named only by [[graft.ops.Fixtures]], sessions are
-  * built only by [[Sessions]], and leaked blocks are swept only by the
-  * run loop [[Harness.each]]. */
+  * built only by [[Sessions]], leaked blocks are swept only by the
+  * run loop [[Harness.each]], and running totals in a global order are
+  * computed only by [[graft.ops.Prefix]]. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -62,6 +63,12 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     val bad = hits("SparkSession.builder", (p, lines, i) =>
       p.endsWith("graft/Sessions.scala") || comment(lines(i))) ++
       hits("getPersistentRDDs", inEach)
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  test("spark_partition_id and orderBy(\"pid\") appear only in Prefix") {
+    val inPrefix = (p: Path, _: IndexedSeq[String], _: Int) => p.endsWith("graft/ops/Prefix.scala")
+    val bad = hits("spark_partition_id", inPrefix) ++ hits("orderBy(\"pid\")", inPrefix)
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 }

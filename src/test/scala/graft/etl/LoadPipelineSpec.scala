@@ -171,6 +171,21 @@ class LoadPipelineSpec extends SparkSpec {
       Seq("good.csv", "mixed", "out", "ragged.csv"))
   }
 
+  test("a partitioned replace whose write fails leaves the old rows and no staged copy") {
+    import org.apache.spark.sql.functions._
+    val d = tmpDir("partkeep")
+    val out = d.resolve("out").toString
+    def rows(n: Int) = spark.range(n).select(col("id"), (col("id") % 2).as("p"))
+    Load.replaceParquetPartitioned(rows(4), out, Seq("p"))
+    val failing = rows(6).withColumn("id",
+      when(col("id") === 5L, raise_error(lit("boom")).cast("long")).otherwise(col("id")))
+    val e = intercept[Exception](Load.replaceParquetPartitioned(failing, out, Seq("p")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom")), e.toString)
+    assert(spark.read.parquet(out).collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L, 3L))
+    assert(Files.list(d).iterator().asScala.map(_.getFileName.toString).toSeq == Seq("out"))
+  }
+
   test("C1 quirk: all-null column ends with 0 rows (shipped-data parity)") {
     val d = tmpDir("c1q")
     Files.writeString(d.resolve("in.csv"), "id,msg\n1,\n2,\n")
