@@ -404,8 +404,7 @@ object SparkEntry {
       namePrefix = "small", nationName = None)),
     // per-group approx distinct + exact accuracy audit (the d2
     // graduation: KMV estimate beside the exact count, 6dp rel_err —
-    // hash-gated since round 13; the HLL++ form approxDistinct stays
-    // as the accuracy-spec'd engine-native utility)
+    // hash-gated since round 13)
     "d2_approx_distinct" -> (Analytics.kmvAccuracy(_, _)),
 
     // --- profiling ---
@@ -2179,7 +2178,7 @@ object SparkEntry {
     * The shingle-explode pass is the expensive pipeline; at corpus scale
     * it runs once per corpus snapshot, and resolve/report/split are all
     * cheap joins against the same small pair table (the
-    * Graft.assignSplitSafe / leakageReport contract).
+    * TextStats.assignSplitByComponent / leakageReport contract).
     */
   private[graft] def stagedPairs(s: SparkSession, d: String): DataFrame =
     s.read.parquet(stagedParquet("pairs", d)(

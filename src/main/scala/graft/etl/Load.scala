@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
 
 import java.io.IOException
@@ -13,28 +13,24 @@ import scala.util.control.NonFatal
   * (`/root/reference/src/load.py:5-8`): drop+recreate table, schema from
   * dtypes, no index column, column names (incl. spaces) preserved.
   *
-  * No sqlite JDBC driver ships in /opt/spark/jars, so the primary sink is a
-  * Spark managed table (parquet under the local warehouse) with identical
-  * contract: replace semantics, typed columns, verbatim column names.
-  * A `jdbc` sink is exposed for environments that do carry a driver.
+  * No sqlite JDBC driver ships with Spark, so the sink is a parquet
+  * directory ([[replaceParquet]]) with the same contract: replace
+  * semantics, typed columns, verbatim column names. The serving queries
+  * find it by that path (`serve.Queries`).
   *
-  * Scale: `saveAsTable` writes one file per partition in parallel — at
+  * Scale: the parquet writer emits one file per partition in parallel — at
   * 100 TB this is the only sink shape that works; the reference's
   * row-by-row INSERT loop (`pandas.to_sql`) is replaced by distributed
   * columnar parquet with stats for downstream scan pruning.
   */
 object Load {
-  /** K1: full-replace managed table (load.py:7 `if_exists='replace'`). */
-  def replaceTable(df: DataFrame, table: String): Unit =
-    df.write.mode(SaveMode.Overwrite).saveAsTable(quote(table))
-
-  /** K1 parquet-path flavor: replace a parquet directory "table". The frame
-    * is written to a hidden sibling first and swapped in by rename only
-    * once the write has succeeded, so a write that fails (a row that fails
-    * its cast, a full disk) leaves the old table as it was — like the
-    * reference, whose eager parse raises before `to_sql(replace)` drops
-    * anything. A plain Overwrite deletes the old files before its job
-    * runs. */
+  /** K1: replace a parquet directory "table" (load.py:7
+    * `if_exists='replace'`). The frame is written to a hidden sibling
+    * first and swapped in by rename only once the write has succeeded, so
+    * a write that fails (a row that fails its cast, a full disk) leaves
+    * the old table as it was — like the reference, whose eager parse
+    * raises before `to_sql(replace)` drops anything. A plain Overwrite
+    * deletes the old files before its job runs. */
   def replaceParquet(df: DataFrame, path: String): Unit =
     replaceDir(df, path)(df.write.parquet(_))
 
@@ -227,15 +223,6 @@ object Load {
       finally walk.close()
     }
   }
-
-  /** JDBC replace-load for environments with a driver on the classpath. */
-  def replaceJdbc(df: DataFrame, url: String, table: String,
-                  props: java.util.Properties = new java.util.Properties()): Unit =
-    df.write.mode(SaveMode.Overwrite).jdbc(url, table, props)
-
-  /** M1: table-exists check (api.py:182-187). */
-  def tableExists(spark: SparkSession, table: String): Boolean =
-    spark.catalog.tableExists(quote(table))
 
   private def quote(t: String): String =
     if (t.matches("[A-Za-z0-9_.]+")) t else s"`$t`"

@@ -171,7 +171,7 @@ object Analytics {
       .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
 
   /** Exact distinct-count per group (shuffle-dedup then count). The approx
-    * HLL++ sibling is in [[approxDistinct]] — constant memory per group,
+    * HLL++ sibling is [[hllUnionDistinct]] — constant memory per group,
     * the 100 TB-safe default. */
   def orderCountsDistinct(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
@@ -339,16 +339,10 @@ object Analytics {
       .withColumnsRenamed(Map("F" -> "n_f", "O" -> "n_o", "P" -> "n_p"))
       .orderBy("o_orderpriority")
 
-  def approxDistinct(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(approx_count_distinct(col("l_orderkey")).as("n_orders_approx"))
-      .orderBy("l_returnflag")
-
-  /** Mergeable distinct-count sketches — the INCREMENTAL form of
-    * [[approxDistinct]]: each half builds an HLL sketch independently
-    * (`hll_sketch_agg`), the sketches union (`hll_union_agg`), and the
-    * estimate reads off the merged sketch. The pattern that lets a
+  /** Mergeable distinct-count sketches — an HLL++ distinct count per
+    * return flag, computed incrementally: each half builds an HLL sketch
+    * independently (`hll_sketch_agg`), the sketches union
+    * (`hll_union_agg`), and the estimate reads off the merged sketch. The pattern that lets a
     * 100 TB history keep per-day sketches and answer "distinct over any
     * date range" by merging kilobytes instead of rescanning — the
     * approximate twin of [[EventWindows.hourlyMerge]]'s exact partials.
@@ -363,7 +357,7 @@ object Analytics {
       .orderBy("l_returnflag")
 
   /** KMV distinct-count sketch over order keys — the EXACT-replayable
-    * sketch twin of [[approxDistinct]]: `kmv_sketch` (a mergeable
+    * sketch twin of [[hllUnionDistinct]]: `kmv_sketch` (a mergeable
     * [[graft.functions.KmvSketch]] bounded distinct-min-set) keeps the
     * k smallest distinct splitmix64 hashes, and (k−1)·M / kth_min
     * estimates the cardinality to ~1/√k. Unlike HLL, every byte of the
@@ -503,15 +497,14 @@ object Analytics {
   }
 
   /** Per-group approximate distinct with an exact accuracy audit — the
-    * ROUND-13 GRADUATION of d2: the question [[approxDistinct]] answers
+    * ROUND-13 GRADUATION of d2: the question HLL++ answers
     * (distinct orders per return flag, sketched) re-asked through the
     * KMV sketch, whose every byte is a pure set property of the input —
     * so the ESTIMATE hash-gates cross-engine, where HLL's buffer is
     * engine-internal and could only ever be rows-checked. Emits, per
     * flag, the exact distinct count alongside the sketch estimate and
     * the 6dp relative error — the sketch-parameter validation a user
-    * runs before trusting k. [[approxDistinct]] (HLL++) stays the
-    * engine-native facade utility, accuracy-spec'd.
+    * runs before trusting k.
     *
     * Scale: the KMV aggregate ships ≤ k longs per partial and the exact
     * count is the same shuffle — one pass, map-side partials for both.

@@ -25,11 +25,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * guaranteed to — column pruning gives the totals read a thinner plan
   * Catalyst will not dedupe, RangePartitioner's sample seed differs per
   * exchange instance, and AQE may coalesce the two to different partition
-  * counts. So the exchange is materialized ONCE, by an eager
-  * `localCheckpoint` right after the id is stamped, and both reads use
-  * that one incarnation. Cost: one materialization of the input; lineage
-  * is truncated, so an executor loss retries the checkpointed blocks'
-  * tasks rather than replaying lineage.
+  * counts. So the stamped rows are pinned by a lazy `localCheckpoint`
+  * right after the id is stamped, and both reads use that one
+  * incarnation of the exchange. The totals `collect` is the job that
+  * fills the pin's blocks, so pinning costs no job of its own. Cost: one
+  * materialization of the input; once filled, lineage is truncated, so
+  * an executor loss retries the checkpointed blocks' tasks rather than
+  * replaying lineage.
   */
 object Prefix {
   private val Pid = "__pid"
@@ -56,7 +58,7 @@ object Prefix {
     val keys = Pid +: groups
     val pinned = df.repartitionByRange(groups.map(col) ++ order: _*)
       .withColumn(Pid, spark_partition_id())
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
     val parts = pinned.groupBy(keys.map(col): _*)
       .agg(sum(vals.head), vals.tail.map(sum): _*)
       .collect()

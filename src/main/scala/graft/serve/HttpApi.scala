@@ -1,8 +1,9 @@
 package graft.serve
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.etl.{Ingest, Pipeline}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.etl.Ingest
+import graft.etl.Pipeline.PipelineConfig
+import org.apache.spark.sql.{Row, SparkSession}
 
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -30,11 +31,13 @@ import scala.util.control.NonFatal
   *
   * The reference's "database" is a SQLite file; the Spark analog is a
   * parquet directory (or a registered catalog table — checked first, so
-  * managed-table loads serve too). `db_path` missing on disk → 404
-  * "Database not found", exactly the reference's contract.
+  * managed-table loads serve too). Preview and stats are [[Queries]]'
+  * calls, rendered as JSON: `db_path` missing on disk → 404 "Database not
+  * found", exactly the reference's contract.
   */
 final class HttpApi(spark: SparkSession, port: Int = 0)(implicit ec: ExecutionContext) {
   val registry = new Runs.Registry(spark)
+  private val Defaults = PipelineConfig()
 
   private var server: HttpServer = _
   private[serve] var pool: ExecutorService = _
@@ -102,19 +105,18 @@ final class HttpApi(spark: SparkSession, port: Int = 0)(implicit ec: ExecutionCo
 
   // ------------------------------------------------------------- pipeline
 
-  /** POST /api/pipeline/run (api.py:102-136). */
+  /** POST /api/pipeline/run (api.py:102-136); a missing csv_path is the
+    * registry's `IllegalArgumentException`, a 400. */
   private def postRun(ex: HttpExchange): Unit = {
     val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
     val req = if (body.isBlank) ListMap.empty[String, Any] else asObj(Json.parse(body))
     val cfg = req.get("config").map(asObj) match {
-      case Some(c) => Pipeline.PipelineConfig(
-        csvPath = str(c, "csv_path").getOrElse("data/raw/products.csv"),
-        outputPath = str(c, "db_path").getOrElse("data/processed/products"),
-        tableName = str(c, "table_name").getOrElse("products"))
-      case None => Pipeline.PipelineConfig(outputPath = "data/processed/products")
+      case Some(c) => PipelineConfig(
+        csvPath = str(c, "csv_path").getOrElse(Defaults.csvPath),
+        outputPath = str(c, "db_path").getOrElse(Defaults.outputPath),
+        tableName = str(c, "table_name").getOrElse(Defaults.tableName))
+      case None => Defaults
     }
-    if (!Files.exists(Paths.get(cfg.csvPath)))
-      httpError(400, s"Source file not found: ${cfg.csvPath}")
     val rec = registry.start(cfg, req.get("run_name").collect { case s: String => s })
     sendJson(ex, 200, Json.Obj(
       "run_id" -> rec.runId,
@@ -147,24 +149,19 @@ final class HttpApi(spark: SparkSession, port: Int = 0)(implicit ec: ExecutionCo
 
   // ----------------------------------------------------------------- data
 
-  /** Resolve the serving table like api.py:174-187: registered catalog
-    * table by name first (managed-table loads), else the parquet directory
-    * at db_path (the SQLite-file analog); missing path → 404. */
-  private def resolveTable(params: Map[String, String]): DataFrame = {
-    val table = params.getOrElse("table_name", "products")
-    val dbPath = params.getOrElse("db_path", "data/processed/products")
-    if (spark.catalog.tableExists(table)) spark.table(table)
-    else if (Files.exists(Paths.get(dbPath))) spark.read.parquet(dbPath)
-    else httpError(404, s"Database not found: $dbPath")
-  }
+  /** The serving table named by the request: `table_name` and `db_path`,
+    * defaulting to [[PipelineConfig]]'s. */
+  private def tableParams(params: Map[String, String]): (String, String) =
+    (params.getOrElse("table_name", Defaults.tableName),
+     params.getOrElse("db_path", Defaults.outputPath))
 
   /** GET /api/data/preview (api.py:166-198). */
   private def getPreview(ex: HttpExchange): Unit = {
     val params = queryParams(ex)
     val limit = params.get("limit").map(parseIntParam("limit", _)).getOrElse(10)
-    Queries.requireValidLimit(limit)
-    val df = resolveTable(params)
-    val rows = df.limit(limit).collect()
+    val (table, dbPath) = tableParams(params)
+    val df = Queries.preview(spark, table, limit, dbPath)
+    val rows = df.collect()
     val cols = df.schema.fieldNames.toList
     sendJson(ex, 200, Json.Obj(
       "data" -> rows.toList.map(rowJson(cols, _)),
@@ -174,14 +171,14 @@ final class HttpApi(spark: SparkSession, port: Int = 0)(implicit ec: ExecutionCo
 
   /** GET /api/data/stats (api.py:205-242). */
   private def getStats(ex: HttpExchange): Unit = {
-    val params = queryParams(ex)
-    val df = resolveTable(params)
+    val (table, dbPath) = tableParams(queryParams(ex))
+    val st = Queries.stats(spark, table, dbPath)
     sendJson(ex, 200, Json.Obj(
-      "total_records" -> Queries.rowCount(df),
-      "columns_count" -> df.schema.size,
-      "columns" -> df.schema.fieldNames.toList,
-      "table_name" -> params.getOrElse("table_name", "products"),
-      "database_path" -> params.getOrElse("db_path", "data/processed/products")))
+      "total_records" -> st.totalRecords,
+      "columns_count" -> st.columnsCount,
+      "columns" -> st.columns.toList,
+      "table_name" -> st.tableName,
+      "database_path" -> dbPath))
   }
 
   /** GET /api/files/list (api.py:249-268): missing directory is not an
@@ -271,8 +268,8 @@ object ServerMain {
   def main(args: Array[String]): Unit = {
     implicit val ec: ExecutionContext = ExecutionContext.global
     val port = args.headOption.orElse(sys.env.get("GRAFT_HTTP_PORT")).map(_.toInt).getOrElse(8000)
-    val spark = graft.Graft.session("graft-server")
-    graft.Graft.ensureSampleData(spark, "data/raw/products.csv")
+    val spark = graft.Sessions.local("graft-server")
+    graft.etl.Synthetic.ensureProductsCsv(spark, PipelineConfig().csvPath)
     val api = new HttpApi(spark, port)
     val bound = api.start()
     println(s"graft API serving on http://0.0.0.0:$bound/ (dashboard at /)")

@@ -1,5 +1,6 @@
 package graft.serve
 
+import graft.etl.Pipeline.PipelineConfig
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -9,10 +10,13 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 
+import java.nio.file.{Files, Paths}
 import scala.util.Using
 
-/** The serving queries of `/root/reference/api.py`: preview (L1), stats
-  * (A1+A3), table-exists (M1), schema introspection (M2).
+/** The serving queries of the reference's `api.py`: preview (L1) and
+  * stats (A1+A3) of the table a pipeline run wrote, found by table name or
+  * `db_path` (M1). The library and [[HttpApi]] serve through these same
+  * calls; their defaults are [[PipelineConfig]]'s.
   *
   * Preview compiles to CollectLimitExec — Spark fetches at most `limit`
   * rows from the first non-empty partitions, never a full scan; count is
@@ -21,34 +25,39 @@ import scala.util.Using
   * partition. Both shapes are cluster-safe at any data size.
   */
 object Queries {
-  final class TableNotFound(t: String)
-      extends RuntimeException(s"Table '$t' not found")
+  final class TableNotFound(dbPath: String)
+      extends RuntimeException(s"Database not found: $dbPath")
 
-  private def resolve(spark: SparkSession, table: String): DataFrame = {
-    if (!spark.catalog.tableExists(table)) throw new TableNotFound(table)
-    spark.table(table)
-  }
+  /** The serving table, found as api.py:174-187 finds it: a catalog table
+    * or view named `table` first (managed-table loads), else the parquet
+    * directory at `dbPath` (the analog of the reference's SQLite file).
+    * Neither → [[TableNotFound]], the API's 404. Reading the directory's
+    * schema is a Spark job of its own. */
+  private def resolve(spark: SparkSession, table: String, dbPath: String): DataFrame =
+    if (spark.catalog.tableExists(table)) spark.table(table)
+    else if (Files.exists(Paths.get(dbPath))) spark.read.parquet(dbPath)
+    else throw new TableNotFound(dbPath)
 
-  /** Parameter validation for the preview contract — deliberate HARDENING
-    * over the reference, not parity: api.py:170's plain `limit: int = 10`
-    * has no ge=1 constraint, so the reference returns 200/empty for
-    * limit=0, ALL rows for negative limits (SQLite `LIMIT -1`), and 422
-    * for non-integers. Unbounded negative limits are arguably a reference
-    * bug; here non-positive limits are rejected (→ HTTP 400 via HttpApi)
-    * before any Spark work.
-    */
-  def requireValidLimit(limit: Int): Unit =
+  /** L1: SELECT * FROM t LIMIT n (api.py:189-198), default 10.
+    *
+    * A non-positive limit is rejected before any Spark work — deliberate
+    * HARDENING over the reference, not parity: api.py:170's plain
+    * `limit: int = 10` has no ge=1 constraint, so the reference returns
+    * 200/empty for limit=0, ALL rows for negative limits (SQLite
+    * `LIMIT -1`), and 422 for non-integers. Here such a limit is an
+    * `IllegalArgumentException` (→ HTTP 400 via HttpApi). */
+  def preview(spark: SparkSession, table: String, limit: Int = 10,
+              dbPath: String = PipelineConfig().outputPath): DataFrame = {
     require(limit >= 1, s"limit must be >= 1, got $limit")
-
-  /** L1: SELECT * FROM t LIMIT n (api.py:189-198), default 10. */
-  def preview(spark: SparkSession, table: String, limit: Int = 10): DataFrame =
-    resolve(spark, table).limit(limit)
+    resolve(spark, table, dbPath).limit(limit)
+  }
 
   /** A1+A3: {total_records, columns_count, columns} (api.py:227-242). */
   final case class TableStats(totalRecords: Long, columnsCount: Int,
                               columns: Seq[String], tableName: String)
-  def stats(spark: SparkSession, table: String): TableStats = {
-    val df = resolve(spark, table)
+  def stats(spark: SparkSession, table: String,
+            dbPath: String = PipelineConfig().outputPath): TableStats = {
+    val df = resolve(spark, table, dbPath)
     TableStats(rowCount(df), df.schema.size, df.schema.fieldNames.toSeq, table)
   }
 
@@ -77,8 +86,4 @@ object Queries {
   def statsDf(spark: SparkSession, df: DataFrame): DataFrame =
     df.agg(count(lit(1)).as("total_records"),
            lit(df.schema.size).cast("long").as("columns_count"))
-
-  /** M2: ordered column names (api.py:192-193,230-232) — metadata only. */
-  def columns(spark: SparkSession, table: String): Seq[String] =
-    resolve(spark, table).schema.fieldNames.toSeq
 }

@@ -38,7 +38,7 @@ object Runs {
       * (api.py:112-116); registers pending, schedules async execution. */
     def start(config: PipelineConfig, runName: Option[String] = None): RunRecord = {
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(config.csvPath)))
-        throw new IllegalArgumentException(s"CSV path not found: ${config.csvPath}")
+        throw new IllegalArgumentException(s"Source file not found: ${config.csvPath}")
       val id = UUID.randomUUID().toString
       val rec = RunRecord(id, "pending", Instant.now(), None, None,
         "Pipeline run created", config, runName, None)

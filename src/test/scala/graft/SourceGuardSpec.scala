@@ -8,8 +8,9 @@ import scala.util.Using
   * [[Sessions.withConf]], the core count is read only by [[Sizing]],
   * fixture dirs are named only by [[graft.ops.Fixtures]], sessions are
   * built only by [[Sessions]], leaked blocks are swept only by the
-  * run loop [[Harness.each]], and running totals in a global order are
-  * computed only by [[graft.ops.Prefix]]. */
+  * run loop [[Harness.each]], running totals in a global order are
+  * computed only by [[graft.ops.Prefix]], and the serving table is found
+  * only by [[graft.serve.Queries]]. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -69,6 +70,18 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("spark_partition_id and orderBy(\"pid\") appear only in Prefix") {
     val inPrefix = (p: Path, _: IndexedSeq[String], _: Int) => p.endsWith("graft/ops/Prefix.scala")
     val bad = hits("spark_partition_id", inPrefix) ++ hits("orderBy(\"pid\")", inPrefix)
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  test("serve/ reads a serving table only in Queries.resolve; no Graft facade object") {
+    def inResolve(p: Path, lines: IndexedSeq[String], i: Int): Boolean =
+      !p.toString.contains("graft/serve/") || p.endsWith("graft/serve/Queries.scala") && {
+        val start = lines.lastIndexWhere(l => l.trim.startsWith("def ") || l.trim.startsWith("private def "), i)
+        start >= 0 && lines(start).contains("def resolve(")
+      }
+    val facade = "\\bobject Graft\\b".r
+    val bad = hits("spark.read.parquet(", inResolve) ++ hits("catalog.tableExists", inResolve) ++
+      hits("object Graft", (_, lines, i) => facade.findFirstIn(lines(i)).isEmpty)
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 }

@@ -86,4 +86,17 @@ class PrefixSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .toDF("id", "grp", "a", "b")
     assert(got(sums(df, byGroup = true)).keySet == Set(1L, 3L))
   }
+
+  test("one sums call runs no job of its own to pin the range exchange") {
+    val df = base.toDF("id", "grp", "a", "b").repartition(3)
+    val sc = spark.sparkContext
+    var out: DataFrame = null
+    val jobs = jobsInGroup("prefix-sums") {
+      sc.setJobGroup("prefix-sums", "one Prefix.sums call")
+      try out = sums(df, byGroup = true) finally sc.clearJobGroup()
+    }
+    // the totals collect fills the pin; an eager pin is one job more (5)
+    assert(jobs == 4, s"$jobs jobs")
+    assert(got(out) == expected(base, byGroup = true))
+  }
 }
