@@ -4,7 +4,7 @@ import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
@@ -26,13 +26,10 @@ import scala.util.control.NonFatal
   * (`/root/reference/src/ingest.py:36`).
   *
   * Scale notes: schema inference and the per-file checks share ONE job over
-  * every file's lines (see [[inferAndCheck]]); callers on large inputs can
-  * pass `schema` to skip it. Each file is then read as its own distributed
-  * scan under its own inferred schema, only to reproduce the reference's
-  * per-file dtypes, fault tolerance and union-by-name. For a homogeneous
-  * 100 TB directory use [[readCsvDirFast]], which issues ONE multi-file
-  * scan (single source relation, partition-parallel, no per-file plan
-  * nodes).
+  * every file's lines (see [[inferAndCheck]]). Each file is then read as
+  * its own distributed scan under its own inferred schema, only to
+  * reproduce the reference's per-file dtypes, fault tolerance and
+  * union-by-name: a directory of many files plans one scan node per file.
   */
 object Ingest {
   private val log = LoggerFactory.getLogger(getClass)
@@ -70,11 +67,10 @@ object Ingest {
 
   /** Single-file read (ingest.py:12-21): non-CSV suffix is an error, and
     * so is a file that fails the checks of [[readCsvDir]]. */
-  def readCsvFile(spark: SparkSession, path: String,
-                  schema: Option[StructType] = None): DataFrame = {
+  def readCsvFile(spark: SparkSession, path: String): DataFrame = {
     if (!isCsv(path))
       throw new IngestException(s"Unsupported file type (expected .csv): $path")
-    readFiles(spark, Seq(path), strict = true, schema, fullValidation = false).head
+    readFiles(spark, Seq(path), strict = true).head
   }
 
   /** Directory read. `strict=false` = tolerant (src/ingest.py:23-36):
@@ -86,13 +82,10 @@ object Ingest {
     * data row's field count differs from its header's: the row a FAILFAST
     * parse would reject when the frame is read. The reference's eager
     * pandas parse likewise skips a file with an over-long row (a short one
-    * it pads with NaN). The check runs in the same single job as schema
-    * inference. With a given `schema` no job runs unless
-    * `fullValidation=true`, which then parses every row under `schema`.
+    * it pads with NaN). The check reads every row, in the same single job
+    * as schema inference.
     */
-  def readCsvDir(spark: SparkSession, dir: String, strict: Boolean = false,
-                 schema: Option[StructType] = None,
-                 fullValidation: Boolean = false): DataFrame = {
+  def readCsvDir(spark: SparkSession, dir: String, strict: Boolean = false): DataFrame = {
     val p = Paths.get(dir)
     val entries = Files.list(p).iterator().asScala.toSeq
       .filter(Files.isRegularFile(_))
@@ -101,7 +94,7 @@ object Ingest {
       .sorted
     if (entries.isEmpty)
       throw new IngestException(s"No CSV files found in directory: $dir")
-    val frames = readFiles(spark, entries.map(p.resolve(_).toString), strict, schema, fullValidation)
+    val frames = readFiles(spark, entries.map(p.resolve(_).toString), strict)
     if (frames.isEmpty)
       throw new IngestException(s"No readable CSV files in directory: $dir")
     unionByName(frames)
@@ -110,13 +103,9 @@ object Ingest {
   /** One lazy frame per readable file, in order. A file that fails
     * [[inferAndCheck]] is warned about and skipped, or with `strict`
     * aborts the read naming it. */
-  private def readFiles(spark: SparkSession, files: Seq[String], strict: Boolean,
-                        schema: Option[StructType], fullValidation: Boolean): Seq[DataFrame] = {
+  private def readFiles(spark: SparkSession, files: Seq[String], strict: Boolean): Seq[DataFrame] = {
     val paths = files.map(visible)
-    val checked =
-      if (schema.isDefined && !fullValidation) paths.map(_ => Right(schema.get))
-      else inferAndCheck(spark, paths, schema)
-    files.zip(paths).zip(checked).flatMap {
+    files.zip(paths).zip(inferAndCheck(spark, paths)).flatMap {
       case ((_, path), Right(s)) => Some(readOne(spark, path, s))
       case ((file, _), Left(why)) if !strict =>
         log.warn(s"Skipping unreadable CSV $file: $why")
@@ -132,17 +121,15 @@ object Ingest {
   private final case class Slice(file: Int, types: Array[DataType],
                                  badRow: Option[String], error: Option[String])
 
-  /** Every file's schema (`schema` when given, else inferred per file
-    * exactly as Spark's `TextInputCSVDataSource.inferFromDataset` infers
-    * it, with the same `CSVUtils`/`CSVInferSchema` functions — Spark
-    * internals, not a stable API; IngestSpec pins the result against
-    * Spark's own inference), or why the file is rejected: a read error, or
-    * a data row whose field count differs from the header's (with a given
-    * `schema`: a row that does not parse under it). The header lines are
+  /** Every file's schema, inferred per file exactly as Spark's
+    * `TextInputCSVDataSource.inferFromDataset` infers it, with the same
+    * `CSVUtils`/`CSVInferSchema` functions — Spark internals, not a stable
+    * API; IngestSpec pins the result against Spark's own inference — or
+    * why the file is rejected: a read error, or a data row whose field
+    * count differs from the header's. The header lines are
     * read on the driver; everything else is ONE job over the union of the
     * files' lines, where Spark's own inference runs two jobs per file. */
-  private def inferAndCheck(spark: SparkSession, paths: Seq[String],
-                            schema: Option[StructType]): Seq[Either[String, StructType]] = {
+  private def inferAndCheck(spark: SparkSession, paths: Seq[String]): Seq[Either[String, StructType]] = {
     val session = spark.asInstanceOf[ClassicSession]
     val conf = session.sessionState.conf
     val opts = new CSVOptions(ReadOptions, conf.csvColumnPruning, conf.sessionLocalTimeZone)
@@ -155,20 +142,20 @@ object Ingest {
       }).toEither.left.map(_.toString)
     }
     val lines = headers.zipWithIndex.collect { case (Right(Some((line, names))), i) =>
-      sliceJob(spark, paths(i), i, line, names.length, opts, schema)
+      sliceJob(spark, paths(i), i, line, names.length, opts)
     }
     val slices = if (lines.isEmpty) Map.empty[Int, Seq[Slice]] else
       SQLExecution.withSQLConfPropagated(session)(spark.sparkContext.union(lines).collect()).toSeq.groupBy(_.file)
     val infer = new CSVInferSchema(opts)
     headers.zipWithIndex.map {
       case (Left(error), _) => Left(error)
-      case (Right(None), _) => Right(schema.getOrElse(new StructType())) // no header: no columns
+      case (Right(None), _) => Right(new StructType()) // no header: no columns
       case (Right(Some((_, header))), i) =>
         val seen = slices.getOrElse(i, Nil)
         seen.flatMap(s => s.error.orElse(s.badRow)).headOption.map(Left(_))
-          .getOrElse(Right(schema.getOrElse(StructType(infer.toStructFields(
+          .getOrElse(Right(StructType(infer.toStructFields(
             seen.map(_.types).foldLeft(Array.fill[DataType](header.length)(NullType))(infer.mergeRowTypes),
-            header)))))
+            header))))
     }
   }
 
@@ -177,35 +164,27 @@ object Ingest {
     * arguments (a closure inside a pattern-matching function would capture
     * the session along with it). */
   private def sliceJob(spark: SparkSession, path: String, file: Int, header: String, width: Int,
-                       opts: CSVOptions, parseUnder: Option[StructType]): RDD[Slice] =
+                       opts: CSVOptions): RDD[Slice] =
     spark.read.text(path).rdd
-      .mapPartitions(rows => Iterator(scanSlice(file, header, width, rows.map(_.getString(0)), opts, parseUnder)))
+      .mapPartitions(rows => Iterator(scanSlice(file, header, width, rows.map(_.getString(0)), opts)))
 
   /** One task of [[inferAndCheck]]: `lines` are one split of file `file`.
     * Every data row's field count is checked against the header's `width`
-    * (a mismatch is what a FAILFAST parse rejects), or with `parseUnder`
-    * every row is parsed under that schema; without `parseUnder` the rows'
-    * types are inferred. Errors are caught here so they stay tied to their
-    * file instead of failing the job. */
-  private def scanSlice(file: Int, header: String, width: Int, lines: Iterator[String], opts: CSVOptions,
-                        parseUnder: Option[StructType]): Slice = {
+    * (a mismatch is what a FAILFAST parse rejects) and its types are
+    * inferred. Errors are caught here so they stay tied to their file
+    * instead of failing the job. */
+  private def scanSlice(file: Int, header: String, width: Int, lines: Iterator[String],
+                        opts: CSVOptions): Slice = {
     val tokenizer = new CsvParser(opts.asParserSettings)
     val infer = new CSVInferSchema(opts)
-    val parser = parseUnder.map(new UnivocityParser(_, opts))
     var types = Array.fill[DataType](width)(NullType)
     var badRow = Option.empty[String]
     val error = try {
       CSVUtils.filterHeaderLine(CSVUtils.filterCommentAndEmpty(lines, opts), header, opts).foreach { line =>
-        parser match {
-          case Some(p) =>
-            if (badRow.isEmpty && Try(p.parse(line)).isFailure)
-              badRow = Some("a data row does not parse under the given schema")
-          case None =>
-            val tokens = tokenizer.parseLine(line)
-            if (badRow.isEmpty && tokens.length != width)
-              badRow = Some(s"a data row has ${tokens.length} fields, header has $width")
-            types = infer.inferRowType(types, tokens)
-        }
+        val tokens = tokenizer.parseLine(line)
+        if (badRow.isEmpty && tokens.length != width)
+          badRow = Some(s"a data row has ${tokens.length} fields, header has $width")
+        types = infer.inferRowType(types, tokens)
       }
       None
     } catch { case NonFatal(e) => Some(e.toString) }
@@ -219,28 +198,11 @@ object Ingest {
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Path-kind dispatch (ingest.py:9-40): file vs dir vs missing. */
-  def ingest(spark: SparkSession, path: String, strict: Boolean = false,
-             schema: Option[StructType] = None): DataFrame = {
+  def ingest(spark: SparkSession, path: String, strict: Boolean = false): DataFrame = {
     val p = Paths.get(path)
-    if (Files.isRegularFile(p)) readCsvFile(spark, path, schema)
-    else if (Files.isDirectory(p)) readCsvDir(spark, path, strict, schema)
+    if (Files.isRegularFile(p)) readCsvFile(spark, path)
+    else if (Files.isDirectory(p)) readCsvDir(spark, path, strict)
     else throw new IngestException(s"Path not found: $path")
-  }
-
-  /** Scale path: one multi-file scan for a homogeneous CSV directory.
-    * Catalyst plans a single FileSourceScanExec over all matching files
-    * (splits parallelized across executors); hidden files are excluded by
-    * Spark's own `_`/`.` filter, and `pathGlobFilter` keeps only CSVs.
-    */
-  def readCsvDirFast(spark: SparkSession, dir: String,
-                     schema: Option[StructType] = None): DataFrame = {
-    val base = spark.read
-      .option("header", "true")
-      .option("pathGlobFilter", "*.{csv,CSV}")
-    (schema match {
-      case Some(s) => base.schema(s)
-      case None    => base.option("inferSchema", "true")
-    }).csv(dir)
   }
 
   /** CSV file listing with sizes (api.py:249-272): name, path, size_bytes,

@@ -877,58 +877,36 @@ object Dedup {
     // enough to exceed it would need ridge chains past 64 edges — at
     // that point raise maxIter or switch to the large-star/small-star
     // contraction noted above.
-    val (edgesAll, edgeCountRow) = Iterate.materializeObserved(
+    // Graph-sized shuffles and the tiny-graph conf (Iterate.onGraph):
+    // under AQE each round's query became several stage-jobs — at
+    // fixture scale the whole loop was driver job-submission latency
+    // (m7: 148 jobs of < 0.3 s stages). Big graphs run unchanged.
+    Iterate.onGraph(
       pairs.select(col(aCol).cast("long").as("v"), col(bCol).cast("long").as("w"))
         .union(pairs.select(col(bCol).cast("long").as("v"), col(aCol).cast("long").as("w")))
-        .distinct(), count(lit(1)).as("n"))
-    // NOTE every materialization below goes through Iterate.materialize,
-    // not bare localCheckpoint — see Iterate's scaladoc for the
-    // double-exponential stats-estimate blowup it prevents (sf1 find).
-    // Size the per-round shuffles to the GRAPH, not the session default:
-    // the dup-pair graph is orders of magnitude smaller than the corpus,
-    // and an iterative loop pays partition-scheduling overhead every
-    // round (at fixture scale, 32-partition shuffles over a few hundred
-    // edges made the loop ~5× slower than the data justifies). The
-    // checkpoint above already ran, so the count is free metadata.
-    val parts = graft.Sizing.width(edgesAll.sparkSession, edgeCountRow.getLong(0), graft.Sizing.LoopEdges)
-    // Tiny-graph fast path (Iterate.withTinyLoopConf): under AQE each
-    // round's query became several stage-jobs — at fixture scale the
-    // whole loop was driver job-submission latency (m7: 148 jobs of
-    // < 0.3 s stages). Big graphs (parts == parallelism) run unchanged.
-    Iterate.withTinyLoopConf(edgesAll.sparkSession, parts) {
-    val edges = Iterate.materialize(edgesAll.repartition(parts, col("w")))
-    // Convergence probe: comp is pointwise non-increasing (min over a set
-    // containing itself, then jump to comp(comp) <= comp), so the labels
-    // changed this round IFF sum(comp) strictly decreased — one scalar
-    // aggregate per round (decimal sum: 10^12 docs × 10^12 max id
-    // overflows a long). The probe rides each round's OWN checkpoint job
-    // (Iterate.materializeObserved): a separate probe action per round
-    // costs a full job submission, which dominated the loop's wall time
-    // once per-task work was sized to the graph.
-    val probe = sum(col("comp").cast("decimal(38,0)")).as("s")
-    def metric(r: org.apache.spark.sql.Row): java.math.BigDecimal =
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    var (labels, row0) = Iterate.materializeObserved(
-      edges.select(col("v")).distinct().withColumn("comp", col("v")), probe)
-    var prevSum = metric(row0)
-    var iter = 0
-    var done = prevSum.signum() == 0 && labels.isEmpty
-    while (!done && iter < maxIter) {
-      val nbrMin = edges.join(labels.select(col("v").as("w"), col("comp")), "w")
-        .groupBy("v").agg(min("comp").as("nc"))
-      val tentative = labels.join(nbrMin, Seq("v"), "left")
-        .select(col("v"), least(col("comp"), coalesce(col("nc"), col("comp"))).as("comp"))
-      val (jumped, r) = Iterate.materializeObserved(tentative
-        .join(tentative.select(col("v").as("comp"), col("comp").as("cc")), Seq("comp"), "left")
-        .select(col("v"), coalesce(col("cc"), col("comp")).as("comp"))
-        .repartition(parts, col("v")), probe)
-      val s = metric(r)
-      done = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = jumped
-      iter += 1
-    }
-    (labels, iter)
+        .distinct()) { (edgesAll, parts) =>
+      // every materialization goes through Iterate, not bare
+      // localCheckpoint — see Iterate's scaladoc for the
+      // double-exponential stats-estimate blowup it prevents (sf1 find)
+      val edges = Iterate.materialize(edgesAll.repartition(parts, col("w")))
+      // Convergence signature: comp is pointwise non-increasing (min over
+      // a set containing itself, then jump to comp(comp) <= comp), so the
+      // labels changed this round IFF sum(comp) strictly decreased — one
+      // scalar aggregate per round (decimal sum: 10^12 docs × 10^12 max
+      // id overflows a long).
+      val loop = Iterate.fixpoint(
+          edges.select(col("v")).distinct().withColumn("comp", col("v")), maxIter,
+          sum(col("comp").cast("decimal(38,0)")).as("s")) { labels =>
+        val nbrMin = edges.join(labels.select(col("v").as("w"), col("comp")), "w")
+          .groupBy("v").agg(min("comp").as("nc"))
+        val tentative = labels.join(nbrMin, Seq("v"), "left")
+          .select(col("v"), least(col("comp"), coalesce(col("nc"), col("comp"))).as("comp"))
+        tentative
+          .join(tentative.select(col("v").as("comp"), col("comp").as("cc")), Seq("comp"), "left")
+          .select(col("v"), coalesce(col("cc"), col("comp")).as("comp"))
+          .repartition(parts, col("v"))
+      }
+      (loop.table, loop.rounds)
     }
   }
 
@@ -997,61 +975,44 @@ object Dedup {
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
       .distinct()
-    // graph-sized shuffles, the connectedComponents discipline; the
-    // count for sizing rides the entry checkpoint's own job
-    val (canonCp, canonCount) = Iterate.materializeObserved(canon, count(lit(1)).as("n"))
-    val parts = graft.Sizing.width(canonCp.sparkSession, canonCount.getLong(0), graft.Sizing.LoopEdges)
-    // the (count, hash-sum) fixpoint signature rides each round's own
-    // checkpoint job (Iterate.materializeObserved); tiny graphs run the
-    // whole loop single-job-per-round (Iterate.withTinyLoopConf)
-    Iterate.withTinyLoopConf(canonCp.sparkSession, parts) {
-    val sigExprs = Seq(count(lit(1)).as("n"),
-      sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("s"))
-    def metric(r: org.apache.spark.sql.Row): (Long, java.math.BigDecimal) =
-      (r.getLong(0), if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-    var (edges, row0) = Iterate.materializeObserved(
-      canonCp.repartition(parts, col("u")), sigExprs: _*)
-    var prev = metric(row0)
-    var iter = 0
-    var done = prev._1 == 0L
-    while (!done && iter < maxIter) {
-      // large-star: every neighborhood (both directions) finds its min;
-      // strictly-larger neighbors x > u re-attach as (m, x), m <= u < x
-      val nbrs = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      val lMin = nbrs.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = nbrs.join(lMin, "u").filter(col("v") > col("u"))
-        .filter(col("v") =!= col("m"))
-        .select(col("m").as("u"), col("v"))
+    // graph-sized shuffles and the tiny-graph conf, the
+    // connectedComponents discipline (Iterate.onGraph)
+    Iterate.onGraph(canon) { (canonCp, parts) =>
+      // the fixpoint signature: edge count (observed by Iterate.fixpoint
+      // itself) + Σ xxhash64(u, v)
+      val loop = Iterate.fixpoint(canonCp.repartition(parts, col("u")), maxIter,
+          sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("s")) { edges =>
+        // large-star: every neighborhood (both directions) finds its min;
+        // strictly-larger neighbors x > u re-attach as (m, x), m <= u < x
+        val nbrs = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
+        val lMin = nbrs.groupBy("u").agg(min("v").as("mn"))
+          .select(col("u"), least(col("u"), col("mn")).as("m"))
+        val large = nbrs.join(lMin, "u").filter(col("v") > col("u"))
+          .filter(col("v") =!= col("m"))
+          .select(col("m").as("u"), col("v"))
+          .distinct()
+        // small-star: on the canonical (small u <- big v) orientation,
+        // each node v with smaller neighbors attaches them AND itself to
+        // the minimum of those neighbors
+        val down = large.select(col("v").as("n"), col("u").as("s"))
+        val sMin = down.groupBy("n").agg(min("s").as("m"))
+        down.join(sMin, "n")
+          .select(col("m"), explode(array(col("s"), col("n"))).as("x"))
+          .filter(col("x") =!= col("m"))
+          .select(col("m").as("u"), col("x").as("v"))
+          .distinct()
+          .repartition(parts, col("u"))
+      }
+      if (!loop.converged)
+        throw new IllegalStateException(
+          s"star contraction did not converge in $maxIter rounds — O(log^2 n) " +
+          "makes this unreachable for any real graph; check for id overflow")
+      // the fixpoint is a star forest: (m, x) per vertex x, plus the root
+      // m itself mapping to m
+      val edges = loop.table
+      edges.select(col("v"), col("u").as("comp"))
+        .unionAll(edges.select(col("u").as("v"), col("u").as("comp")))
         .distinct()
-      // small-star: on the canonical (small u <- big v) orientation,
-      // each node v with smaller neighbors attaches them AND itself to
-      // the minimum of those neighbors
-      val down = large.select(col("v").as("n"), col("u").as("s"))
-      val sMin = down.groupBy("n").agg(min("s").as("m"))
-      val small = down.join(sMin, "n")
-        .select(col("m"), explode(array(col("s"), col("n"))).as("x"))
-        .filter(col("x") =!= col("m"))
-        .select(col("m").as("u"), col("x").as("v"))
-        .distinct()
-      val (next, row) = Iterate.materializeObserved(
-        small.repartition(parts, col("u")), sigExprs: _*)
-      edges = next
-      val s = metric(row)
-      // compareTo, not equals: BigDecimal.equals is scale-sensitive
-      done = s._1 == prev._1 && s._2.compareTo(prev._2) == 0
-      prev = s
-      iter += 1
-    }
-    if (!done && prev._1 > 0L)
-      throw new IllegalStateException(
-        s"star contraction did not converge in $maxIter rounds — O(log^2 n) " +
-        "makes this unreachable for any real graph; check for id overflow")
-    // the fixpoint is a star forest: (m, x) per vertex x, plus the root
-    // m itself mapping to m
-    edges.select(col("v"), col("u").as("comp"))
-      .unionAll(edges.select(col("u").as("v"), col("u").as("comp")))
-      .distinct()
     }
   }
 

@@ -455,70 +455,33 @@ object Graph {
     * shrinks monotonically, so rounds get cheaper as they go.
     */
   def partKCore(spark: SparkSession, dir: String, k: Long = 80L,
-                rounds: Int = 10, maxPart: Long = 20000L): DataFrame = {
+                rounds: Int = 10, maxPart: Long = 20000L): DataFrame =
+    kCoreLoop(spark, dir, k, rounds, maxPart).table
+      .groupBy("v").agg(count(lit(1)).as("core_degree"))
+      .select(col("v").as("node"), col("core_degree"))
+      .orderBy("node")
+
+  /** [[partKCore]]'s peeling loop, with its round count for the
+    * convergence spec. Early exit at the fixpoint is EXACT: peeling is
+    * monotone, so the edge count stops changing exactly when the edge set
+    * does, and the remaining bounded rounds are no-ops the oracle replays
+    * literally. */
+  private[graft] def kCoreLoop(spark: SparkSession, dir: String, k: Long,
+                               rounds: Int, maxPart: Long): Iterate.Loop = {
     require(k >= 1 && rounds >= 1)
     val und = orientedCoPurchase(spark, dir, maxPart).und
-    // early-exit at the fixpoint is EXACT (peeling is monotone, so the
-    // remaining bounded rounds are no-ops the oracle replays literally);
-    // the count probe rides each round's own checkpoint job
-    // (Iterate.materializeObserved — a separate count action per round
-    // costs a full job submission)
-    val probe = count(lit(1)).as("n")
-    var (edges, row0) = Iterate.materializeObserved(
-      und.select(col("a").as("v"), col("b").as("w"))
-        .unionAll(und.select(col("b").as("v"), col("a").as("w"))), probe)
-    var prev = row0.getLong(0)
-    var r = 0
-    while (r < rounds) {
+    Iterate.fixpoint(und.select(col("a").as("v"), col("b").as("w"))
+        .unionAll(und.select(col("b").as("v"), col("a").as("w"))), rounds) { edges =>
       // alive is capped by maxPart (catalog-sized) — broadcast both
       // semi joins explicitly: the rewrapped edge checkpoint carries
       // DEFAULT size stats, so the planner would otherwise plan two
       // sort-merge joins (4 exchanges + sorts) per peeling round
       val alive = broadcast(edges.groupBy("v").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("v"))
-      val (next, row) = Iterate.materializeObserved(
-        edges.join(alive, Seq("v"), "left_semi")
-          .join(alive.withColumnRenamed("v", "w"), Seq("w"), "left_semi")
-          .select("v", "w"), probe)
-      edges = next
-      r += 1
-      val cur = row.getLong(0)
-      if (cur == prev) r = rounds
-      prev = cur
+      edges.join(alive, Seq("v"), "left_semi")
+        .join(alive.withColumnRenamed("v", "w"), Seq("w"), "left_semi")
+        .select("v", "w")
     }
-    edges.groupBy("v").agg(count(lit(1)).as("core_degree"))
-      .select(col("v").as("node"), col("core_degree"))
-      .orderBy("node")
-  }
-
-  /** Instrumented twin of [[partKCore]] for the convergence spec: the
-    * round index after which the alive-node count stopped changing
-    * (must sit strictly inside the fixed bound for the oracle's no-op
-    * premise to hold).
-    */
-  private[graft] def kCoreConvergenceRound(spark: SparkSession, dir: String,
-                                           k: Long = 80L, rounds: Int = 10,
-                                           maxPart: Long = 20000L): Int = {
-    val und = orientedCoPurchase(spark, dir, maxPart).und
-    var edges = Iterate.materialize(
-      und.select(col("a").as("v"), col("b").as("w"))
-        .unionAll(und.select(col("b").as("v"), col("a").as("w"))))
-    var prev = edges.select("v").distinct().count()
-    var r = 0
-    var converged = -1
-    while (r < rounds) {
-      val alive = broadcast(edges.groupBy("v").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select("v"))
-      edges = Iterate.materialize(
-        edges.join(alive, Seq("v"), "left_semi")
-          .join(alive.withColumnRenamed("v", "w"), Seq("w"), "left_semi")
-          .select("v", "w"))
-      val cur = edges.select("v").distinct().count()
-      if (converged < 0 && cur == prev) converged = r
-      prev = cur
-      r += 1
-    }
-    if (converged < 0) rounds else converged
   }
 
   /** Label-propagation COMMUNITIES (n6, after Raghavan et al. 2007,
@@ -609,20 +572,12 @@ object Graph {
         .unionAll(und.select(col("b").as("v"), col("a").as("w"))))
     val hubs = deg.orderBy(col("d").desc, col("v")).limit(nHubs)
       .select(col("v"), lit(0L).as("hd"))
-    // the (reached count, reached-distance sum) fixpoint probe rides
-    // each round's own checkpoint job (Iterate.materializeObserved)
-    val probeExprs = Seq(count(col("dist")).as("n"),
-      sum(col("dist").cast("decimal(38,0)")).as("s"))
-    def metric(r: org.apache.spark.sql.Row): (Long, java.math.BigDecimal) =
-      (r.getLong(0), if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-    var (dist, row0) = Iterate.materializeObserved(
-      edges.select(col("v")).distinct()
-        .join(hubs, Seq("v"), "left")
-        .select(col("v"), col("hd").as("dist")), probeExprs: _*)
-    var prev = metric(row0)
-    var done = false
-    var iter = 0
-    while (!done && iter < maxIter) {
+    // the (reached count, reached-distance sum) fixpoint signature
+    val loop = Iterate.fixpoint(
+        edges.select(col("v")).distinct()
+          .join(hubs, Seq("v"), "left")
+          .select(col("v"), col("hd").as("dist")), maxIter,
+        count(col("dist")).as("n"), sum(col("dist").cast("decimal(38,0)")).as("s")) { dist =>
       // both per-round joins are map-side: the distance table and the
       // relaxed-min table are O(nodes), maxPart-capped — the same bound
       // that lets partLabelProp broadcast its label table — and the
@@ -632,25 +587,19 @@ object Graph {
         .join(broadcast(dist.select(col("v").as("w"), col("dist").as("dw"))), "w")
         .filter(col("dw").isNotNull)
         .groupBy("v").agg(min(col("dw") + 1L).as("nd"))
-      val (next, row) = Iterate.materializeObserved(
-        dist.join(broadcast(relaxed), Seq("v"), "left")
-          .select(col("v"),
-            least(coalesce(col("dist"), col("nd")),
-                  coalesce(col("nd"), col("dist"))).as("dist")), probeExprs: _*)
-      dist = next
-      val p = metric(row)
-      done = p._1 == prev._1 && p._2.compareTo(prev._2) == 0
-      prev = p
-      iter += 1
+      dist.join(broadcast(relaxed), Seq("v"), "left")
+        .select(col("v"),
+          least(coalesce(col("dist"), col("nd")),
+                coalesce(col("nd"), col("dist"))).as("dist"))
     }
     // monotone labels mean a mid-iteration table is only an UPPER BOUND
     // on the true distances — hitting the cap is an error, not an answer
     // (BFS converges within the graph diameter; 64 is unreachable for a
     // catalog co-purchase graph)
-    if (!done)
+    if (!loop.converged)
       throw new IllegalStateException(
         s"hub-distance relaxation did not converge in $maxIter rounds")
-    dist.select(col("v").as("l_partkey"), col("dist").as("hub_dist"))
+    loop.table.select(col("v").as("l_partkey"), col("dist").as("hub_dist"))
       .orderBy("l_partkey")
   }
 
@@ -687,33 +636,29 @@ object Graph {
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b")) // a self-pair would double-count its own vote
       .distinct()
-    val (edgesAll, edgeCountRow) = Iterate.materializeObserved(
-      und.select(col("a").as("v"), col("b").as("w"))
-        .unionAll(und.select(col("b").as("v"), col("a").as("w"))),
-      count(lit(1)).as("n"))
-    val parts = graft.Sizing.width(edgesAll.sparkSession, edgeCountRow.getLong(0), graft.Sizing.LoopEdges)
-    // tiny graphs run the whole loop single-job-per-round
-    // (Iterate.withTinyLoopConf); big graphs run unchanged under AQE
-    val labels = Iterate.withTinyLoopConf(edgesAll.sparkSession, parts) {
-    val edges = Iterate.materialize(edgesAll.repartition(parts, col("w")))
-    var labels = Iterate.materialize(
-      edges.select(col("v")).distinct().select(col("v"), col("v").as("lbl"))
-        .repartition(parts, col("v")))
-    for (_ <- 1 to rounds) {
-      // one graph-sized exchange per round: the explicit hash(v)
-      // repartition serves BOTH the (v, lbl) vote count and the argmax
-      // groupBy(v), and its output partitioning is already the hash(v)
-      // the next round's label table needs
-      val votes = edges
-        .join(labels.select(col("v").as("w"), col("lbl")), Seq("w"))
-        .repartition(parts, col("v"))
-        .groupBy(col("v"), col("lbl")).agg(count(lit(1)).as("c"))
-      labels = Iterate.materialize(
-        votes.groupBy(col("v"))
-          .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
-          .select(col("v"), (-col("m.neg")).as("lbl")))
-    }
-    labels
+    // graph-sized shuffles; tiny graphs run the whole loop
+    // single-job-per-round, big ones unchanged under AQE (Iterate.onGraph)
+    val labels = Iterate.onGraph(und.select(col("a").as("v"), col("b").as("w"))
+        .unionAll(und.select(col("b").as("v"), col("a").as("w")))) { (edgesAll, parts) =>
+      val edges = Iterate.materialize(edgesAll.repartition(parts, col("w")))
+      var labels = Iterate.materialize(
+        edges.select(col("v")).distinct().select(col("v"), col("v").as("lbl"))
+          .repartition(parts, col("v")))
+      for (_ <- 1 to rounds) {
+        // one graph-sized exchange per round: the explicit hash(v)
+        // repartition serves BOTH the (v, lbl) vote count and the argmax
+        // groupBy(v), and its output partitioning is already the hash(v)
+        // the next round's label table needs
+        val votes = edges
+          .join(labels.select(col("v").as("w"), col("lbl")), Seq("w"))
+          .repartition(parts, col("v"))
+          .groupBy(col("v"), col("lbl")).agg(count(lit(1)).as("c"))
+        labels = Iterate.materialize(
+          votes.groupBy(col("v"))
+            .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
+            .select(col("v"), (-col("m.neg")).as("lbl")))
+      }
+      labels
     }
     // community sizes join WITHOUT a broadcast hint: the label table is
     // vertex-sized here (unlike partLabelProp's catalog-capped one), so

@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{count, lit}
 
-/** Materialization helper for iterative DataFrame loops (connected
-  * components, Lloyd's codebook training).
+/** Materialization and convergence for iterative DataFrame loops
+  * (connected components, k-core, BFS, Lloyd's codebook training).
   *
   * `localCheckpoint(eager = true)` alone is NOT enough to make a loop
   * scale-safe on Spark 4: `LogicalRDD.fromDataset` rewrites the SOURCE
@@ -41,23 +42,67 @@ object Iterate {
   def materialize(df: DataFrame): DataFrame = wrapCheckpoint(
     df.localCheckpoint(eager = true, storageLevel = CheckpointLevel))
 
-  /** [[materialize]] that ALSO evaluates aggregate metrics over the
-    * materialized rows inside the SAME job (`Dataset.observe` — the
-    * metrics are read back from the plan's CollectMetrics node after the
-    * eager checkpoint executes, verified retrievable on Spark 4.1).
-    * Iterative loops use this for their convergence probes: a
-    * probe-per-round as a separate action costs a full job submission
-    * (~50 ms of driver latency at fixture scale — the dominant cost of
-    * the CC/k-core/BFS loops once the per-task work is sized right),
-    * and the probe aggregates here are over exactly the table the round
-    * just computed, so riding the checkpoint job is free.
+  /** Where a [[fixpoint]] loop stopped: its last table, how many steps
+    * ran (the round that detected the fixpoint included), and whether it
+    * stopped at a fixpoint rather than at the round cap. */
+  final case class Loop(table: DataFrame, rounds: Int, converged: Boolean)
+
+  /** The one convergence loop: materialize `init`, then `step(prev)`
+    * round after round, each through its own checkpoint job with
+    * `count(1) +: signature` observed on it. Stops at a fixpoint — an
+    * empty table (every caller's step maps empty to empty) or a signature row
+    * equal to the previous round's, decimals by value — or after
+    * `maxRounds` steps with `converged = false`. The signature must
+    * change whenever the table does; each caller's scaladoc argues why
+    * its one does.
+    *
+    * The probe rides each round's checkpoint job (`Dataset.observe`,
+    * read back from the plan's CollectMetrics node once the eager
+    * checkpoint ran): a probe per round as its own action costs a full
+    * job submission, ~50 ms of driver latency at fixture scale and the
+    * dominant cost of these loops once per-task work is sized right.
     */
-  def materializeObserved(df: DataFrame, exprs: org.apache.spark.sql.Column*)
-      : (DataFrame, org.apache.spark.sql.Row) = {
+  def fixpoint(init: DataFrame, maxRounds: Int, signature: Column*)
+              (step: DataFrame => DataFrame): Loop = {
+    val probe = count(lit(1)).as("__rows") +: signature
+    def same(a: Row, b: Row): Boolean = (0 until a.length).forall { i =>
+      (a.get(i), b.get(i)) match {
+        // compareTo, not equals: BigDecimal.equals is scale-sensitive
+        case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y) == 0
+        case (x, y) => x == y
+      }
+    }
+    @annotation.tailrec
+    def go(table: DataFrame, sig: Row, rounds: Int): Loop =
+      if (sig.getLong(0) == 0L) Loop(table, rounds, converged = true)
+      else if (rounds >= maxRounds) Loop(table, rounds, converged = false)
+      else {
+        val (next, s) = materializeObserved(step(table), probe)
+        if (same(s, sig)) Loop(next, rounds + 1, converged = true) else go(next, s, rounds + 1)
+      }
+    val (t0, s0) = materializeObserved(init, probe)
+    go(t0, s0, 0)
+  }
+
+  /** The graph loops' prologue: checkpoint `edges` with its row count
+    * observed on the same job, size the loop's shuffles to the graph
+    * ([[graft.Sizing.LoopEdges]] per partition — the dup-pair graph is
+    * orders of magnitude smaller than the corpus, and 32-partition
+    * shuffles over a few hundred edges made the CC loop ~5x slower than
+    * the data justifies), and run `body(checkpointed edges, width)`
+    * under [[withTinyLoopConf]]. */
+  def onGraph[T](edges: DataFrame)(body: (DataFrame, Int) => T): T = {
+    val (cp, n) = materializeObserved(edges, Seq(count(lit(1)).as("n")))
+    val parts = graft.Sizing.width(cp.sparkSession, n.getLong(0), graft.Sizing.LoopEdges)
+    withTinyLoopConf(cp.sparkSession, parts)(body(cp, parts))
+  }
+
+  /** [[materialize]] that also evaluates the aggregate `exprs` over the
+    * materialized rows inside the SAME job. */
+  private def materializeObserved(df: DataFrame, exprs: Seq[Column]): (DataFrame, Row) = {
     val obs = df.observe("graft_probe", exprs.head, exprs.tail: _*)
     val cp = obs.localCheckpoint(eager = true, storageLevel = CheckpointLevel)
-    val row = obs.queryExecution.observedMetrics("graft_probe")
-    (wrapCheckpoint(cp), row)
+    (wrapCheckpoint(cp), obs.queryExecution.observedMetrics("graft_probe"))
   }
 
   /** Run `body` (an iterative loop over a SMALL graph/table) with AQE
@@ -73,8 +118,8 @@ object Iterate {
     * only where the data is too small for those to matter.
     * The toggles are session-global, scoped by [[graft.Sessions.withConf]].
     */
-  def withTinyLoopConf[T](spark: org.apache.spark.sql.SparkSession, parts: Int)
-                         (body: => T): T =
+  private def withTinyLoopConf[T](spark: org.apache.spark.sql.SparkSession, parts: Int)
+                                 (body: => T): T =
     if (parts >= graft.Sizing.cores(spark)) body
     else graft.Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> parts.toString)(body)

@@ -713,12 +713,12 @@ object Similarity {
     * v26 flagged, not to the corpus (spec'd: untouched partitions stay
     * byte-identical on disk).
     *
-    * Mechanics are stock Spark: dynamic partition overwrite
-    * (`partitionOverwriteMode=dynamic`) replaces exactly the `cell=`
-    * partitions present in the written rows; an affected cell whose
-    * membership drops to ZERO writes no partition, so its stale
-    * directory is deleted explicitly (the one case dynamic overwrite
-    * can't express). The affected-cell list is an O(|cells|) driver
+    * Mechanics are stock Spark: dynamic partition overwrite (the
+    * writer's own `partitionOverwriteMode=dynamic` option, no session
+    * conf) replaces exactly the `cell=` partitions present in the
+    * written rows; an affected cell whose membership drops to ZERO
+    * writes no partition, so its stale directory is deleted explicitly
+    * (the one case dynamic overwrite can't express). The affected-cell list is an O(|cells|) driver
     * pull — the same coordination class as [[ivfTopKFromLayout]]'s
     * probed-cell list. Returns the per-affected-cell rewrite report
     * (n_rows = 0 marks a deleted partition).
@@ -740,8 +740,8 @@ object Similarity {
       val rows = all.join(
           mv.select(col(idCol), col("ca").as("cell")), Seq(idCol))
         .filter(col("cell").isin(affected.map(Long.box).toIndexedSeq: _*))
-      graft.Sessions.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic")(
-        rows.write.mode(org.apache.spark.sql.SaveMode.Overwrite).partitionBy("cell").parquet(path))
+      rows.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic").partitionBy("cell").parquet(path)
       rows.groupBy("cell").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }

@@ -465,20 +465,19 @@ object TextStats {
     * CONSTANT topN rows (TakeOrderedAndProject — per-partition heads,
     * no global sort), with every Σ under the [[Num.exactAvg]] decimal
     * discipline and the closed-form slope (n·Σxy − Σx·Σy)/(n·Σx² −
-    * Σx·Σx) as one fixed-shape double expression. The tiny row_number
-    * window ranks topN rows, not the corpus.
+    * Σx·Σx) as one fixed-shape double expression. The rank is a
+    * [[Prefix]] row count over the topN rows (tok is unique, so the
+    * order is tie-free).
     */
   def zipfReport(docs: DataFrame, topN: Int = 100,
                  textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = docs.filter(col(textCol).isNotNull)
       .select(explode(filter(split(lower(col(textCol)), "\\s+"), t => t =!= "")).as("tok"))
     val counts = toks.groupBy("tok").agg(count(lit(1)).as("c"))
     val totals = counts.agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("n_vocab"))
-    val top = counts.orderBy(col("c").desc, col("tok")).limit(topN)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("c").desc, col("tok"))).cast("long"))
-    val pts = top.select(log(col("rank").cast("double")).as("x"),
+    val byFreq = Seq(col("c").desc, col("tok"))
+    val top = Prefix.sums(counts.orderBy(byFreq: _*).limit(topN), Nil, byFreq, "rows" -> lit(1L))
+    val pts = top.select(log(col("rows_cum").cast("double")).as("x"),
       log(col("c").cast("double")).as("y"))
     val sums = pts.agg(count(lit(1)).cast("double").as("n"),
       Num.exactSum(col("x")).as("sx"), Num.exactSum(col("y")).as("sy"),
@@ -636,30 +635,26 @@ object TextStats {
     * Σ alloc_tokens = min(budget, maxEpochs·Σ tokens) by construction.
     *
     * Scale: per-source tokens + quality are one source-keyed aggregate
-    * (map-side partials); the ranking window runs over SOURCE rows —
-    * crawl-catalog-sized, thousands at most, the documented exception
-    * to running totals by [[Prefix]].
+    * (map-side partials); the rank and the exclusive running cap are
+    * [[Prefix]] sums over SOURCE rows (source is the group key, so the
+    * order is tie-free).
     */
   def epochPlan(docs: DataFrame, budget: Long, maxEpochs: Long = 4L,
                 sourceCol: String = "source", textCol: String = "text"): DataFrame = {
     require(budget >= 0L && maxEpochs >= 1L, "need budget >= 0 and maxEpochs >= 1")
-    import org.apache.spark.sql.expressions.Window
     val scored = qualityScore(docs.filter(col(textCol).isNotNull), textCol)
     val per = scored
       .groupBy(col(sourceCol))
       .agg(sum(col("n_tokens")).as("n_tokens"),
            Num.roundTo(percentile(col("quality_score"), lit(0.5)), 6).as("median_quality"))
       .filter(col("n_tokens") > 0)
-    val w = Window.orderBy(col("median_quality").desc, col(sourceCol))
-    val ranked = per
-      .withColumn("quality_rank", row_number().over(w).cast("long"))
-      .withColumn("cum_before", coalesce(
-        sum(col("n_tokens") * maxEpochs).over(
-          w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    ranked
-      .withColumn("alloc_tokens",
-        greatest(lit(0L), least(lit(budget) - col("cum_before"),
-          col("n_tokens") * maxEpochs)))
+    val cap = col("n_tokens") * maxEpochs
+    Prefix.sums(per, Nil, Seq(col("median_quality").desc, col(sourceCol)),
+        "rows" -> lit(1L), "cap" -> cap)
+      // rows_cum is never null; the coalesce keeps quality_rank non-nullable
+      .withColumn("quality_rank", coalesce(col("rows_cum"), lit(0L)))
+      .withColumn("cum_before", col("cap_cum") - cap)
+      .withColumn("alloc_tokens", greatest(lit(0L), least(lit(budget) - col("cum_before"), cap)))
       .withColumn("epochs_full", expr("alloc_tokens div n_tokens"))
       .withColumn("rem_tokens", col("alloc_tokens") % col("n_tokens"))
       .select(col(sourceCol), col("quality_rank"), col("median_quality"),
@@ -1347,9 +1342,10 @@ object TextStats {
     *
     * Scale shape: the corpus collapses to the term-frequency table in one
     * shuffle (map-side partials soak Zipf's head); the top-max(K) slice
-    * is a TakeOrdered (no global sort — K is bounded by the caller), and
-    * the per-K sums run over ≤ max(K) rows crossed with the (tiny) K
-    * list. The total-token count is a one-row aggregate that broadcasts.
+    * is a TakeOrdered (no global sort — K is bounded by the caller),
+    * ranked by a [[Prefix]] row count (term is unique, so the order is
+    * tie-free), and the per-K sums run over ≤ max(K) rows crossed with
+    * the (tiny) K list. The total-token count is a one-row aggregate that broadcasts.
     */
   def vocabCoverage(docs: DataFrame, ks: Seq[Int] = Seq(10, 100, 1000),
                     textCol: String = "text"): DataFrame = {
@@ -1361,12 +1357,10 @@ object TextStats {
       .filter(col("term") =!= "")
       .groupBy("term").agg(count(lit(1)).as("n"))
     val total = freq.agg(sum(col("n")).as("total_tokens"))
-    val top = freq.orderBy(col("n").desc, col("term")).limit(ks.max)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("n").desc, col("term"))))
+    val byFreq = Seq(col("n").desc, col("term"))
+    val top = Prefix.sums(freq.orderBy(byFreq: _*).limit(ks.max), Nil, byFreq, "rows" -> lit(1L))
     top.crossJoin(broadcast(ks.toDF("k")))
-      .filter(col("rank") <= col("k"))
+      .filter(col("rows_cum") <= col("k"))
       .groupBy(col("k").cast("long").as("k"))
       .agg(count(lit(1)).as("n_terms"), sum(col("n")).as("covered_tokens"))
       .crossJoin(broadcast(total))

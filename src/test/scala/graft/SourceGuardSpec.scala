@@ -9,7 +9,8 @@ import scala.util.Using
   * fixture dirs are named only by [[graft.ops.Fixtures]], sessions are
   * built only by [[Sessions]], leaked blocks are swept only by the
   * run loop [[Harness.each]], running totals in a global order are
-  * computed only by [[graft.ops.Prefix]], and the serving table is found
+  * computed only by [[graft.ops.Prefix]], loop checkpoints and widths are
+  * chosen only by [[graft.ops.Iterate]], and the serving table is found
   * only by [[graft.serve.Queries]]. */
 class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -71,6 +72,17 @@ class SourceGuardSpec extends org.scalatest.funsuite.AnyFunSuite {
     val inPrefix = (p: Path, _: IndexedSeq[String], _: Int) => p.endsWith("graft/ops/Prefix.scala")
     val bad = hits("spark_partition_id", inPrefix) ++ hits("orderBy(\"pid\")", inPrefix)
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  test("loop plumbing only in Iterate; a global-order window only in Prefix") {
+    val inIterate = (p: Path, _: IndexedSeq[String], _: Int) => p.endsWith("graft/ops/Iterate.scala")
+    val bad = Seq("materializeObserved(", "withTinyLoopConf(", "Sizing.LoopEdges").flatMap(hits(_, inIterate))
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+    // whole files, not lines: a call may break after `Window`
+    val window = """Window\s*\.\s*orderBy\(""".r
+    val windows = sources.collect { case (p, lines) if !p.endsWith("graft/ops/Prefix.scala") &&
+      window.findFirstIn(lines.mkString("\n")).isDefined => p.toString }
+    assert(windows.isEmpty, windows.mkString("\n", "\n", ""))
   }
 
   test("serve/ reads a serving table only in Queries.resolve; no Graft facade object") {

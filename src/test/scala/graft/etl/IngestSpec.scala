@@ -54,23 +54,13 @@ class IngestSpec extends SparkSpec {
     intercept[Ingest.IngestException] { Ingest.readCsvDir(spark, d.toString) }
   }
 
-  test("S2 fullValidation: a deep malformed row skips that file, keeps the rest") {
+  test("S2: a deep malformed row skips that file, keeps the rest") {
     val d = tmpDir("s2deep")
     write(d, "good.csv", "x,y\n1,a\n2,b\n")
     // row 2 has extra columns — parses fine at row 1, fails deeper (FAILFAST)
     write(d, "bad.csv", "x,y\n1,a\n2,b,EXTRA,COLS\n3,c\n")
-    val df = Ingest.readCsvDir(spark, d.toString, fullValidation = true)
+    val df = Ingest.readCsvDir(spark, d.toString)
     assert(df.count() == 2) // only good.csv survived
-  }
-
-  test("S2 fullValidation with a given schema: a value that does not parse skips that file") {
-    import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
-    val d = tmpDir("s2schema")
-    write(d, "good.csv", "x,y\n1,a\n2,b\n")
-    write(d, "bad.csv", "x,y\n3,c\nnot-a-number,d\n")
-    val schema = new StructType().add("x", IntegerType).add("y", StringType)
-    val df = Ingest.readCsvDir(spark, d.toString, schema = Some(schema), fullValidation = true)
-    assert(df.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
   }
 
   test("U1: union-by-name aligns heterogeneous schemas with null fill") {
@@ -182,14 +172,6 @@ class IngestSpec extends SparkSpec {
     assert(ours.collect().toSeq == sparks.collect().toSeq)
     assert(ours.schema.map(_.dataType.simpleString) ==
       Seq("int", "bigint", "double", "boolean", "decimal(20,0)", "date", "timestamp", "string", "string", "string"))
-  }
-
-  test("S2 fast path: one multi-file scan reads all CSVs in dir") {
-    val d = tmpDir("s2fast")
-    write(d, "a.csv", "id,name\n1,x\n")
-    write(d, "b.csv", "id,name\n2,y\n")
-    val df = Ingest.readCsvDirFast(spark, d.toString)
-    assert(df.count() == 2)
   }
 
   test("S6: file listing with sizes; missing dir is empty not error") {

@@ -167,9 +167,9 @@ class GraphSpec extends SparkSpec {
     // (the registered query's k = 80 does the same shape at sf0.01);
     // k = 70 collapses the whole uniform graph — the all-or-nothing
     // cascade — which the last assert also pins
-    val converged = Graph.kCoreConvergenceRound(spark, sfDir, k = 65L)
-    assert(converged >= 0 && converged < 10,
-      s"fixture must converge strictly inside the 10-round bound, got $converged")
+    val loop = Graph.kCoreLoop(spark, sfDir, k = 65L, rounds = 10, maxPart = 20000L)
+    assert(loop.converged && loop.rounds < 10,
+      s"fixture must converge strictly inside the 10-round bound, got ${loop.rounds} rounds")
     val core = Graph.partKCore(spark, sfDir, k = 65L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core.nonEmpty, "65-core empty - pick a smaller k for this fixture")
