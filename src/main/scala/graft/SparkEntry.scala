@@ -174,7 +174,8 @@ object SparkEntry {
         col("l_orderkey"), col("l_linenumber"),
         call_function("zorder64", col("l_partkey").cast("long"),
           col("l_suppkey").cast("long")).as("zval"))
-        .orderBy("l_orderkey", "l_linenumber")
+        // (l_orderkey, l_linenumber) repeats in the testdata; zval breaks its ties
+        .orderBy("l_orderkey", "l_linenumber", "zval")
     }),
     "k2_upsert" -> ((s, d) => {
       val base = Tables.orders(s, d)
@@ -4025,7 +4026,7 @@ object SparkEntry {
     s"""SELECT l_orderkey, l_linenumber,
        |  (${spread("CAST(l_partkey AS BIGINT)")} |
        |   (${spread("CAST(l_suppkey AS BIGINT)")} << 1)) AS zval
-       |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin
+       |FROM lineitem ORDER BY l_orderkey, l_linenumber, zval""".stripMargin
   }
 
   /** Wrapping 64-bit arithmetic as DuckDB SQL — the toolkit that replays

@@ -5,13 +5,14 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.nio.file.{Files, Paths}
-import scala.util.Using
+import scala.util.{Try, Using}
 
 /** The serving queries of the reference's `api.py`: preview (L1) and
   * stats (A1+A3) of the table a pipeline run wrote, found by table name or
@@ -31,12 +32,41 @@ object Queries {
   /** The serving table, found as api.py:174-187 finds it: a catalog table
     * or view named `table` first (managed-table loads), else the parquet
     * directory at `dbPath` (the analog of the reference's SQLite file).
-    * Neither → [[TableNotFound]], the API's 404. Reading the directory's
-    * schema is a Spark job of its own. */
+    * Neither → [[TableNotFound]], the API's 404. The directory is read
+    * under the schema [[footerSchema]] finds, so that no schema-read job
+    * runs; where it finds none, Spark reads the schema, which is a job. */
   private def resolve(spark: SparkSession, table: String, dbPath: String): DataFrame =
     if (spark.catalog.tableExists(table)) spark.table(table)
-    else if (Files.exists(Paths.get(dbPath))) spark.read.parquet(dbPath)
+    else if (Files.exists(Paths.get(dbPath)))
+      footerSchema(spark, dbPath).fold(spark.read.parquet(dbPath))(spark.read.schema(_).parquet(dbPath))
     else throw new TableNotFound(dbPath)
+
+  /** The schema Spark would infer for the parquet directory `dir`, read
+    * from one footer on the driver, when `dir` is what `Pipeline.run`
+    * writes: a plain directory of 1 to
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` data files
+    * (names starting with `_` or `.` are not data, as for Spark) and no
+    * subdirectory that could hold partitions, whose first file's footer
+    * holds the schema Spark wrote it with. Spark's own read of that
+    * schema (`mergeSchemasInParallel`) is a job even for one footer, and
+    * it waits for a task slot behind a pipeline run. Anything else is
+    * None, and Spark reads the schema itself. */
+  private[serve] def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val state = spark.asInstanceOf[ClassicSession].sessionState
+    val conf = state.newHadoopConf()
+    val path = new Path(dir)
+    val entries = path.getFileSystem(conf).listStatus(path).toSeq
+      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+    if (entries.isEmpty || entries.exists(_.isDirectory) ||
+        entries.size > state.conf.parallelPartitionDiscoveryThreshold) None
+    else {
+      val first = entries.minBy(_.getPath.getName).getPath
+      val footer = Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(first, conf)))(_.getFileMetaData)
+      Option(footer.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .flatMap(json => Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+    }
+  }
 
   /** L1: SELECT * FROM t LIMIT n (api.py:189-198), default 10.
     *

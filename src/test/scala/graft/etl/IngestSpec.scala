@@ -88,23 +88,22 @@ class IngestSpec extends SparkSpec {
   }
 
   test("S2: dtypes are inferred per file, then widened by the union") {
-    import org.apache.spark.sql.types.{DoubleType, LongType}
+    import org.apache.spark.sql.types.{DoubleType, StringType}
     val num = tmpDir("s2num")
     write(num, "a.csv", "x\n1\n2\n")
     write(num, "b.csv", "x\n1.5\n2.25\n")
     val dn = Ingest.readCsvDir(spark, num.toString)
     assert(dn.schema("x").dataType == DoubleType)
     assert(dn.collect().map(_.getDouble(0)).sorted.toSeq == Seq(1.0, 1.5, 2.0, 2.25))
-    // Characterization: ANSI union widening takes int ∪ string to bigint
-    // (not string, as pd.concat's object column would), so the words fail
-    // their cast when the frame is read.
+    // ints in one file and words in another read as string in both, as
+    // pd.concat's object column holds them (ANSI union widening would
+    // take int ∪ string to bigint and fail on the words)
     val mixed = tmpDir("s2mixed")
     write(mixed, "a.csv", "x\n1\n2\n")
     write(mixed, "b.csv", "x\nfoo\nbar\n")
     val dm = Ingest.readCsvDir(spark, mixed.toString)
-    assert(dm.schema("x").dataType == LongType)
-    val e = intercept[Exception](dm.collect())
-    assert(e.getMessage.contains("CAST_INVALID_INPUT"), e.getMessage)
+    assert(dm.schema("x").dataType == StringType)
+    assert(dm.collect().map(_.getString(0)).toSeq == Seq("1", "2", "foo", "bar"))
   }
 
   test("S2: a header-only file adds its columns and no rows") {
@@ -174,6 +173,66 @@ class IngestSpec extends SparkSpec {
       Seq("int", "bigint", "double", "boolean", "decimal(20,0)", "date", "timestamp", "string", "string", "string"))
   }
 
+  /** `body` with every file of a scan packed into one scan partition. */
+  private def oneScanPartition[T](body: => T): T =
+    graft.Sessions.withConf(spark, "spark.sql.files.openCostInBytes" -> "1",
+      "spark.sql.files.maxPartitionBytes" -> "1g", "spark.sql.files.minPartitionNum" -> "1")(body)
+
+  test("S2: files that share one scan partition keep their own dtypes, checks and neighbours") {
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, TimestampType}
+    val d = tmpDir("s2shared")
+    write(d, "a.csv", "k,i\n1,10\n2,20\n")
+    write(d, "b.csv", "k,d\n3,1.5\n4,2.5\n")
+    write(d, "bad.csv", "k,i\n7,70\n8,80,EXTRA\n9,90\n")
+    write(d, "c.csv", "k,w\n5,foo\n6,bar\n")
+    write(d, "t.csv", "k,t\n10,2024-01-31 10:11:12\n")
+    oneScanPartition {
+      assert(spark.read.text(d.toString).rdd.getNumPartitions == 1)
+      val df = Ingest.readCsvDir(spark, d.toString)
+      assert(df.columns.toSeq == Seq("k", "i", "d", "w", "t"))
+      assert(df.schema.map(_.dataType) == Seq(IntegerType, IntegerType, DoubleType, StringType, TimestampType))
+      assert(df.collect().map(_.getInt(0)).toSeq == Seq(1, 2, 3, 4, 5, 6, 10))
+      val e = intercept[Ingest.IngestException](Ingest.readCsvDir(spark, d.toString, strict = true))
+      assert(e.getMessage.contains("bad.csv"), e.getMessage)
+    }
+  }
+
+  test("S2: names with a space, % and #, and a hidden file, each get their own header's schema") {
+    import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, StringType}
+    val d = tmpDir("s2names")
+    write(d, "a b.csv", "k,sp\n1,10\n")
+    write(d, "p%20q.csv", "k,pct\n2,0.5\n")
+    write(d, "h#1.csv", "k,hash\n3,x\n")
+    write(d, ".hidden.csv", "k,hid\n4,true\n")
+    for (packed <- Seq(false, true)) {
+      val df = if (packed) oneScanPartition(Ingest.readCsvDir(spark, d.toString, strict = true))
+               else Ingest.readCsvDir(spark, d.toString, strict = true)
+      assert(df.schema.map(f => f.name -> f.dataType) == Seq("k" -> IntegerType, "hid" -> BooleanType,
+        "sp" -> IntegerType, "hash" -> StringType, "pct" -> DoubleType), packed)
+      assert(df.collect().map(_.getInt(0)).toSeq == Seq(4, 1, 3, 2), packed)
+    }
+  }
+
+  test("S2: a file whose scan fails is skipped, or named in strict mode; its scan neighbours still load") {
+    import org.apache.spark.sql.types.{DoubleType, IntegerType}
+    val d = tmpDir("s2scanfail")
+    write(d, "a.csv", "k,i\n1,10\n")
+    write(d, "broken.csv", "k,x\n2,20\n")
+    write(d, "c.csv", "k,d\n3,1.5\n")
+    val files = Seq("a.csv", "broken.csv", "c.csv").map(n => s"${FailingScanFs.Scheme}://${d.resolve(n)}")
+    graft.Sessions.withConf(spark, s"fs.${FailingScanFs.Scheme}.impl" -> classOf[FailingScanFs].getName,
+                            s"fs.${FailingScanFs.Scheme}.impl.disable.cache" -> "true") {
+      oneScanPartition {
+        assert(spark.read.text(files: _*).rdd.getNumPartitions == 1)
+        val kept = Ingest.readFiles(spark, files, strict = false)
+        assert(kept.map(_.schema.map(_.dataType)) == Seq(Seq(IntegerType, IntegerType), Seq(IntegerType, DoubleType)))
+        assert(kept.map(_.collect().map(_.getInt(0)).toSeq) == Seq(Seq(1), Seq(3)))
+        val e = intercept[Ingest.IngestException](Ingest.readFiles(spark, files, strict = true))
+        assert(e.getMessage.contains("broken.csv") && e.getMessage.contains("FAILED_READ_FILE"), e.getMessage)
+      }
+    }
+  }
+
   test("S6: file listing with sizes; missing dir is empty not error") {
     val d = tmpDir("s6")
     write(d, "a.csv", "x" * 10)
@@ -204,4 +263,21 @@ class IngestSpec extends SparkSpec {
 /** Builds the hidden-file shim for `args(0)`, prints its path and exits. */
 object HiddenShimMain {
   def main(args: Array[String]): Unit = println(Ingest.visible(args(0)))
+}
+
+/** The local filesystem under its own scheme, except that a task cannot
+  * open a file whose name starts with "broken": the driver reads its
+  * header, and the scan of it fails. */
+class FailingScanFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataInputStream, Path}
+  override def getUri: java.net.URI = java.net.URI.create(s"${FailingScanFs.Scheme}:///")
+  override def getScheme: String = FailingScanFs.Scheme
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    if (f.getName.startsWith("broken") && org.apache.spark.TaskContext.get() != null)
+      throw new java.io.IOException(s"scan failed: $f")
+    else super.open(f, bufferSize)
+}
+
+object FailingScanFs {
+  val Scheme = "failingscan"
 }

@@ -121,6 +121,35 @@ class LoadPipelineSpec extends SparkSpec {
     assert(eight <= 2, s"$eight jobs")
   }
 
+  test("C1: Pipeline.run's inference job reads all its input files through one scan") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // FileScanRDDs per job of the run, in job order
+    def scansFor(files: Int): Seq[Int] = {
+      val d = tmpDir(s"c1scans$files")
+      val in = Files.createDirectory(d.resolve("in"))
+      for (i <- 0 until files)
+        Files.writeString(in.resolve(f"part$i%02d.csv"), s"id,v\n${2 * i},a\n")
+      val scans = new java.util.concurrent.ConcurrentSkipListMap[Int, Int]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "graft-pipeline"))
+            scans.put(e.jobId, e.stageInfos.flatMap(_.rddInfos).count(_.name == "FileScanRDD"))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try jobsInGroup("graft-pipeline") {
+        Pipeline.run(spark, Pipeline.PipelineConfig(csvPath = in.toString, outputPath = d.resolve("out").toString))
+      } finally spark.sparkContext.removeSparkListener(listener)
+      scans.values.asScala.toSeq
+    }
+    // 40 files: past Spark's discovery threshold (32), where listing them
+    // could be a job of its own
+    for (files <- Seq(3, 8, 40)) {
+      val scans = scansFor(files)
+      assert(scans.headOption.contains(1), s"$files files: FileScanRDDs per job $scans")
+      assert(scans.size <= 2, s"$files files: FileScanRDDs per job $scans")
+    }
+  }
+
   test("C1: a failing write fails the run at once and hands the caller's group back") {
     val d = tmpDir("c1fail")
     Files.writeString(d.resolve("in.csv"), "id,v\n1,a\n")
@@ -157,18 +186,18 @@ class LoadPipelineSpec extends SparkSpec {
     val ragged = Files.writeString(d.resolve("ragged.csv"), "id,v\n3,c\n4,d,EXTRA\n")
     intercept[Ingest.IngestException](run(ragged))
     assert(table == Seq(1, 2))
-    // ints in one file and words in the other: the union widens x to
-    // bigint and the words fail their cast inside the write job
-    val mixed = Files.createDirectory(d.resolve("mixed"))
-    Files.writeString(mixed.resolve("a.csv"), "id,v\n5,e\n")
-    Files.writeString(mixed.resolve("b.csv"), "id,v\nsix,f\n")
-    val e = intercept[Exception](run(mixed))
+    // a good input whose write fails inside its job: the parquet writer
+    // has no lzo codec to compress with
+    val more = Files.writeString(d.resolve("more.csv"), "id,v\n5,e\n")
+    val e = intercept[Exception] {
+      graft.Sessions.withConf(spark, "spark.sql.parquet.compression.codec" -> "lzo")(run(more))
+    }
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(c => String.valueOf(c.getMessage).contains("CAST_INVALID_INPUT")), e.toString)
+      .exists(c => String.valueOf(c.getMessage).contains("LzoCodec")), e.toString)
     assert(table == Seq(1, 2))
     // no staged or replaced copy is left beside the table
     assert(Files.list(d).iterator().asScala.map(_.getFileName.toString).toSeq.sorted ==
-      Seq("good.csv", "mixed", "out", "ragged.csv"))
+      Seq("good.csv", "more.csv", "out", "ragged.csv"))
   }
 
   test("a partitioned replace whose write fails leaves the old rows and no staged copy") {

@@ -51,6 +51,35 @@ class ServeSpec extends SparkSpec {
     assert(Queries.rowCount(spark.read.parquet(flat).filter(col("id") < 10)) == 10)
   }
 
+  test("L1/A1 over a parquet dbPath: stats runs no job, preview one, under Spark's own schema") {
+    import org.apache.spark.sql.functions.col
+    val d = tmpDir("footerschema")
+    Files.writeString(d.resolve("in.csv"), "id,v,day\n1,a,2024-01-31\n2,b,2024-02-01\n")
+    val out = d.resolve("out").toString
+    Pipeline.run(spark, Pipeline.PipelineConfig(csvPath = d.resolve("in.csv").toString, outputPath = out))
+    val sc = spark.sparkContext
+    def jobs(body: => Unit) = jobsInGroup("footer-probe") {
+      sc.setJobGroup("footer-probe", "serve probe")
+      try body finally sc.clearJobGroup()
+    }
+    var stats: Queries.TableStats = null
+    assert(jobs { stats = Queries.stats(spark, "no_such_view", out) } == 0)
+    assert(stats == Queries.TableStats(2, 3, Seq("id", "v", "day"), "no_such_view"))
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    assert(jobs { rows = Queries.preview(spark, "no_such_view", 10, out).collect() } == 1)
+    assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2))
+    // the schema Spark infers, nullability included; a non-nullable column
+    // and a partitioned directory (Spark reads that schema itself)
+    val flat = d.resolve("flat").toString
+    spark.range(0, 10, 1, 2).select(col("id"), (col("id") * 2).as("twice")).write.parquet(flat)
+    val parts = d.resolve("parts").toString
+    spark.range(0, 6, 1, 2).withColumn("k", col("id") % 3).write.partitionBy("k").parquet(parts)
+    assert(Queries.footerSchema(spark, out).isDefined && Queries.footerSchema(spark, flat).isDefined)
+    assert(Queries.footerSchema(spark, parts).isEmpty)
+    for (dir <- Seq(out, flat, parts))
+      assert(Queries.preview(spark, "no_such_view", 1, dir).schema == spark.read.parquet(dir).schema, dir)
+  }
+
   test("M1: unknown table raises TableNotFound (404 shape)") {
     intercept[Queries.TableNotFound] { Queries.preview(spark, "no_such_table") }
   }
